@@ -859,6 +859,9 @@ def _q_kg_comention(spark, sf_dir):
     return comention_edges(m)
 
 
+_PRUNED_STAGING: set = set()
+
+
 def _prune_stale_staging(spark, path_prefix: str, table_prefixes=()) -> None:
     """Best-effort cleanup of per-PID staging debris (r6 ADVICE fix):
     repeated bench/driver_sim runs accumulate ``<prefix>*_p<pid>``
@@ -866,11 +869,19 @@ def _prune_stale_staging(spark, path_prefix: str, table_prefixes=()) -> None:
     longer exist.  Liveness check via /proc: a LIVE concurrent process
     is never touched (PID reuse only makes a stale dir look live —
     cleanup is skipped, never misdirected).  Errors are swallowed: the
-    prune is hygiene, not correctness."""
+    prune is hygiene, not correctness.  Runs once per process and
+    prefix: debris of dead PIDs cannot reappear while this process
+    lives, and a glob + catalog listing inside every timed staging
+    call is pure overhead."""
     import glob as _glob
     import os as _os
     import re as _re
     import shutil as _shutil
+
+    key = (path_prefix, tuple(table_prefixes))
+    if key in _PRUNED_STAGING:
+        return
+    _PRUNED_STAGING.add(key)
 
     def _dead(name: str) -> bool:
         m = _re.search(r"_p(\d+)$", name)

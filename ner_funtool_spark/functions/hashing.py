@@ -16,11 +16,14 @@ integer hash is our scale-path equivalent for minhash / LSH / salting.
 from __future__ import annotations
 
 import hashlib
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:  # pandas loads only where a function needs it
+    import pandas as pd
 
 MERSENNE_P = (1 << 31) - 1  # modulus for minhash permutations
 

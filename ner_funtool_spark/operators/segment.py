@@ -5,7 +5,9 @@ The reference groups blank-line-delimited chars into sentences
 punctuation for online prediction (predict_lstm_crf.py:104).  Our
 source payload is code: ``content`` splits into lines, each line one
 "sentence".  All JVM-side (split + posexplode) — Catalyst prunes and
-pushes the surrounding filters.
+pushes the surrounding filters.  The flagship plan does not call
+``segment_lines``: the tagging stage splits file rows itself
+(operators/tagger.split_lines, pinned equal to this function).
 """
 
 from __future__ import annotations

@@ -1,10 +1,19 @@
-"""Fused Arrow-batch tagging stage: tokenize -> emissions -> Viterbi -> mentions.
+"""Fused Arrow-batch tagging stage: segment -> tokenize -> emissions ->
+decode -> mentions.
 
 This is the engine's analog of the reference's predict loop
 (predict_bert_crf.py:141-173: per-sentence convert_single_example ->
 sess.run -> strip -> extract), re-expressed as ONE ``mapInArrow``
 stage over whole Arrow record batches — the north_star's explicit
-replacement for the row-at-a-time serving scripts.  Per-batch dynamic
+replacement for the row-at-a-time serving scripts.
+
+The stage takes FILE rows (:func:`tag_file_mentions`): it splits the
+content into lines in Arrow C++, so a file's columns cross into Python
+once instead of once per line, and only the columns the caller names
+come back.  Per chunk of at most ``maxRecordsPerBatch`` lines it
+dictionary-encodes the lines, tokenizes once per distinct line, then
+decodes and extracts per line.  :func:`tag_mentions` is the same stage
+on line rows, with segmentation skipped.  Per-chunk dynamic
 padding reproduces pad_sequences' batch-max semantics
 (data_preprocess.py:228-242, the shadowed ``max_len`` quirk).
 
@@ -25,12 +34,10 @@ Two decoders share the Viterbi kernel (functions/crf.py):
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import CODE_ETYPES, DOC_ETYPES, DOC_OBJ_WORDS, DOC_OP_WORDS, SEED
 from ..functions.crf import (
@@ -43,6 +50,9 @@ from ..functions.model import (
     SeededBertBiLSTM,
     SeededBiLSTM,
 )
+
+if TYPE_CHECKING:  # pandas loads only where a function needs it
+    import pandas as pd
 
 
 def _build_encoder(mode: str, n_types: int, seed: int,
@@ -74,6 +84,7 @@ KW_ALL = KW_FUNC | KW_CLASS | KW_IMPORT | {"package"}
 
 MAX_LEN = 64
 NEURAL_VOCAB = 4096
+NEURAL_MODES = ("neural", "cascade", "albert")
 
 MENTION_COLS = "begin int, end int, text string, etype string, score float, model string"
 
@@ -90,6 +101,8 @@ def tokenize_batch(sentences: pd.Series, max_len: int = MAX_LEN):
     (run_bert_crf.py:378-381).  Duplicate sentences (very common in
     code corpora) are tokenized once and gathered back by inverse index.
     """
+    import pandas as pd
+
     codes, uniques = pd.factorize(sentences.astype(str))
     utoks, ubegin, uend, ulens = _tokenize_unique(list(uniques), max_len)
     return utoks[codes], ubegin[codes], uend[codes], ulens[codes]
@@ -107,6 +120,8 @@ def _token_categories(toks: np.ndarray) -> np.ndarray:
     """[B,S] object tokens -> int category matrix, via hash-factorize:
     string work happens once per unique token, the matrix ops are int.
     """
+    import pandas as pd
+
     codes, uniques = pd.factorize(toks.ravel())
     u = pd.Series(uniques, dtype=object)
     ucat = np.zeros(len(u), dtype=np.int8)
@@ -172,6 +187,8 @@ def _code_classes_from_categories(K: np.ndarray,
 def doc_token_classes(toks: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     """Word-class features for the `documents` word-soup domain:
     0=O, 1=op, 2=obj.  Consecutive same-class runs form entities."""
+    import pandas as pd
+
     B, S = toks.shape
     codes, uniques = pd.factorize(toks.ravel())
     u = pd.Series(uniques, dtype=object)
@@ -254,6 +271,8 @@ def _ids_from_tokens(toks: np.ndarray, vocab_size: int = NEURAL_VOCAB) -> np.nda
     no driver-side dictionary, deterministic on any executor.  The
     token->id map is pure, so it is memoized across Arrow batches for
     the lifetime of the worker (bounded)."""
+    import pandas as pd
+
     cache = _ID_CACHES.setdefault(vocab_size, {})
     codes, uniq = pd.factorize(toks.ravel())
     uids = np.empty(len(uniq), dtype=np.int64)
@@ -267,6 +286,12 @@ def _ids_from_tokens(toks: np.ndarray, vocab_size: int = NEURAL_VOCAB) -> np.nda
     return uids[codes].reshape(toks.shape)
 
 
+# line-level columns the file-row stage derives, with their Spark types
+# (segment_lines' posexplode position is an int)
+LINE_COLS = {"sent_id": "int", "sentence": "string"}
+MENTION_NAMES = [f.split()[0] for f in MENTION_COLS.split(", ")]
+
+
 def tag_mentions(df: DataFrame, *, domain: str = "code", mode: str = "rules",
                  sentence_col: str = "sentence", max_len: int = MAX_LEN,
                  seed: int = SEED,
@@ -274,98 +299,196 @@ def tag_mentions(df: DataFrame, *, domain: str = "code", mode: str = "rules",
     """sentences -> mention rows; all pass-through columns preserved.
 
     Output adds (begin, end, text, etype, score, model); char offsets
-    into the sentence, end exclusive.
+    into the sentence, end exclusive.  This is the line-row entry of
+    the stage :func:`tag_file_mentions` runs, with segmentation skipped.
+    """
+    return _mention_stage(df, sentence_col, list(df.columns), False,
+                          domain, mode, max_len, seed, encoder_opts)
 
-    Implemented over ``mapInArrow``: pass-through columns never
-    materialize as python objects — duplicate sentences are
-    dictionary-encoded in Arrow C++, only unique sentences cross into
-    python for tokenization, and mention rows are gathered with Arrow
-    ``take``.  Cuts worker time roughly in half vs the pandas path
-    (measured via executorRunTime - executorCpuTime).
+
+def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
+                      domain: str = "code", mode: str = "rules",
+                      encoder_opts: dict | None = None) -> DataFrame:
+    """file rows -> mention rows, with line segmentation fused into the
+    Arrow stage: equal to ``tag_mentions(segment_lines(df, keep))``.
+
+    ``keep`` lists the output's pass-through columns in order: columns
+    of ``df`` other than ``content``, plus ``sent_id`` and ``sentence``
+    (segment_lines' columns).  The default is segment_lines' output.
+    Only the named file columns and the content cross into Python, once
+    per file, not once per line.
+    """
+    if keep is None:
+        keep = [c for c in df.columns if c != "content"] + list(LINE_COLS)
+    file_cols = [c for c in keep if c not in LINE_COLS]
+    return _mention_stage(df.select(*file_cols, "content"), "content", keep,
+                          True, domain, mode, MAX_LEN, SEED, encoder_opts)
+
+
+def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
+                   segment: bool, domain: str, mode: str, max_len: int,
+                   seed: int, encoder_opts: dict | None) -> DataFrame:
+    """The one ``mapInArrow`` stage behind both entries.
+
+    Per Arrow batch: (if ``segment``) split each file's text into lines
+    in Arrow C++; then, per chunk of at most ``maxRecordsPerBatch``
+    lines, tag the lines (:class:`_LineKernel`) and gather the
+    ``keep`` columns onto mention rows with Arrow ``take``, one output
+    batch per chunk.  Pass-through columns never materialize as Python
+    objects.
     """
     import pyarrow as pa
 
-    class_fn, etypes = CLASS_FNS[domain]
-    n_types = len(etypes)
-    pass_cols = list(df.columns)
-    sent_idx = pass_cols.index(sentence_col)
-    out_schema = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in pass_cols)
-    out_schema += ", " + MENTION_COLS
-    model_name = f"{mode}_{domain}_v1"
-    etypes_arr = list(etypes)
+    if mode != "rules" and mode not in NEURAL_MODES:
+        raise ValueError(mode)
+    types = {f.name: f.dataType.simpleString() for f in df.schema}
+    if segment:
+        types.update(LINE_COLS)
+    out_schema = ", ".join(f"`{c}` {types[c]}" for c in keep) + ", " + MENTION_COLS
+    # a file batch holds ~18x more lines than a line batch; chunking
+    # them bounds the [U, S] matrices and each output batch as on the
+    # line path, and a non-ASCII line sends only its own chunk down the
+    # regex path.  Zero or negative means no limit, as in Spark.
+    chunk = int(df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    kernel = _LineKernel(domain, mode, max_len, seed, encoder_opts)
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from ..functions.fast_tokenize import padded_spans
-
-        neural = None
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            enc = pa.compute.dictionary_encode(rb.column(sent_idx))
-            codes = enc.indices.to_numpy(zero_copy_only=False)
-            fast = padded_spans(enc.dictionary, max_len) if mode == "rules" else None
-            if fast is not None:
-                # byte path: token spans, classes and mention texts all
-                # come from the Arrow buffer — zero Python strings per
-                # token (the 8->32 scaling lever, BENCH r1 analysis)
-                data, offs, utb, ute, ulens, tstart, tlen = fast
-                ucls = _classes_bytes(domain, data, tstart, tlen, ulens)
-                cls, tb, te, lens = ucls[codes], utb[codes], ute[codes], ulens[codes]
-                # closed-form maximal-run BMES decode — provably equal
-                # to the fused class-indicator Viterbi (crf.py r6 note)
-                # with the whole [B,S]xV DP removed (the measured 8->32
-                # residual scaling cost, BENCH/BASELINE.md)
-                tags = bmes_tags_from_classes(cls, lens)
-                uniques = None
+            text = rb.column(text_col)
+            if segment:
+                lines, parent, sent_id = split_lines(text)
             else:
-                uniques = enc.dictionary.to_pylist()
-                utoks, utb, ute, ulens = _tokenize_unique(uniques, max_len)
-                toks, tb, te, lens = utoks[codes], utb[codes], ute[codes], ulens[codes]
-                if mode == "rules":
-                    cls = class_fn(toks, lens)
-                    tags = bmes_tags_from_classes(cls, lens)
-                elif mode in ("neural", "cascade", "albert"):
-                    if neural is None:
-                        neural = _build_encoder(mode, n_types, seed,
-                                                encoder_opts)
-                    ids = _ids_from_tokens(
-                        toks,
-                        (encoder_opts or {}).get("vocab_size", NEURAL_VOCAB),
-                    )
-                    tags = _neural_decode(
-                        neural, ids, lens, n_types,
-                        "neural" if mode == "albert" else mode,
-                    )
-                else:
-                    raise ValueError(mode)
-            m = extract_mentions_arrays(tags, tb, te, lens)
-            if len(m["row"]) == 0:
-                continue
-            rows_idx = pa.array(m["row"])
-            if uniques is None:
-                base = offs[codes[m["row"]]]
-                texts = [
-                    data[s:e].tobytes().decode("ascii")
-                    for s, e in zip(base + m["begin"], base + m["end"])
-                ]
-            else:
-                sent_lookup = np.asarray(uniques, dtype=object)[codes[m["row"]]]
-                texts = [s[b:e] for s, b, e in zip(sent_lookup, m["begin"], m["end"])]
-            arrays = [rb.column(i).take(rows_idx) for i in range(rb.num_columns)]
-            arrays += [
-                pa.array(m["begin"], type=pa.int32()),
-                pa.array(m["end"], type=pa.int32()),
-                pa.array(texts, type=pa.string()),
-                pa.array([etypes_arr[t] for t in m["etype_id"]], type=pa.string()),
-                pa.array(m["score"], type=pa.float32()),
-                pa.array([model_name] * len(texts), type=pa.string()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=pass_cols + ["begin", "end", "text", "etype", "score", "model"],
-            )
+                lines, parent, sent_id = text, None, None
+            for a, part in chunk_lines(lines, chunk):
+                line_of, cols = kernel(part)
+                if len(line_of) == 0:
+                    continue
+                lrows = pa.array(line_of + a)
+                frows = lrows if parent is None else pa.array(parent[line_of + a])
+                arrays = []
+                for c in keep:
+                    if segment and c == "sent_id":
+                        arrays.append(pa.array(sent_id[line_of + a], type=pa.int32()))
+                    elif segment and c == "sentence":
+                        arrays.append(part.take(pa.array(line_of)))
+                    else:
+                        arrays.append(rb.column(c).take(frows))
+                yield pa.RecordBatch.from_arrays(arrays + cols,
+                                                 names=keep + MENTION_NAMES)
 
     return df.mapInArrow(run, schema=out_schema)
+
+
+def chunk_lines(lines, chunk: int):
+    """(start, slice) over ``lines`` in slices of at most ``chunk``
+    rows; ``chunk`` <= 0 means one slice (Spark's "no limit")."""
+    step = chunk if chunk > 0 else max(len(lines), 1)
+    for a in range(0, len(lines), step):
+        yield a, lines.slice(a, step)
+
+
+def split_lines(content):
+    """Arrow string column of file texts -> (lines, parent file row,
+    sent_id): exactly segment_lines' ``split(content, '\\n')`` +
+    posexplode + ``length > 0`` — null content yields no lines, ``\\r``
+    stays in the line, and sent_id is the line's position in its file
+    (gaps where blank lines were dropped)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = pc.split_pattern(content, "\n")
+    lines = pc.list_flatten(parts)
+    parent = pc.list_parent_indices(parts).to_numpy()
+    offs = parts.offsets.to_numpy()
+    sent_id = np.arange(len(lines)) - (offs[parent] - offs[0])
+    keep = np.flatnonzero(pc.binary_length(lines).to_numpy(zero_copy_only=False) > 0)
+    if len(keep) < len(lines):
+        lines = lines.take(pa.array(keep))
+        parent, sent_id = parent[keep], sent_id[keep]
+    return lines, parent, sent_id
+
+
+def _gather_strings(data: np.ndarray, starts: np.ndarray, lens: np.ndarray):
+    """Byte ranges of one buffer -> a pyarrow StringArray, by one numpy
+    gather (no Python string per range)."""
+    import pyarrow as pa
+
+    offs = np.zeros(len(starts) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offs[1:])
+    idx = np.repeat(starts - offs[:-1], lens) + np.arange(offs[-1])
+    return pa.StringArray.from_buffers(len(starts), pa.py_buffer(offs),
+                                       pa.py_buffer(data[idx]))
+
+
+class _LineKernel:
+    """Lines -> mentions.
+
+    ``kernel(lines)`` returns (line index per mention, the six mention
+    columns as Arrow arrays), mentions in line order.  Lines are
+    dictionary-encoded and tokenized once per distinct line, then
+    decoded and extracted per line.  Rules mode on pure-ASCII lines runs
+    the byte path (functions/fast_tokenize.py: token spans, classes and
+    mention texts straight from the Arrow buffer); a call holding any
+    non-ASCII line, and the neural modes, tokenize with the reference
+    regex.
+    """
+
+    def __init__(self, domain, mode, max_len, seed, encoder_opts):
+        self.domain, self.mode, self.max_len = domain, mode, max_len
+        self.seed, self.encoder_opts = seed, encoder_opts
+        self.class_fn, self.etypes = CLASS_FNS[domain]
+        self.model_name = f"{mode}_{domain}_v1"
+        self.neural = None
+
+    def __call__(self, lines):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from ..functions.fast_tokenize import padded_spans
+
+        if lines.null_count:
+            lines = pc.fill_null(lines, "")
+        enc = pc.dictionary_encode(lines)
+        codes = enc.indices.to_numpy(zero_copy_only=False)
+        uarr = enc.dictionary
+        fast = padded_spans(uarr, self.max_len) if self.mode == "rules" else None
+        if fast is not None:
+            data, offs, utb, ute, ulens, tstart, tlen = fast
+            ucls = _classes_bytes(self.domain, data, tstart, tlen, ulens)
+            lens = ulens[codes]
+            m = extract_mentions_arrays(bmes_tags_from_classes(ucls[codes], lens),
+                                        utb[codes], ute[codes], lens)
+            text = _gather_strings(data, offs[codes[m["row"]]] + m["begin"],
+                                   (m["end"] - m["begin"]).astype(np.int64))
+        else:
+            strs = uarr.to_pylist()
+            utoks, utb, ute, ulens = _tokenize_unique(strs, self.max_len)
+            toks, tb, te, lens = utoks[codes], utb[codes], ute[codes], ulens[codes]
+            if self.mode == "rules":
+                tags = bmes_tags_from_classes(self.class_fn(toks, lens), lens)
+            else:
+                if self.neural is None:
+                    self.neural = _build_encoder(self.mode, len(self.etypes),
+                                                 self.seed, self.encoder_opts)
+                ids = _ids_from_tokens(
+                    toks, (self.encoder_opts or {}).get("vocab_size", NEURAL_VOCAB))
+                tags = _neural_decode(self.neural, ids, lens, len(self.etypes),
+                                      "neural" if self.mode == "albert" else self.mode)
+            m = extract_mentions_arrays(tags, tb, te, lens)
+            text = pa.array([strs[codes[r]][b:e] for r, b, e in
+                             zip(m["row"], m["begin"], m["end"])], type=pa.string())
+        cols = [
+            pa.array(m["begin"], type=pa.int32()),
+            pa.array(m["end"], type=pa.int32()),
+            text,
+            pa.array(list(self.etypes), type=pa.string()).take(pa.array(m["etype_id"])),
+            pa.array(m["score"], type=pa.float32()),
+            pa.repeat(pa.scalar(self.model_name, pa.string()), len(text)),
+        ]
+        return m["row"], cols
 
 
 def _tokenize_unique(uniques: list, max_len: int):

@@ -29,6 +29,9 @@ DOC_PRED_BY_ETYPE = {"op": "MENTIONS_OP", "obj": "MENTIONS_OBJ"}
 
 N_SALT = 8  # salt buckets per hot key
 
+# the non-mention columns mentions_to_triples reads (with provenance)
+TRIPLE_PASS_COLS = ("repo", "path", "commit", "content_sha", "sent_id")
+
 
 def file_uri(repo="repo", path="path") -> F.Column:
     return F.concat_ws("/", F.col(repo), F.col(path))

@@ -2,12 +2,15 @@
 
 ``build_triples`` is the flagship dataflow (north_star):
 
-  source scan -> segment -> fused Arrow tag+extract -> mentions
+  source scan -> fused Arrow segment+tag+extract -> mentions
   -> triples projection (+ CONTAINS from the scan) -> salted write
 
 The plan is declared entirely with DataFrame ops so Catalyst prunes
 columns into the parquet scan and fuses the relational glue; the only
-Python is the single Arrow-batched tagging stage.
+Python is the single Arrow-batched stage, which takes FILE rows and
+splits them into lines itself, so each file's columns cross into
+Python once rather than once per line.  ``build_triples`` names the
+columns the triple projection reads, so nothing else comes back.
 """
 
 from __future__ import annotations
@@ -15,27 +18,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.segment import segment_lines
-from ..operators.tagger import tag_mentions
-from ..operators.triples import contains_triples, mentions_to_triples
+from ..operators.tagger import tag_file_mentions
+from ..operators.triples import (
+    TRIPLE_PASS_COLS,
+    contains_triples,
+    mentions_to_triples,
+)
 
 
 def detect_mentions(source: DataFrame, *, domain: str = "code",
                     mode: str = "rules",
                     encoder_opts: dict | None = None) -> DataFrame:
-    """source(repo,path,commit,lang,content,content_sha) -> mention rows.
+    """source(repo,path,commit,lang,content,content_sha) -> mention rows,
+    with every column of ``tag_mentions(segment_lines(source))``.
     ``encoder_opts`` overrides the neural encoder shape (depth study —
     operators/tagger._build_encoder docstring)."""
-    sents = segment_lines(source)
-    return tag_mentions(sents, domain=domain, mode=mode,
-                        encoder_opts=encoder_opts)
+    return tag_file_mentions(source, domain=domain, mode=mode,
+                             encoder_opts=encoder_opts)
 
 
 def build_triples(source: DataFrame, *, domain: str = "code",
                   mode: str = "rules", include_contains: bool = True) -> DataFrame:
     """Full mention->triple dataflow; returns the un-salted triple DF
     (callers add salting via operators.triples.write_triples)."""
-    mentions = detect_mentions(source, domain=domain, mode=mode)
+    mentions = tag_file_mentions(source, keep=list(TRIPLE_PASS_COLS),
+                                 domain=domain, mode=mode)
     triples = mentions_to_triples(mentions, domain=domain)
     if include_contains:
         triples = triples.unionByName(contains_triples(source))

@@ -308,6 +308,15 @@ def write_delta(delta_df: DataFrame, store_path: str, version: int,
     of the same ``version`` resolves the SAME predecessor (below=) and
     overwrites its slot, so the loop stays idempotent.  Returns
     {mode, version, base, chain_len}.
+
+    De-commit window: a delta write first deletes the whole ``version``
+    directory, then writes the delta, then publishes the manifest.  If
+    ``version`` was already committed (a replayed epoch), it is
+    uncommitted from the delete until the manifest lands: readers that
+    resolve the head meanwhile get the predecessor, and a reader that
+    pinned ``version`` earlier fails to read it.  The replay restores
+    the same view, so nothing is lost once the write completes
+    (single-writer contract).
     """
     spark = delta_df.sparkSession
     pred = latest_committed_version(
@@ -329,7 +338,9 @@ def write_delta(delta_df: DataFrame, store_path: str, version: int,
         # a caller switching merge spec mid-chain would silently
         # reinterpret every EARLIER delta under the new spec at read
         # time — refuse loudly instead (r6 ADVICE fix)
-        if man.get("merge") != merge:
+        # compare in JSON form: the manifest stores the spec as JSON, so
+        # a tuple in the caller's spec reads back as a list
+        if man.get("merge") != json.loads(json.dumps(merge)):
             raise ValueError(
                 f"write_delta: merge spec {merge!r} differs from the "
                 f"predecessor chain's {man.get('merge')!r} at v{pred} "

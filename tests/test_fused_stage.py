@@ -1,0 +1,166 @@
+"""The fused file-row tagging stage (segmentation inside the Arrow
+stage) against the line-level reference path
+``tag_mentions(segment_lines(src))``."""
+
+from __future__ import annotations
+
+import subprocess
+import sys
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+
+from ner_funtool_spark.config import SEED
+from ner_funtool_spark.operators import tagger
+from ner_funtool_spark.operators.segment import segment_lines
+from ner_funtool_spark.operators.tagger import MAX_LEN, tag_mentions
+from ner_funtool_spark.operators.triples import contains_triples, mentions_to_triples
+from ner_funtool_spark.plans.kg import build_triples, detect_mentions
+
+LONG = "def f" + " x" * (MAX_LEN * 3)  # truncation boundary
+CODE = [
+    ("a.py", ""),                                        # empty content
+    ("b.py", "import alpha.core\ndef load_1(a):\n"),     # trailing newline
+    ("c.py", "class Reader7:\r\n    def run(self):\r\n"),  # \r\n endings
+    ("d.py", "def g1():\n\n\n\nimport os\n\n"),          # blank runs: sent_id gaps
+    ("e.py", None),                                      # null content
+    ("f.py", LONG + "\nclass Tail:"),                    # > 64 tokens
+    ("g.py", "def café_fn():\nimport beta\n"),           # one non-ASCII line
+    ("h.py", "import alpha.core\ndef load_1(a):\n"),     # duplicate lines
+    ("i.py", "from alpha.core import load_1\npackage p.q\n"),
+]
+DOC = [
+    ("a.txt", ""),
+    ("b.txt", "load the table and parse the file\n"),
+    ("c.txt", "parse record\r\n\r\nwrite file schema\r\n"),
+    ("d.txt", None),
+    ("e.txt", " ".join(["parse table"] * MAX_LEN)),
+    ("f.txt", "écrire the file\nload the table and parse the file\n"),
+]
+
+
+def _source(spark, files):
+    rows = [("r0", p, "c0", "py", t) for p, t in files]
+    return spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ).withColumn("content_sha", F.sha2("content", 256)).coalesce(1)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("domain,mode,files", [
+    ("code", "rules", CODE),
+    ("doc", "rules", DOC),
+    ("code", "neural", CODE),
+])
+def test_fused_stage_equals_line_path(spark, domain, mode, files):
+    src = _source(spark, files)
+    fused = detect_mentions(src, domain=domain, mode=mode)
+    lines = tag_mentions(segment_lines(src), domain=domain, mode=mode)
+    assert fused.schema == lines.schema
+    assert dict(fused.dtypes)["sent_id"] == "int"
+    got, want = _rows(fused), _rows(lines)
+    assert got == want
+    if mode == "rules":
+        assert got, "fixture should produce mentions"
+        # null content yields no rows (not an error)
+        paths = {r[1] for r in got}
+        assert "e.py" not in paths and "d.txt" not in paths
+
+
+def test_build_triples_equals_line_path(spark):
+    src = _source(spark, CODE)
+    want = mentions_to_triples(
+        tag_mentions(segment_lines(src), domain="code", mode="rules")
+    ).unionByName(contains_triples(src))
+    assert _rows(build_triples(src, domain="code", mode="rules")) == _rows(want)
+
+
+def test_triples_path_sends_only_read_columns(spark):
+    """The narrowed stage returns no sentence or lang column."""
+    from ner_funtool_spark.operators.tagger import tag_file_mentions
+    from ner_funtool_spark.operators.triples import TRIPLE_PASS_COLS
+
+    m = tag_file_mentions(_source(spark, CODE), keep=list(TRIPLE_PASS_COLS))
+    assert m.columns == list(TRIPLE_PASS_COLS) + tagger.MENTION_NAMES
+
+
+def _kernel_rows(lines, chunk):
+    """The stage's per-chunk kernel calls, as (line, *mention) tuples."""
+    k = tagger._LineKernel("code", "rules", MAX_LEN, SEED, None)
+    out = []
+    for a, part in tagger.chunk_lines(lines, chunk):
+        line_of, cols = k(part)
+        if len(line_of):
+            out += zip((line_of + a).tolist(), *(c.to_pylist() for c in cols))
+    return out
+
+
+def test_non_ascii_fallback_is_bounded_by_chunk(monkeypatch):
+    """Lines go to the kernel in chunks of at most ``chunk``: one
+    non-ASCII line sends only its own chunk down the regex path, and
+    the output does not depend on the chunking."""
+    seen = []
+    real = tagger._tokenize_unique
+
+    def spy(strs, max_len):
+        seen.append(list(strs))
+        return real(strs, max_len)
+
+    monkeypatch.setattr(tagger, "_tokenize_unique", spy)
+    ascii_lines = [f"def fn_{i}(a):" for i in range(11)] + ["import alpha.core"]
+    lines = pa.array(ascii_lines + ["class Café:"] + ascii_lines[:3])
+
+    chunked = _kernel_rows(lines, 4)
+    assert len(seen) == 1 and len(seen[0]) <= 4 and "class Café:" in seen[0]
+    seen.clear()
+    whole = _kernel_rows(lines, 1 << 14)
+    assert len(seen) == 1 and len(seen[0]) == 13  # every distinct line
+    assert chunked == whole
+    assert sorted(x[0] for x in whole) == [x[0] for x in whole]
+    assert {x[3] for x in whole} >= {"fn_0", "alpha.core"}
+
+
+@pytest.mark.parametrize("chunk", [0, -1])
+def test_non_positive_chunk_means_no_limit(chunk):
+    """maxRecordsPerBatch <= 0 is Spark's "no limit": one chunk."""
+    lines = pa.array([f"def fn_{i}(a):" for i in range(7)] + ["import os"])
+    assert [a for a, _ in tagger.chunk_lines(lines, chunk)] == [0]
+    assert _kernel_rows(lines, chunk) == _kernel_rows(lines, 1 << 14)
+    assert _kernel_rows(lines, chunk)
+
+
+@pytest.mark.parametrize("batch", ["0", "-1", "3"])
+def test_fused_stage_under_arrow_batch_setting(spark, batch):
+    """The stage reads its chunk from maxRecordsPerBatch; its output
+    does not depend on it."""
+    src = _source(spark, CODE)
+    want = _rows(tag_mentions(segment_lines(src), domain="code", mode="rules"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, batch)
+    try:
+        got = _rows(detect_mentions(src, domain="code", mode="rules"))
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
+def test_split_lines_matches_segment_semantics():
+    lines, parent, sent_id = tagger.split_lines(
+        pa.array(["a\n\nb\r\n", None, "", "\nc"]))
+    assert lines.to_pylist() == ["a", "b\r", "c"]
+    assert parent.tolist() == [0, 0, 3]
+    assert sent_id.tolist() == [0, 2, 1]
+    assert np.issubdtype(sent_id.dtype, np.integer)
+
+
+def test_plans_import_does_not_load_pandas():
+    """The Arrow worker's import closure stays pandas-free."""
+    code = ("import sys, ner_funtool_spark.plans.kg; "
+            "sys.exit(1 if 'pandas' in sys.modules else 0)")
+    assert subprocess.run([sys.executable, "-c", code]).returncode == 0

@@ -189,3 +189,24 @@ def test_driver_query_plan_shapes_match_snapshot(spark):
         if got != want:
             mismatches[name] = {"want": want, "got": got}
     assert not mismatches, json.dumps(mismatches, indent=1)
+
+
+def test_staging_prune_runs_once_per_process(tmp_path):
+    """The per-PID staging prune sweeps a prefix on its first call only:
+    later staging calls in the same process skip the glob."""
+    import os
+    import subprocess
+    import sys
+
+    import __spark_entry__ as mod
+
+    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True).stdout.strip()
+    prefix = str(tmp_path / "stage")
+    stale = f"{prefix}_x_p{dead}"
+    os.makedirs(stale)
+    mod._prune_stale_staging(None, prefix)
+    assert not os.path.exists(stale)
+    os.makedirs(stale)
+    mod._prune_stale_staging(None, prefix)
+    assert os.path.exists(stale)
