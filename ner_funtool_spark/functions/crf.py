@@ -89,74 +89,14 @@ def viterbi_decode_batch(
     return np.where(mask, path, 0).astype(np.int32)
 
 
-def viterbi_decode_classes(
-    cls: np.ndarray,
-    n_types: int,
-    transitions: np.ndarray,
-    lengths: np.ndarray,
-    start: np.ndarray | None = None,
-    end: np.ndarray | None = None,
-    emit_score: float = 10.0,
-) -> np.ndarray:
-    """Fused Viterbi for class-indicator emissions (the rules decoder).
-
-    Semantically identical to
-    ``viterbi_decode_batch(class_emissions(cls, n_types), ...)``
-    (equivalence pinned in tests/test_crf.py) but never materializes
-    the [B, S, V] emission cube: emission(b, t, j) =
-    ``emit_score * (blk[j] == cls[b, t])`` is computed on the fly from
-    the int [B, S] class matrix.  For the flagship batch shape
-    (B=4096, S<=64, V=9) that removes ~28 MB of float traffic per batch
-    (float64 cube + its float32 copy) — the memory-bus pressure that
-    showed up as the 8->32 per-process slowdown in BENCH/BASELINE.md.
-    Backpointers are int8 when V <= 127 (V = 1 + 4*n_types), halving
-    the remaining [B, S, V] traffic.
-    """
-    B, S = cls.shape
-    V = 1 + 4 * n_types
-    blk = np.zeros(V, dtype=cls.dtype)
-    for t in range(n_types):
-        blk[1 + 4 * t: 5 + 4 * t] = t + 1
-    lengths = np.asarray(lengths, dtype=np.int64)
-    tr = transitions if transitions.dtype == np.float32 else transitions.astype(np.float32)
-    emit32 = np.float32(emit_score)
-    dp = (cls[:, 0][:, None] == blk[None, :]).astype(np.float32) * emit32
-    if start is not None:
-        dp += start.astype(np.float32)[None, :]
-    bp_dtype = np.int8 if V <= 127 else np.int16
-    backp = np.zeros((B, S, V), dtype=bp_dtype)
-    new_dp = np.empty_like(dp)
-    bp_t = np.empty((B, V), dtype=bp_dtype)
-    rows = np.arange(B)
-    tr_cols = [np.ascontiguousarray(tr[:, j]) for j in range(V)]
-    for t in range(1, int(lengths.max())):
-        cls_t = cls[:, t]
-        for j in range(V):
-            s = dp + tr_cols[j][None, :]
-            bp = np.argmax(s, axis=1)
-            bp_t[:, j] = bp
-            new_dp[:, j] = s[rows, bp] + (cls_t == blk[j]) * emit32
-        active = (t < lengths)[:, None]
-        dp = np.where(active, new_dp, dp)
-        backp[:, t, :] = np.where(active, bp_t, 0)
-    if end is not None:
-        dp = dp + end.astype(np.float32)[None, :]
-    path = np.zeros((B, S), dtype=np.int32)
-    path[rows, lengths - 1] = np.argmax(dp, axis=1).astype(np.int32)
-    for t in range(S - 1, 0, -1):
-        prev = backp[rows, t, path[:, t]]
-        path[:, t - 1] = np.where(t <= lengths - 1, prev, path[:, t - 1])
-    mask = np.arange(S)[None, :] < lengths[:, None]
-    return np.where(mask, path, 0).astype(np.int32)
-
-
 def bmes_tags_from_classes(cls: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     """Closed-form decode for the rules-mode CRF: the maximal-run BMES
     labeling of a class matrix, equal to
-    ``viterbi_decode_classes(cls, n_types, *bmes_transitions(n_types))``
-    for EVERY input (pinned in tests/test_crf.py) but computed with
-    shift-compare index arithmetic instead of the [B, S] x V dynamic
-    program.
+    ``viterbi_decode_batch(class_emissions(cls, n_types), trans, lengths,
+    start, end)`` with ``trans, start, end = bmes_transitions(n_types)``
+    for EVERY input (pinned in tests/test_crf.py and
+    tests/test_property.py) but computed with shift-compare index
+    arithmetic instead of the [B, S] x V dynamic program.
 
     Why this is exact, not an approximation: under the hard BMES
     grammar, class-indicator emissions (+emit_score per matching-block

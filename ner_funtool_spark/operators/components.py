@@ -2,8 +2,10 @@
 
 Alternating large-star / small-star DataFrame joins (the classic
 MapReduce CC formulation, converges in O(log n) rounds) with a
-driver-side convergence check and ``localCheckpoint`` per iteration to
-truncate lineage (SURVEY.md §7 M4; north_star's union-find analog).
+driver-side convergence check (SURVEY.md §7 M4; north_star's
+union-find analog).  The loop runs on ``graph._iterate``: an eager
+``localCheckpoint`` per round, each predecessor released once compared,
+and a warning when ``max_iter`` runs out before the fixed point.
 
 Node ids are any orderable column (we use entity strings; the
 representative is the lexicographic min of the component, so DuckDB's
@@ -19,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph import _iterate
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -59,13 +63,13 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """edges(src, dst) -> (node, canonical_id).
 
     canonical_id = min node id in the component; isolated nodes (absent
-    from edges) are the caller's to union in (node, node).
+    from edges) are the caller's to union in (node, node).  Running out
+    of ``max_iter`` rounds before the fixed point warns.
     """
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    e = e.localCheckpoint()
-    n_prev = e.count()
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint()
+    sizes = []
+
+    def stable(prev: DataFrame, new: DataFrame) -> bool:
         # converged when the edge multiset is stable (star ops are
         # deterministic, so set equality is a fixed-point check).
         # Cheap exact form: a count() on the just-materialized
@@ -74,18 +78,21 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         # ONLY on count-stable rounds, and one-sided emptiness plus
         # equal counts already implies multiset equality (the old
         # two-sided exceptAll doubled the dominant per-round cost)
-        n2 = e2.count()
-        if n2 == n_prev and e2.exceptAll(e).limit(1).count() == 0:
-            e = e2
-            break
-        e = e2
-        n_prev = n2
-    # fixed point: every edge is (node, root)
-    members = e.select(F.col("src").alias("node"), F.col("dst").alias("canonical_id"))
-    roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("canonical_id")).distinct()
-    return members.unionByName(roots).groupBy("node").agg(
-        F.min("canonical_id").alias("canonical_id")
-    )
+        if not sizes:
+            sizes.append(prev.count())
+        sizes.append(new.count())
+        return sizes[-1] == sizes[-2] and new.exceptAll(prev).limit(1).count() == 0
+
+    def canonical(e: DataFrame) -> DataFrame:
+        # fixed point: every edge is (node, root)
+        members = e.select(F.col("src").alias("node"), F.col("dst").alias("canonical_id"))
+        roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("canonical_id")).distinct()
+        return members.unionByName(roots).groupBy("node").agg(
+            F.min("canonical_id").alias("canonical_id")
+        )
+
+    return _iterate(e, lambda e: _small_star(_large_star(e)), max_iter, canonical,
+                    done=stable, eager=True, name="connected_components")[0]
 
 
 def canonicalize(nodes: DataFrame, edges: DataFrame, node_col: str = "node",

@@ -10,24 +10,81 @@ degrees and node importance.  Both are expressed as DataFrame ops:
   multigraph semantics (parallel edges count separately).
 * pagerank — fixed-iteration power method over DISTINCT edges with the
   standard damping + dangling-mass redistribution.  Each iteration is
-  one join + one aggregation; ``localCheckpoint`` truncates the plan
-  per iteration exactly like the connected-components operator
-  (components.py), so the lineage never grows with iteration count —
-  the property that keeps iterative DataFrame algorithms viable at
-  scale.  The dangling-mass scalar stays distributed (1-row aggregate
-  broadcast-crossJoined back), no driver collect in the loop.
+  one join + one aggregation.  The dangling-mass scalar stays
+  distributed (1-row aggregate broadcast-crossJoined back), no driver
+  collect in the loop.
 
 Both are DuckDB-oracle-checked (unrolled-CTE SQL, oracles.py) at
 round(6) on doubles.
+
+Every convergence loop — the three PageRank forms, label propagation,
+k-core and ``components.connected_components`` — runs on ``_iterate``,
+the one owner of the loop policy: a ``localCheckpoint`` per round (so
+the lineage never grows with the round count), the round limit (a
+loop with a convergence check warns when it runs out of rounds), and
+the release of round checkpoints and persisted inputs once the result
+no longer reads them, so a call leaves at most its result persistent.
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DAMPING = 0.85
 PR_ITERATIONS = 5
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD a ``localCheckpoint`` frame reads, or None when
+    ``df`` is not itself a checkpoint."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
+
+
+def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
+             eager: bool = False, inputs=(), name: str = "loop"):
+    """Run ``state = step(state)`` for at most ``max_rounds`` rounds, or
+    until ``done(prev, new)`` holds; returns ``(finish(state), rounds,
+    converged)``.  Every round's state is ``localCheckpoint``-ed
+    (``eager`` picks the form), and so is the initial one when a
+    ``done`` check will read it; a checked loop that runs out of rounds
+    warns.  An eager checkpoint no longer reads its predecessor, which
+    is released once the round's check has run; lazy ones are computed
+    only with the finished frame, so they are released after
+    ``finish`` — if it returned a checkpoint (a lazy result keeps what
+    it reads).  The ``inputs`` persisted for the loop are unpersisted
+    after ``finish``.
+    """
+    held = []
+
+    def checkpoint(df):
+        df = df.localCheckpoint(eager=eager)
+        held.append(_checkpoint_rdd(df))
+        return df
+
+    if done is not None:
+        state = checkpoint(state)
+    rounds, converged = 0, False
+    while rounds < max_rounds and not converged:
+        new = checkpoint(step(state))
+        rounds += 1
+        converged = done is not None and done(state, new)
+        if eager and len(held) > 1:
+            held.pop(0).unpersist(False)
+        state = new
+    if done is not None and not converged:
+        warnings.warn(f"{name} did not converge within {rounds} rounds",
+                      RuntimeWarning, stacklevel=3)
+    out = finish(state)
+    if _checkpoint_rdd(out) is not None:
+        for rdd in held:
+            rdd.unpersist(False)
+    for df in inputs:
+        df.unpersist()
+    return out, rounds, converged
 
 
 def degrees(edges: DataFrame, src_col: str = "src",
@@ -181,10 +238,8 @@ def triangle_counts(edges: DataFrame, a_col: str = "a",
     # edge probe — persist it (and the oriented list below) so an
     # upstream pipeline (e.g. the Arrow tagging stage behind
     # comention_edges) runs once, not once per reference; released
-    # after the eager checkpoint of the result (pagerank hygiene)
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
-        .distinct().persist()
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # after the eager checkpoint of the result
+    e, und = _undirected(edges, a_col, b_col)
     deg = und.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed("u", "n")
     # orientation key: (degree, id) total order, lower -> higher
     # degree dimension is one row per node — unbounded at corpus
@@ -228,21 +283,20 @@ def triangle_counts(edges: DataFrame, a_col: str = "a",
     return out
 
 
-def pagerank_personalized(edges: DataFrame, seeds: list[str],
-                          src_col: str = "src", dst_col: str = "dst",
-                          iterations: int = PR_ITERATIONS,
-                          damping: float = DAMPING) -> DataFrame:
-    """Personalized PageRank: restart (and dangling) mass teleports to
-    the SEED set instead of uniformly — relatedness-to-these-entities,
-    the query behind "related repos/symbols" KG features.
-
-    pr_{t+1}(v) = (1-d)*s(v) + d*(sum_{u->v} pr_t(u)/od(u) + dm_t*s(v))
-
-    with s(v) = 1/|S| for seed nodes present in the graph, else 0.
-    Same per-iteration join+agg shape and checkpoint hygiene as
-    ``pagerank``; the teleport vector is one extra column carried on
-    the node table, NOT a broadcast (seeds are a literal list, but the
-    node table itself stays distributed).
+def _pagerank(edges: DataFrame, src_col: str, dst_col: str, damping: float,
+              max_rounds: int, seeds: list[str] | None = None,
+              tol: float | None = None, init_ranks: DataFrame | None = None):
+    """The PageRank body behind ``pagerank``, ``pagerank_personalized``
+    (``seeds``: teleport mass goes to the seed set, not 1/N) and
+    ``pagerank_converged`` (``tol``: iterate to an L1 fixed point and
+    keep full precision; the fixed-round forms report 6 decimals).
+    Returns ``(ranks, rounds)``.  Each teleport form keeps the literal
+    arithmetic its oracle mirrors (``oracles.kg_pagerank_sql``,
+    ``kg_ppr_sql``): uniform is NOT personalized with s(v) = 1/N, which
+    would differ in the last float bit.  Loop-invariant state is built
+    once (guide §2.4): ``ew`` = distinct edges joined with their
+    source's out-degree, ``ninfo`` = nodes with a nullable out-degree
+    (NULL = dangling) and, if personalized, the teleport weight ``sv``.
     """
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -253,35 +307,49 @@ def pagerank_personalized(edges: DataFrame, seeds: list[str],
         .distinct()
         .persist()
     )
-    n_seed = nodes.filter(F.col("node").isin(seeds)).count()
-    if n_seed == 0:
-        # no seed present: the teleport vector is all-zero, so every
-        # rank converges to 0.0 — emit exactly that (one row per node),
-        # matching the SQL mirror's CASE semantics instead of an empty
-        # frame (cross-engine parity if seeds ever miss a corpus)
-        out = nodes.select(
-            "node", F.lit(0.0).cast("double").alias("pr")
-        ).localCheckpoint(eager=True)
-        e.unpersist()
-        nodes.unpersist()
-        return out
-    # loop-invariant state hoisted out of the rounds (guide §2.4): the
-    # edge list pre-joined with its out-degree (ew), and the node table
-    # carrying teleport weight + nullable out-degree (od NULL =
-    # dangling).  Each round is then ONE edge⋈ranks join + aggregation
-    # plus a filter-aggregate for the dangling mass — the r5 form paid
-    # an extra out_deg join and a LEFT ANTI join per round for the same
-    # values (pr/od and the dangling sum are numerically unchanged).
+    pr = F.col("pr") if tol is not None else F.round("pr", 6).alias("pr")
+
+    def finish(ranks):
+        return ranks.select("node", pr).localCheckpoint(eager=True)
+
+    # N, or the number of seeds present in the graph
+    n = (nodes if seeds is None
+         else nodes.filter(F.col("node").isin(seeds))).count()
+    if n == 0:
+        # empty edge list, or no seed present: the teleport vector is
+        # all-zero, so emit exactly that (one 0.0 row per node, zero
+        # rounds), matching the SQL mirror's CASE semantics instead of
+        # an empty frame — and guarding the 1.0/n below
+        zeros = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
+        return _iterate(zeros, None, 0, finish, inputs=(e, nodes))[:2]
     out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
     ew = e.join(out_deg, "src").persist()
-    tele = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left"
-    ).withColumn(
-        "sv",
-        F.when(F.col("node").isin(seeds), F.lit(1.0 / n_seed)).otherwise(F.lit(0.0)),
-    ).persist()
-    ranks = tele.select("node", "od", F.col("sv").alias("pr"))
-    for _ in range(iterations):
+    ninfo = nodes.join(out_deg.withColumnRenamed("src", "node"), "node", "left")
+    if seeds is None:
+        start = F.lit(1.0 / n)
+
+        def update(c, dm):
+            return F.lit((1.0 - damping) / n) + F.lit(damping) * (c + dm / n)
+    else:
+        ninfo = ninfo.withColumn(
+            "sv",
+            F.when(F.col("node").isin(seeds), F.lit(1.0 / n)).otherwise(F.lit(0.0)),
+        )
+        start = F.col("sv")
+
+        def update(c, dm):
+            return (F.lit(1.0 - damping) * F.col("sv")
+                    + F.lit(damping) * (c + dm * F.col("sv")))
+    ninfo = ninfo.persist()
+    ranks = ninfo
+    if init_ranks is not None:
+        ranks = ninfo.join(
+            init_ranks.select("node", F.col("pr").alias("pr0")), "node", "left"
+        )
+        start = F.coalesce(F.col("pr0"), start)
+    ranks = ranks.select("node", "od", start.alias("pr"))
+
+    def step(ranks):
         contribs = (
             ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -291,31 +359,163 @@ def pagerank_personalized(edges: DataFrame, seeds: list[str],
             ranks.filter(F.col("od").isNull())
             .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
         )
-        ranks = (
-            tele.join(contribs, "node", "left")
+        return (
+            ninfo.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node", "od",
-                (
-                    F.lit(1.0 - damping) * F.col("sv")
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                       + F.col("dm") * F.col("sv"))
-                ).alias("pr"),
+                update(F.coalesce(F.col("contrib"), F.lit(0.0)),
+                       F.col("dm")).alias("pr"),
             )
-            .localCheckpoint(eager=False)
         )
-    out = ranks.select("node", F.round("pr", 6).alias("pr")).localCheckpoint(
-        eager=True
-    )
-    tele.unpersist()
-    ew.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return out
+
+    def settled(old, new):
+        delta = (
+            new.join(old.select("node", F.col("pr").alias("pr_old")), "node")
+            .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("d"))
+            .first()["d"]
+        )
+        return delta is not None and delta < tol
+
+    return _iterate(
+        ranks, step, max_rounds, finish,
+        done=None if tol is None else settled,
+        inputs=(ew, ninfo, e, nodes), name="pagerank_converged",
+    )[:2]
+
+
+def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
+             iterations: int = PR_ITERATIONS,
+             damping: float = DAMPING) -> DataFrame:
+    """Fixed-iteration PageRank over the DISTINCT edge set.
+
+    pr_{t+1}(v) = (1-d)/N + d * (sum_{u->v} pr_t(u)/outdeg(u)
+                                 + dangling_mass_t / N)
+
+    Returns (node, pr) with pr rounded to 6 decimals (cross-engine
+    float determinism rule).  N is computed once (scalar dimension);
+    everything in the loop is distributed.
+    """
+    return _pagerank(edges, src_col, dst_col, damping, iterations)[0]
+
+
+def pagerank_personalized(edges: DataFrame, seeds: list[str],
+                          src_col: str = "src", dst_col: str = "dst",
+                          iterations: int = PR_ITERATIONS,
+                          damping: float = DAMPING) -> DataFrame:
+    """Personalized PageRank: restart (and dangling) mass teleports to
+    the SEED set instead of uniformly — relatedness-to-these-entities,
+    the query behind "related repos/symbols" KG features.
+
+    pr_{t+1}(v) = (1-d)*s(v) + d*(sum_{u->v} pr_t(u)/od(u) + dm_t*s(v))
+
+    with s(v) = 1/|S| for seed nodes present in the graph, else 0; no
+    seed present gives 0.0 for every node.  The teleport vector is one
+    extra column carried on the node table, NOT a broadcast (seeds are
+    a literal list, but the node table itself stays distributed).
+    """
+    return _pagerank(edges, src_col, dst_col, damping, iterations,
+                     seeds=seeds)[0]
+
+
+def pagerank_converged(edges: DataFrame, src_col: str = "src",
+                       dst_col: str = "dst", tol: float = 1e-9,
+                       max_iterations: int = 60,
+                       damping: float = DAMPING,
+                       init_ranks: DataFrame | None = None):
+    """PageRank iterated to an L1 fixed-point tolerance, optionally
+    WARM-STARTED from a previous rank vector — the incremental-
+    maintenance primitive: after an edge-batch arrives, re-converging
+    from the previous ranks reaches the (unique) fixed point in far
+    fewer rounds than a cold start.
+
+    The update pr_{t+1} = (1-d)/N + d*(M·pr_t + dm_t/N) is an L1
+    contraction with factor d for ANY starting vector, so no
+    renormalization of the warm start is needed — nodes missing from
+    ``init_ranks`` (new this batch) start at 1/N and the iteration
+    pulls everything to the same fixed point the cold start reaches.
+    Returns ``(ranks, n_rounds)``: (node, pr) at FULL double precision
+    (round at the reporting edge only — a 6-decimal store would
+    re-inflate a warm start's error to ~n_nodes*5e-7 L1 and forfeit
+    the saving), and the number of rounds actually run.  Running out
+    of ``max_iterations`` before the tolerance holds warns.
+
+    Honest scaling note (measured, tests/test_streaming.py): warm
+    rounds track the DELTA'S distance to the new fixed point, not the
+    graph size — an unchanged graph re-converges in <= 2 rounds, a
+    small edge delta in a handful, while a graph grown by a third can
+    take MORE rounds than a uniform cold start (the uniform vector
+    excites only fast-decaying modes; a stale fixed point holds error
+    in the slow modes, which decay at the worst-case rate d).  IVM
+    wins exactly in the micro-batch regime it exists for: small deltas
+    on a large accumulated graph.
+
+    Per round: the same join+agg shape as ``pagerank`` plus ONE
+    node-keyed join/agg for the L1 delta — all distributed, the driver
+    sees a single float per round.
+    """
+    return _pagerank(edges, src_col, dst_col, damping, max_iterations,
+                     tol=tol, init_ranks=init_ranks)
 
 
 LPA_ITERATIONS = 5
+
+
+def _undirected(edges: DataFrame, a_col: str, b_col: str):
+    """``(e, und)``: the DISTINCT unordered edge list as (u, v),
+    persisted, and its both-directions union (not persisted)."""
+    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
+        .distinct().persist()
+    return e, e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous plurality-update round: every node adopts the
+    most frequent label among its neighbours, ties broken by the
+    lexicographically smallest label (min-struct argmax)."""
+    nb = und.join(
+        labels.select(F.col("u").alias("v"), "lbl"), "v"
+    ).select("u", "lbl")
+    counts = nb.groupBy("u", "lbl").agg(F.count("*").alias("c"))
+    return (
+        counts.groupBy("u")
+        .agg(F.min(F.struct((-F.col("c")).alias("nc"),
+                            F.col("lbl").alias("l"))).alias("m"))
+        .select("u", F.col("m.l").alias("lbl"))
+    )
+
+
+def _labels_unchanged(old: DataFrame, new: DataFrame) -> bool:
+    return (
+        old.join(new.select("u", F.col("lbl").alias("lbl2")), "u")
+        .filter(F.col("lbl") != F.col("lbl2"))
+        .count()
+    ) == 0
+
+
+def _lpa(edges: DataFrame, a_col: str, b_col: str, max_rounds: int,
+         init_labels: DataFrame | None = None, done=None):
+    """The LPA body behind ``label_propagation`` (fixed rounds) and
+    ``lpa_converged`` (``done`` = no label changed); returns
+    ``(labels, rounds, converged)``."""
+    e, und = _undirected(edges, a_col, b_col)
+    und = und.persist()
+    labels, lbl = und.select("u").distinct(), F.col("u")
+    if init_labels is not None:
+        labels = labels.join(
+            init_labels.select(F.col("node").alias("u"),
+                               F.col("community").alias("lbl0")),
+            "u", "left",
+        )
+        lbl = F.coalesce(F.col("lbl0"), F.col("u"))
+    return _iterate(
+        labels.select("u", lbl.alias("lbl")),
+        lambda lb: _lpa_round(und, lb), max_rounds,
+        lambda lb: lb.select(
+            F.col("u").alias("node"), F.col("lbl").alias("community")
+        ).localCheckpoint(eager=True),
+        done=done, inputs=(und, e), name="lpa_converged",
+    )
 
 
 def label_propagation(edges: DataFrame, a_col: str = "a", b_col: str = "b",
@@ -333,54 +533,15 @@ def label_propagation(edges: DataFrame, a_col: str = "a", b_col: str = "b",
     Shape at scale: per iteration one join (labels onto the edge list)
     and two aggregations (neighbour-label counts, then a min-struct
     argmax per node) — the same join+agg-per-round shape as pagerank;
-    ``localCheckpoint`` truncates lineage per round, the label
-    dimension is never broadcast (unbounded), no driver collect.
+    the label dimension is never broadcast (unbounded), no driver
+    collect.
 
     Fixed-horizon LPA has no warm-start story (the labeling is defined
     BY its trajectory); ``lpa_converged`` below is the incremental
     variant — it iterates to a fixed point, and its docstring states
     exactly which warm-start guarantees exist (and which don't).
     """
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
-        .distinct().persist()
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    nodes = und.select("u").distinct()
-    labels = nodes.withColumn("lbl", F.col("u"))
-    for _ in range(iterations):
-        nb = und.join(
-            labels.select(F.col("u").alias("v"), "lbl"), "v"
-        ).select("u", "lbl")
-        counts = nb.groupBy("u", "lbl").agg(F.count("*").alias("c"))
-        labels = (
-            counts.groupBy("u")
-            .agg(F.min(F.struct((-F.col("c")).alias("nc"),
-                                F.col("lbl").alias("l"))).alias("m"))
-            .select("u", F.col("m.l").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-    out = labels.select(
-        F.col("u").alias("node"), F.col("lbl").alias("community")
-    ).localCheckpoint(eager=True)
-    und.unpersist()
-    e.unpersist()
-    return out
-
-
-def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous plurality-update round: every node adopts the
-    most frequent label among its neighbours, ties broken by the
-    lexicographically smallest label (min-struct argmax — the same
-    deterministic rule as ``label_propagation``)."""
-    nb = und.join(
-        labels.select(F.col("u").alias("v"), "lbl"), "v"
-    ).select("u", "lbl")
-    counts = nb.groupBy("u", "lbl").agg(F.count("*").alias("c"))
-    return (
-        counts.groupBy("u")
-        .agg(F.min(F.struct((-F.col("c")).alias("nc"),
-                            F.col("lbl").alias("l"))).alias("m"))
-        .select("u", F.col("m.l").alias("lbl"))
-    )
+    return _lpa(edges, a_col, b_col, iterations)[0]
 
 
 def lpa_converged(edges: DataFrame, a_col: str = "a", b_col: str = "b",
@@ -418,47 +579,11 @@ def lpa_converged(edges: DataFrame, a_col: str = "a", b_col: str = "b",
 
     Per round: one join + two aggregations + one node-keyed equality
     check (count of changed labels — the driver sees one long per
-    round); ``localCheckpoint`` truncates lineage.  New nodes absent
-    from ``init_labels`` start as their own community, exactly like a
-    cold start.
+    round).  New nodes absent from ``init_labels`` start as their own
+    community, exactly like a cold start.
     """
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
-        .distinct().persist()
-    und = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    nodes = und.select("u").distinct()
-    if init_labels is None:
-        labels = nodes.withColumn("lbl", F.col("u"))
-    else:
-        labels = (
-            nodes.join(
-                init_labels.select(F.col("node").alias("u"),
-                                   F.col("community").alias("lbl0")),
-                "u", "left",
-            )
-            .select("u", F.coalesce(F.col("lbl0"), F.col("u")).alias("lbl"))
-        )
-    labels = labels.localCheckpoint(eager=False)
-    rounds, converged = 0, False
-    for _ in range(max_rounds):
-        new = _lpa_round(und, labels).localCheckpoint(eager=False)
-        rounds += 1
-        changed = (
-            labels.join(new.select("u", F.col("lbl").alias("lbl2")), "u")
-            .filter(F.col("lbl") != F.col("lbl2"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    out = labels.select(
-        F.col("u").alias("node"), F.col("lbl").alias("community")
-    ).localCheckpoint(eager=True)
-    und.unpersist()
-    e.unpersist()
-    return out, rounds, converged
+    return _lpa(edges, a_col, b_col, max_rounds, init_labels,
+                done=_labels_unchanged)
 
 
 def kcore(edges: DataFrame, k: int = 3, rounds: int = 5,
@@ -475,215 +600,23 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 5,
 
     Shape at scale: per round one degree aggregation and two
     semi-join-shaped filters against the surviving-node set (an
-    unbounded dimension — no broadcast hint, AQE decides);
-    ``localCheckpoint`` truncates lineage per round.
+    unbounded dimension — no broadcast hint, AQE decides).
     """
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
-        .distinct().persist()
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    for _ in range(rounds):
+    e, und = _undirected(edges, a_col, b_col)
+
+    def peel(und):
         deg = und.groupBy("u").agg(F.count("*").alias("c"))
         keep = deg.filter(F.col("c") >= k).select("u")
-        und = (
+        return (
             und.join(keep, "u")
             .join(keep.withColumnRenamed("u", "v"), "v")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
-    out = und.groupBy(F.col("u").alias("node")).agg(
-        F.count("*").cast("bigint").alias("deg")
-    ).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
 
-
-def pagerank_converged(edges: DataFrame, src_col: str = "src",
-                       dst_col: str = "dst", tol: float = 1e-9,
-                       max_iterations: int = 60,
-                       damping: float = DAMPING,
-                       init_ranks: DataFrame | None = None):
-    """PageRank iterated to an L1 fixed-point tolerance, optionally
-    WARM-STARTED from a previous rank vector — the incremental-
-    maintenance primitive: after an edge-batch arrives, re-converging
-    from the previous ranks reaches the (unique) fixed point in far
-    fewer rounds than a cold start.
-
-    The update pr_{t+1} = (1-d)/N + d*(M·pr_t + dm_t/N) is an L1
-    contraction with factor d for ANY starting vector, so no
-    renormalization of the warm start is needed — nodes missing from
-    ``init_ranks`` (new this batch) start at 1/N and the iteration
-    pulls everything to the same fixed point the cold start reaches.
-    Returns ``(ranks, n_rounds)``: (node, pr) at FULL double precision
-    (round at the reporting edge only — a 6-decimal store would
-    re-inflate a warm start's error to ~n_nodes*5e-7 L1 and forfeit
-    the saving), and the number of rounds actually run.
-
-    Honest scaling note (measured, tests/test_streaming.py): warm
-    rounds track the DELTA'S distance to the new fixed point, not the
-    graph size — an unchanged graph re-converges in <= 2 rounds, a
-    small edge delta in a handful, while a graph grown by a third can
-    take MORE rounds than a uniform cold start (the uniform vector
-    excites only fast-decaying modes; a stale fixed point holds error
-    in the slow modes, which decay at the worst-case rate d).  IVM
-    wins exactly in the micro-batch regime it exists for: small deltas
-    on a large accumulated graph.
-
-    Per round: the same join+agg shape as ``pagerank`` plus ONE
-    node-keyed join/agg for the L1 delta — all distributed, the driver
-    sees a single float per round.
-    """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        out = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
-        e.unpersist()
-        nodes.unpersist()
-        return out, 0
-    # loop-invariant state hoisted as in ``pagerank`` (guide §2.4):
-    # pre-joined edge⋈out-degree list, node table carrying nullable od
-    # (NULL = dangling; replaces the per-round LEFT ANTI join).
-    out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
-    ew = e.join(out_deg, "src").persist()
-    ninfo = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left"
-    ).persist()
-    if init_ranks is None:
-        ranks = ninfo.withColumn("pr", F.lit(1.0 / n))
-    else:
-        ranks = (
-            ninfo.join(
-                init_ranks.select("node", F.col("pr").alias("pr0")),
-                "node", "left",
-            )
-            .select("node", "od",
-                    F.coalesce(F.col("pr0"), F.lit(1.0 / n)).alias("pr"))
-        )
-    ranks = ranks.localCheckpoint(eager=False)
-    rounds = 0
-    for _ in range(max_iterations):
-        contribs = (
-            ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
-        )
-        dangling = (
-            ranks.filter(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-        )
-        new_ranks = (
-            ninfo.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node", "od",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                       + F.col("dm") / n)
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        rounds += 1
-        delta = (
-            new_ranks.join(
-                ranks.select("node", F.col("pr").alias("pr_old")), "node"
-            )
-            .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("d"))
-            .first()["d"]
-        )
-        ranks = new_ranks
-        if delta is not None and delta < tol:
-            break
-    out = ranks.select("node", "pr").localCheckpoint(eager=True)
-    ew.unpersist()
-    ninfo.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return out, rounds
-
-
-def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
-             iterations: int = PR_ITERATIONS,
-             damping: float = DAMPING) -> DataFrame:
-    """Fixed-iteration PageRank over the DISTINCT edge set.
-
-    pr_{t+1}(v) = (1-d)/N + d * (sum_{u->v} pr_t(u)/outdeg(u)
-                                 + dangling_mass_t / N)
-
-    Returns (node, pr) with pr rounded to 6 decimals (cross-engine
-    float determinism rule).  N is computed once (scalar dimension);
-    everything in the loop is distributed.
-    """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty edge list: no nodes, typed-empty result (guards the
-        # 1.0/n below; r2 ADVICE item 3)
-        out = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
-        e.unpersist()
-        nodes.unpersist()
-        return out
-    # loop-invariant state hoisted out of the rounds (guide §2.4): ew =
-    # edges pre-joined with out-degree, ninfo = nodes with nullable od
-    # (NULL = dangling).  Per round: one edge⋈ranks join + aggregation,
-    # a filter-aggregate for the dangling mass, and the rank rebuild —
-    # the r5 form paid an extra out_deg join and a LEFT ANTI join per
-    # round for the same values.
-    out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
-    ew = e.join(out_deg, "src").persist()
-    ninfo = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left"
-    ).persist()
-    ranks = ninfo.withColumn("pr", F.lit(1.0 / n))
-    for _ in range(iterations):
-        contribs = (
-            ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
-        )
-        dangling = (
-            ranks.filter(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-        )
-        ranks = (
-            ninfo.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node", "od",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / n)
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    # materialize the final ranks (eager checkpoint) BEFORE releasing
-    # the cached edge/node tables the iteration plan reads — after
-    # this the caller holds a self-contained result and the loop's
-    # persisted inputs are freed (r2 ADVICE item 3)
-    out = ranks.select("node", F.round("pr", 6).alias("pr")).localCheckpoint(
-        eager=True
-    )
-    ew.unpersist()
-    ninfo.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return out
+    return _iterate(
+        und, peel, rounds,
+        lambda und: und.groupBy(F.col("u").alias("node")).agg(
+            F.count("*").cast("bigint").alias("deg")
+        ).localCheckpoint(eager=True),
+        inputs=(e,),
+    )[0]

@@ -138,52 +138,22 @@ def test_bmes_decoder_randomized_property():
         assert got == want, (cls_row, got, want)
 
 
-def test_fused_class_viterbi_equals_cube():
-    """viterbi_decode_classes == viterbi_decode_batch over materialized
-    class_emissions for random shapes (the r3 fused kernel is a pure
-    memory-traffic optimization, not a semantics change)."""
-    import numpy as np
-
-    from ner_funtool_spark.functions.crf import (
-        bmes_transitions,
-        viterbi_decode_batch,
-        viterbi_decode_classes,
-    )
-    from ner_funtool_spark.functions.model import EMIT_SCORE, class_emissions
-
-    rng = np.random.RandomState(11)
-    for _ in range(40):
-        B, S, NT = rng.randint(1, 16), rng.randint(1, 24), rng.randint(1, 4)
-        cls = rng.randint(0, NT + 1, size=(B, S)).astype(np.int8)
-        lens = rng.randint(1, S + 1, size=B)
-        trans, start, end = bmes_transitions(NT)
-        a = viterbi_decode_batch(class_emissions(cls, NT), trans, lens, start, end)
-        b = viterbi_decode_classes(cls, NT, trans, lens, start, end,
-                                   emit_score=EMIT_SCORE)
-        assert np.array_equal(a, b)
-
-
-def test_closed_form_bmes_equals_fused_viterbi():
-    """bmes_tags_from_classes == viterbi_decode_classes for random class
-    matrices/lengths — the r6 closed-form decode that removes the DP
-    from the rules path is a pure compute optimization, not a semantics
-    change (crf.py docstring proof sketch)."""
-    import numpy as np
-
-    from ner_funtool_spark.functions.crf import (
-        bmes_tags_from_classes,
-        bmes_transitions,
-        viterbi_decode_classes,
-    )
-    from ner_funtool_spark.functions.model import EMIT_SCORE
+def test_closed_form_bmes_equals_viterbi():
+    """bmes_tags_from_classes == viterbi_decode_batch over materialized
+    class_emissions for random class matrices/lengths — the closed-form
+    decode that removes the DP from the rules path is a pure compute
+    optimization, not a semantics change (crf.py docstring proof
+    sketch)."""
+    from ner_funtool_spark.functions.crf import bmes_tags_from_classes
 
     rng = np.random.RandomState(23)
-    for _ in range(60):
-        B, S, NT = rng.randint(1, 16), rng.randint(1, 24), rng.randint(1, 5)
-        cls = rng.randint(0, NT + 1, size=(B, S)).astype(np.int64)
-        lens = rng.randint(1, S + 1, size=B)
-        trans, start, end = bmes_transitions(NT)
-        a = viterbi_decode_classes(cls, NT, trans, lens, start, end,
-                                   emit_score=EMIT_SCORE)
-        b = bmes_tags_from_classes(cls, lens)
-        assert np.array_equal(a, b), (cls, lens, a, b)
+    for dtype in (np.int8, np.int64):
+        for _ in range(60):
+            B, S, NT = rng.randint(1, 16), rng.randint(1, 24), rng.randint(1, 5)
+            cls = rng.randint(0, NT + 1, size=(B, S)).astype(dtype)
+            lens = rng.randint(1, S + 1, size=B)
+            trans, start, end = bmes_transitions(NT)
+            a = viterbi_decode_batch(class_emissions(cls, NT), trans, lens,
+                                     start, end)
+            b = bmes_tags_from_classes(cls, lens)
+            assert np.array_equal(a, b), (cls, lens, a, b)

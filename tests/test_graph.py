@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from ner_funtool_spark.operators.graph import degrees, pagerank
 
@@ -305,3 +306,118 @@ def test_lpa_converged_fixed_point_and_warm_start(spark):
     warm2, _, conv2 = lpa_converged(grown, init_labels=cold)
     got2 = {r["node"]: r["community"] for r in warm2.collect()}
     assert conv2 and set(got2) == set(labels) | {"w", "v"}
+
+
+def _random_digraph(spark, n_nodes=300, n_edges=1500, seed=5):
+    import random
+
+    rng = random.Random(seed)
+    nodes = [f"n{i:03d}" for i in range(n_nodes)]
+    pairs = set()
+    while len(pairs) < n_edges:
+        pairs.add(tuple(rng.sample(nodes, 2)))
+    return nodes, spark.createDataFrame(sorted(pairs), "src string, dst string")
+
+
+def _as_dict(df, key="node", val="pr"):
+    return {r[key]: r[val] for r in df.collect()}
+
+
+def test_pagerank_forms_agree(spark):
+    """The three PageRank forms share one body: fixed-iteration equals
+    the converged form stopped after the same rounds (rounded like the
+    fixed form), and uniform equals personalized with every node a seed."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from ner_funtool_spark.operators.graph import (
+        pagerank_converged,
+        pagerank_personalized,
+    )
+
+    nodes, e = _random_digraph(spark)
+    want = _as_dict(pagerank(e))
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)  # tol=0 never converges
+        conv, rounds = pagerank_converged(e, tol=0.0, max_iterations=5)
+    assert rounds == 5
+    assert _as_dict(conv.select("node", F.round("pr", 6).alias("pr"))) == want
+    assert _as_dict(pagerank_personalized(e, nodes)) == want
+
+
+def test_label_propagation_equals_lpa_converged_horizon(spark):
+    import warnings
+
+    from ner_funtool_spark.operators.graph import label_propagation, lpa_converged
+
+    # two triangles bridged by one edge converge; K(3,3) 2-cycles
+    # (every node adopts the other side's smallest label each round)
+    bridged = [("a", "b"), ("a", "c"), ("b", "c"),
+               ("x", "y"), ("x", "z"), ("y", "z"), ("c", "x")]
+    k33 = [(f"l{i}", f"r{j}") for i in range(3) for j in range(3)]
+    for es in (bridged, k33):
+        u = spark.createDataFrame(es, "a string, b string")
+        for k in range(1, 6):
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", RuntimeWarning)
+                conv = lpa_converged(u, max_rounds=k)[0]
+            assert (_as_dict(label_propagation(u, iterations=k), val="community")
+                    == _as_dict(conv, val="community")), k
+
+
+def _loop_calls():
+    from ner_funtool_spark.operators import graph as G
+    from ner_funtool_spark.operators.components import connected_components
+
+    return {
+        "pagerank": lambda d, u: G.pagerank(d),
+        "pagerank_personalized": lambda d, u: G.pagerank_personalized(d, ["n000", "n001"]),
+        "pagerank_converged": lambda d, u: G.pagerank_converged(d, max_iterations=5)[0],
+        "label_propagation": lambda d, u: G.label_propagation(u),
+        "lpa_converged": lambda d, u: G.lpa_converged(u, max_rounds=5)[0],
+        "kcore": lambda d, u: G.kcore(u, k=2),
+        "connected_components": lambda d, u: connected_components(d),
+    }
+
+
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")
+@pytest.mark.parametrize("name", sorted(_loop_calls()))
+def test_loop_leaves_at_most_its_result_persistent(spark, name):
+    """Round checkpoints and persisted loop inputs are released: a call
+    grows the persistent-RDD count by at most its own result."""
+    from pyspark.sql import functions as F
+
+    _, d = _random_digraph(spark, n_nodes=40, n_edges=120)
+    u = d.select(F.least("src", "dst").alias("a"),
+                 F.greatest("src", "dst").alias("b")).distinct()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    call = _loop_calls()[name]
+    before = persistent().size()
+    out = call(d, u)
+    assert persistent().size() - before <= 1
+    assert out.count() > 0
+
+
+def test_round_limit_warns_only_when_unconverged(spark):
+    import warnings
+
+    from ner_funtool_spark.operators.components import connected_components
+    from ner_funtool_spark.operators.graph import pagerank_converged
+
+    nodes = [f"n{i:03d}" for i in range(40)]
+    path = spark.createDataFrame(list(zip(nodes[:-1], nodes[1:])),
+                                 "src string, dst string")
+    with pytest.warns(RuntimeWarning, match="connected_components"):
+        connected_components(path, max_iter=1).collect()
+    with pytest.warns(RuntimeWarning, match="pagerank_converged"):
+        _, rounds = pagerank_converged(path, max_iterations=1, tol=1e-12)
+    assert rounds == 1
+    # on a directed cycle the uniform start is already the fixed point
+    cycle = spark.createDataFrame(list(zip(nodes, nodes[1:] + nodes[:1])),
+                                  "src string, dst string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert {r["canonical_id"] for r in
+                connected_components(path).collect()} == {"n000"}
+        assert pagerank_converged(cycle)[1] == 1

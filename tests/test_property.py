@@ -94,20 +94,18 @@ def test_vectorized_extraction_equals_pipeline_rule(tag_ids):
     st.integers(1, 12),  # S
     st.integers(1, 3),   # n_types
 )
-def test_fused_class_viterbi_property(seed, B, S, NT):
-    """viterbi_decode_classes == cube path for any class matrix/length
-    combination (the r3 fused kernel, fuzzed beyond the fixed-seed
-    unit test)."""
-    from ner_funtool_spark.functions.crf import viterbi_decode_classes
-    from ner_funtool_spark.functions.model import EMIT_SCORE
+def test_closed_form_bmes_property(seed, B, S, NT):
+    """bmes_tags_from_classes == viterbi_decode_batch over materialized
+    class emissions for any class matrix/length combination (the
+    closed-form rules decode, fuzzed beyond the fixed-seed unit test)."""
+    from ner_funtool_spark.functions.crf import bmes_tags_from_classes
 
     rng = np.random.RandomState(seed % (2**31))
     cls = rng.randint(0, NT + 1, size=(B, S)).astype(np.int8)
     lens = rng.randint(1, S + 1, size=B)
     trans, start, end = bmes_transitions(NT)
     a = viterbi_decode_batch(class_emissions(cls, NT), trans, lens, start, end)
-    b = viterbi_decode_classes(cls, NT, trans, lens, start, end,
-                               emit_score=EMIT_SCORE)
+    b = bmes_tags_from_classes(cls, lens)
     np.testing.assert_array_equal(a, b)
 
 

@@ -70,10 +70,15 @@ def main() -> int:
     qs, os_ = mod.queries(), mod.oracle_sql()
     fails = []
     report: dict[str, dict] = {}
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        before = persistent().size()
         sdf = fn(spark, sf_dir).toPandas()
+        # what the query left persistent (round checkpoints, cached
+        # inputs): a count for the report, not a gate
+        report[name] = {"persistent_rdds_delta": persistent().size() - before}
         if name not in os_:
             # the real driver still canonicalizes rows-only results
             # (sorts the raw frame) — run the same path and discard the
@@ -84,14 +89,14 @@ def main() -> int:
                 print(f"{name}: rows={len(sdf)} rows-only CANONICALIZE "
                       f"FAILED: {type(ex).__name__}: {ex}")
                 fails.append(name)
-                report[name] = {"status": "err", "spark_rows": len(sdf),
-                                "err": f"{type(ex).__name__}: {ex}"}
+                report[name].update({"status": "err", "spark_rows": len(sdf),
+                                "err": f"{type(ex).__name__}: {ex}"})
                 continue
             print(f"{name}: rows={len(sdf)} (no oracle — rows-only check, "
                   "canonicalization ok)")
-            report[name] = {"status": "no_oracle", "spark_rows": len(sdf),
+            report[name].update({"status": "no_oracle", "spark_rows": len(sdf),
                             "rows_match": None, "schema_match": None,
-                            "hash_match": None, "err": None}
+                            "hash_match": None, "err": None})
             continue
         odf = con.execute(os_[name]).df()
         ok_rows = len(sdf) == len(odf)
@@ -101,17 +106,17 @@ def main() -> int:
         except Exception as ex:
             print(f"{name}: CANONICALIZE FAILED: {type(ex).__name__}: {ex}")
             fails.append(name)
-            report[name] = {"status": "err", "spark_rows": len(sdf),
-                            "err": f"{type(ex).__name__}: {ex}"}
+            report[name].update({"status": "err", "spark_rows": len(sdf),
+                            "err": f"{type(ex).__name__}: {ex}"})
             continue
         status = "OK" if (ok_rows and ok_schema and ok_hash) else "MISMATCH"
         print(f"{name}: spark_rows={len(sdf)} oracle_rows={len(odf)} "
               f"schema={'ok' if ok_schema else sorted(sdf.columns) + ['|'] + sorted(odf.columns)} "
               f"hash={'ok' if ok_hash else 'DIFF'} -> {status}")
-        report[name] = {"status": status.lower(), "rows_match": ok_rows,
+        report[name].update({"status": status.lower(), "rows_match": ok_rows,
                         "schema_match": ok_schema, "hash_match": ok_hash,
                         "spark_rows": len(sdf), "oracle_rows": len(odf),
-                        "err": None}
+                        "err": None})
         if status != "OK":
             fails.append(name)
             if ok_schema:

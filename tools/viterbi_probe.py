@@ -7,8 +7,7 @@ directly — the hypothesized limiter of the 8->32 scaling row
 (BENCH/BASELINE.md).
 
 Usage: python tools/viterbi_probe.py [kernel] [n_procs] [reps]
-  kernel: 'cube' (materialized emission cube, r2 baseline),
-          'fused' (class-indicator fused kernel, r3) or
+  kernel: 'cube' (materialized emission cube, r2 baseline) or
           'closed' (maximal-run closed form, r6 — no DP)
 """
 
@@ -30,6 +29,7 @@ def _work(arg):
     import numpy as np
 
     from ner_funtool_spark.functions.crf import (
+        bmes_tags_from_classes,
         bmes_transitions,
         viterbi_decode_batch,
     )
@@ -44,18 +44,16 @@ def _work(arg):
         if kernel == "cube":
             em = class_emissions(cls, NT)
             out = viterbi_decode_batch(em, trans, lens, start, end)
-        elif kernel == "closed":
-            from ner_funtool_spark.functions.crf import bmes_tags_from_classes
-            out = bmes_tags_from_classes(cls, lens)
         else:
-            from ner_funtool_spark.functions.crf import viterbi_decode_classes
-            out = viterbi_decode_classes(cls, NT, trans, lens, start, end)
+            out = bmes_tags_from_classes(cls, lens)
     dt = time.perf_counter() - t0
     return dt, int(out.sum())
 
 
 def main() -> int:
     kernel = sys.argv[1] if len(sys.argv) > 1 else "cube"
+    if kernel not in ("cube", "closed"):
+        raise SystemExit(f"unknown kernel {kernel!r}: use 'cube' or 'closed'")
     n_procs = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     # single-process reference
