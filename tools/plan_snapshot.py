@@ -61,6 +61,14 @@ PLAN_QUERIES = [
     # co-mention join subtree the layout exists for
     "kg_comention_store",
     "kg_comention_pmi_store",
+    # every top-k form of operators/similarity.py, so a change to the
+    # shared rank/re-rank helpers shows up as a changed plan here
+    "ann_topk_lsh",
+    "ann_topk_lsh_multiprobe",
+    "ann_topk_ivf",
+    "ann_topk_pq",
+    "ann_topk_ivf_pq",
+    "neardup_cosine",
 ]
 
 
