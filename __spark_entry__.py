@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -393,6 +394,31 @@ def _q_dedup_keep_docs_longest(spark, sf_dir):
     return kept.select("doc_id", "source", "lang", "n_chars")
 
 
+def _violations(df: DataFrame, checks, *cols) -> DataFrame:
+    """Violation rows of the structural gates: for each ``(name,
+    condition)`` check, every row of ``df`` meeting the condition as
+    (invariant=name, *cols).  The gates' oracle is the typed empty set,
+    so the driver's rows+schema+hash gate proves every check holds."""
+    return reduce(DataFrame.unionAll, [
+        df.filter(cond).select(F.lit(name).alias("invariant"), *cols)
+        for name, cond in checks
+    ])
+
+
+def _topk_violations(topk: DataFrame) -> DataFrame:
+    """rank_bounds / topk_size violation rows of a trained top-k frame:
+    ranks in 1..ANN_K and at most ANN_K rows per query."""
+    k = F.lit(ANN_K).cast("bigint").alias("baseline")
+    sizes = topk.groupBy("query_id").agg(F.count("*").alias("n"))
+    return _violations(
+        topk, [("rank_bounds", (F.col("rank") < 1) | (F.col("rank") > ANN_K))],
+        F.col("rank").cast("bigint").alias("value"), k,
+    ).unionByName(_violations(
+        sizes, [("topk_size", F.col("n") > ANN_K)],
+        F.col("n").cast("bigint").alias("value"), k,
+    ))
+
+
 def _q_ann_ivf_trained_invariants(spark, sf_dir):
     """Driver gate over the TRAINED IVF path (VERDICT r2 item 5).
     Q:ann_topk_ivf uses seeded anchors because its oracle embeds
@@ -447,26 +473,13 @@ def _q_ann_ivf_trained_invariants(spark, sf_dir):
             F.col("dim").cast("bigint").alias("baseline"),
         )
     )
-    rank_viol = ivf_t.filter(
-        (F.col("rank") < 1) | (F.col("rank") > ANN_K)
-    ).select(
-        F.lit("rank_bounds").alias("invariant"),
-        F.col("rank").cast("bigint").alias("value"),
-        F.lit(ANN_K).cast("bigint").alias("baseline"),
-    )
-    size_viol = (
-        ivf_t.groupBy("query_id").agg(F.count("*").alias("n"))
-        .filter(F.col("n") > ANN_K)
-        .select(
-            F.lit("topk_size").alias("invariant"),
-            F.col("n").cast("bigint").alias("value"),
-            F.lit(ANN_K).cast("bigint").alias("baseline"),
-        )
-    )
-    return (
+    # materialize eagerly so the cached trained top-k can be released
+    out = (
         recall_viol.unionByName(shape_viol)
-        .unionByName(rank_viol).unionByName(size_viol)
-    )
+        .unionByName(_topk_violations(ivf_t))
+    ).localCheckpoint(eager=True)
+    ivf_t.unpersist()
+    return out
 
 
 SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -610,15 +623,18 @@ def _q_kg_mentions_cascade(spark, sf_dir):
     return m.select("repo", "path", "begin", "end", "text", "etype", "model")
 
 
-def _q_kg_mentions_neural_invariants(spark, sf_dir):
-    """Structural invariants of the neural decode path, returned as
-    VIOLATION rows — the oracle is the empty set, so the driver's
-    rows+schema+hash gate proves every invariant holds (stronger than
-    the rows-only check on kg_mentions_neural itself)."""
+def _decode_invariants(spark, sf_dir, mode: str):
+    """Structural invariants of a model decode path as violations vs
+    the empty oracle (stronger than the rows-only checks on
+    kg_mentions_neural / kg_mentions_cascade).  ``mode``: ``neural``
+    (seeded BERT BiLSTM+CRF), ``albert`` (functions/model.
+    SeededAlbertBiLSTM: factorized embedding + cross-layer parameter
+    sharing, modeling_albert.py semantics) or ``cascade`` (dual-head
+    boundary Viterbi + type argmax + trans_label)."""
     from ner_funtool_spark.config import DOC_ETYPES
 
     src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="neural")
+    m = detect_mentions(src, domain="doc", mode=mode)
     checks = [
         ("begin_nonneg", F.col("begin") < 0),
         ("end_after_begin", F.col("end") <= F.col("begin")),
@@ -628,74 +644,10 @@ def _q_kg_mentions_neural_invariants(spark, sf_dir):
             F.expr("substring(sentence, begin + 1, end - begin)") != F.col("text"),
         ),
         ("etype_known", ~F.col("etype").isin(*list(DOC_ETYPES))),
-        ("model_name", F.col("model") != F.lit("neural_doc_v1")),
+        ("model_name", F.col("model") != F.lit(f"{mode}_doc_v1")),
     ]
-    out = None
-    for cname, cond in checks:
-        v = m.filter(cond).select(
-            F.lit(cname).alias("invariant"), "repo", "path",
-            F.col("begin").alias("mbegin"), F.col("end").alias("mend"),
-        )
-        out = v if out is None else out.unionAll(v)
-    return out
-
-
-def _q_kg_mentions_albert_invariants(spark, sf_dir):
-    """Violations-vs-empty-oracle for the ALBERT-variant encoder path
-    (functions/model.SeededAlbertBiLSTM: factorized embedding +
-    cross-layer parameter sharing, modeling_albert.py semantics) —
-    same structural gates as the BERT-path invariants."""
-    from ner_funtool_spark.config import DOC_ETYPES
-
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="albert")
-    checks = [
-        ("begin_nonneg", F.col("begin") < 0),
-        ("end_after_begin", F.col("end") <= F.col("begin")),
-        ("end_within_sentence", F.col("end") > F.length("sentence")),
-        (
-            "text_matches_offsets",
-            F.expr("substring(sentence, begin + 1, end - begin)") != F.col("text"),
-        ),
-        ("etype_known", ~F.col("etype").isin(*list(DOC_ETYPES))),
-        ("model_name", F.col("model") != F.lit("albert_doc_v1")),
-    ]
-    out = None
-    for cname, cond in checks:
-        v = m.filter(cond).select(
-            F.lit(cname).alias("invariant"), "repo", "path",
-            F.col("begin").alias("mbegin"), F.col("end").alias("mend"),
-        )
-        out = v if out is None else out.unionAll(v)
-    return out
-
-
-def _q_kg_mentions_cascade_invariants(spark, sf_dir):
-    """Same violations-vs-empty-oracle pattern for the cascade decode
-    path (dual-head boundary Viterbi + type argmax + trans_label)."""
-    from ner_funtool_spark.config import DOC_ETYPES
-
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="cascade")
-    checks = [
-        ("begin_nonneg", F.col("begin") < 0),
-        ("end_after_begin", F.col("end") <= F.col("begin")),
-        ("end_within_sentence", F.col("end") > F.length("sentence")),
-        (
-            "text_matches_offsets",
-            F.expr("substring(sentence, begin + 1, end - begin)") != F.col("text"),
-        ),
-        ("etype_known", ~F.col("etype").isin(*list(DOC_ETYPES))),
-        ("model_name", F.col("model") != F.lit("cascade_doc_v1")),
-    ]
-    out = None
-    for cname, cond in checks:
-        v = m.filter(cond).select(
-            F.lit(cname).alias("invariant"), "repo", "path",
-            F.col("begin").alias("mbegin"), F.col("end").alias("mend"),
-        )
-        out = v if out is None else out.unionAll(v)
-    return out
+    return _violations(m, checks, "repo", "path", F.col("begin").alias("mbegin"),
+                       F.col("end").alias("mend"))
 
 
 def _q_wordpiece_invariants(spark, sf_dir):
@@ -724,13 +676,7 @@ def _q_wordpiece_invariants(spark, sf_dir):
         ("tokens_match_mask", F.size("tokens") != n_tok),
         ("pieces_ge_words", n_tok < F.least(F.col("n_words") + 2, F.lit(64))),
     ]
-    out = None
-    for cname, cond in checks:
-        v = f.filter(cond).select(
-            F.lit(cname).alias("invariant"), F.col("doc_id"),
-        )
-        out = v if out is None else out.unionAll(v)
-    return out
+    return _violations(f, checks, F.col("doc_id"))
 
 
 def _wordpiece_feats_arrays(spark, sf_dir, word_suffix: str = "",
@@ -1541,28 +1487,12 @@ def _q_ann_pq_trained_invariants(spark, sf_dir):
             F.lit(1).cast("bigint").alias("baseline"),
         )
     )
-    # persisted: rank_viol and size_viol both read it (the IVF sibling
-    # does the same) — without this the trained encode+score runs twice
+    # persisted: both _topk_violations frames read it (the IVF siblings
+    # do the same) — without this the trained encode+score runs twice
     pq_t = topk_pq(emb, qids, ANN_K, codebooks=trained).persist()
-    rank_viol = pq_t.filter(
-        (F.col("rank") < 1) | (F.col("rank") > ANN_K)
-    ).select(
-        F.lit("rank_bounds").alias("invariant"),
-        F.col("rank").cast("bigint").alias("value"),
-        F.lit(ANN_K).cast("bigint").alias("baseline"),
-    )
-    size_viol = (
-        pq_t.groupBy("query_id").agg(F.count("*").alias("n"))
-        .filter(F.col("n") > ANN_K)
-        .select(
-            F.lit("topk_size").alias("invariant"),
-            F.col("n").cast("bigint").alias("value"),
-            F.lit(ANN_K).cast("bigint").alias("baseline"),
-        )
-    )
     out = (
         distortion_viol.unionByName(shape_viol)
-        .unionByName(rank_viol).unionByName(size_viol)
+        .unionByName(_topk_violations(pq_t))
     )
     # eagerly materialize the union, then release the cached trained
     # top-k — persist hygiene as in triangle_counts/pagerank (without
@@ -1686,25 +1616,9 @@ def _q_ann_ivf_opq_trained_invariants(spark, sf_dir):
             F.col("dim").cast("bigint").alias("baseline"),
         )
     )
-    rank_viol = composed.filter(
-        (F.col("rank") < 1) | (F.col("rank") > ANN_K)
-    ).select(
-        F.lit("rank_bounds").alias("invariant"),
-        F.col("rank").cast("bigint").alias("value"),
-        F.lit(ANN_K).cast("bigint").alias("baseline"),
-    )
-    size_viol = (
-        composed.groupBy("query_id").agg(F.count("*").alias("n"))
-        .filter(F.col("n") > ANN_K)
-        .select(
-            F.lit("topk_size").alias("invariant"),
-            F.col("n").cast("bigint").alias("value"),
-            F.lit(ANN_K).cast("bigint").alias("baseline"),
-        )
-    )
     out = (
         recall_viol.unionByName(shape_viol)
-        .unionByName(rank_viol).unionByName(size_viol)
+        .unionByName(_topk_violations(composed))
     ).localCheckpoint(eager=True)
     composed.unpersist()
     rotated.unpersist()
@@ -1857,9 +1771,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_trained_invariants": _q_ann_ivf_trained_invariants,
         "kg_mentions_neural": _q_kg_mentions_neural,
         "kg_mentions_cascade": _q_kg_mentions_cascade,
-        "kg_mentions_neural_invariants": _q_kg_mentions_neural_invariants,
-        "kg_mentions_albert_invariants": _q_kg_mentions_albert_invariants,
-        "kg_mentions_cascade_invariants": _q_kg_mentions_cascade_invariants,
+        "kg_mentions_neural_invariants": partial(_decode_invariants, mode="neural"),
+        "kg_mentions_albert_invariants": partial(_decode_invariants, mode="albert"),
+        "kg_mentions_cascade_invariants": partial(_decode_invariants, mode="cascade"),
         "wordpiece_features": _q_wordpiece_features,
         "wordpiece_features_multipiece": _q_wordpiece_features_multipiece,
         "wordpiece_invariants": _q_wordpiece_invariants,

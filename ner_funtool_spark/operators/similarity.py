@@ -1,30 +1,34 @@
 """Similarity search over the embeddings table (array<float> column).
 
-Two paths, same contract (query ids -> top-k neighbors by cosine):
+Top-k paths, same contract (query ids -> ranked neighbors):
 
 * brute-force — exact baseline.  The dot product is a JVM-side
   ``aggregate(zip_with(a, b, *), +)`` expression (whole-stage codegen,
   no Python), with the query side broadcast: one pass over the corpus
   per batch of queries, which is also the correct 100 TB plan when the
   query set is small.
-* random-hyperplane LSH — the scale path: sign-bit bucket from H
-  seeded hyperplanes (literal constants shared with the DuckDB oracle),
-  equi-join on the bucket, exact cosine re-rank inside the bucket.
-  Recall < 1 by design; the oracle mirrors the same bucketing so the
-  comparison is still exact.
+* scale paths — random-hyperplane LSH (seeded literal planes shared
+  with the DuckDB oracle), IVF lists, and PQ/OPQ asymmetric distance
+  over 8 code bytes per vector.  Recall < 1 by design; each oracle
+  mirrors the same candidate rule, so the comparison is still exact.
 
-Also near_duplicates_cosine: all pairs above a cosine threshold,
-LSH-bucketed candidates + exact verify (the embedding near-dup detector
-of the dedup suite).
+Also near_duplicates_cosine (all pairs above a cosine threshold,
+LSH-bucketed candidates + exact verify) and the trainers behind the
+seeded index state (kmeans_centroids, pq_train_codebooks, opq_train).
 
-Cross-engine determinism: every top-k window here orders by the
-6-decimal ROUNDED score with neighbor-id tie-break, and the DuckDB
-oracles order the same way (r2 ADVICE item 1).  Ordering by the
-unrounded cosine would require bit-identical doubles across engines,
-which the differing summation orders (Spark left-fold vs DuckDB
-aggregate) do not guarantee; rounding absorbs the ulp noise and the id
-tie-break makes the rank total.  Thresholds (near-dup) still compare
-the unrounded value on both sides per the repo rule.
+Rank rule (``_ranked``, every top-k form): order by the 6-decimal
+ROUNDED score (cosine descending, ADC distance ascending), then
+neighbor id, and the DuckDB oracles order the same way (r2 ADVICE
+item 1).  Ordering by the unrounded value would require bit-identical
+doubles across engines, which the differing summation orders (Spark
+left-fold vs DuckDB aggregate) do not guarantee; rounding absorbs the
+ulp noise and the id tie-break makes the rank total.  Thresholds
+(near-dup) still compare the unrounded value on both sides.
+
+Shared cores: ``_ranked``; ``_cosine_topk`` (exact cosine re-rank of a
+candidate side against a broadcast query side); ``_subvectors`` (the
+cast-once PQ subvector cut); ``_lloyd`` (Lloyd's iterations over
+driver-held codebooks, behind both k-means trainers).
 """
 
 from __future__ import annotations
@@ -34,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import SEED
+from .graph import _checkpoint_rdd
 
 LSH_PLANES = 8  # 2^8 buckets
 EMBED_DIM = 64  # driver embeddings table dimension
@@ -57,13 +62,11 @@ def _f64(a):
     makes both engines do identical double math on the same
     32-bit-exact values; casting a double array is a no-op.
 
-    r6 perf note: every call site now pre-casts the embedding ONCE in
-    the projection that feeds a join/crossJoin (see the ``_f64`` calls
-    in the source-table selects), so inside the per-pair kernels this
-    cast is a no-op that Catalyst's SimplifyCasts removes — the r5
-    regression was this cast re-running per join-OUTPUT row (16x per
-    (id, m) in the PQ codebook join).  Values are unchanged either
-    way: cast(slice(x)) == slice(cast(x)) element-for-element."""
+    r6 perf note: every call site pre-casts the embedding ONCE in the
+    projection that feeds a join/crossJoin (``_bucketed``,
+    ``_subvectors`` and the top-k side selects), so inside the per-pair
+    kernels this cast is a no-op that Catalyst's SimplifyCasts removes
+    (see ``_subvectors`` for the r5 regression it avoids)."""
     return a.cast("array<double>")
 
 
@@ -86,38 +89,51 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def topk_bruteforce(embeddings: DataFrame, query_ids: list[int], k: int,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(query_id, neighbor_id, score, rank) exact top-k by cosine.
+def _ranked(scored: DataFrame, k: int, score: str, order) -> DataFrame:
+    """(query_id, neighbor_id, ``score``, rank): the ``k`` best rows per
+    query under the module's rank rule — ``order`` (F.desc / F.asc) of
+    the already-rounded ``score``, then neighbor id ascending."""
+    w = Window.partitionBy("query_id").orderBy(order(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, F.col("rank").cast("int").alias("rank"))
+    )
 
-    Ties broken by neighbor id ascending so results are deterministic.
 
-    Perf shape (guide §2.3/§4): the double cast AND each side's norm
-    are computed once per ROW in the projections feeding the join, not
-    once per PAIR — the per-pair work is exactly one dot-product fold
-    plus one divide (identical doubles: same fold over the same values,
-    evaluated earlier).
-    """
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), _f64(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), _f64(F.col(vec_col)).alias("nv")
-    ).withColumn("nn", _norm(F.col("nv")))
+def _cosine_topk(c: DataFrame, q: DataFrame, k: int, on=None) -> DataFrame:
+    """Exact cosine top-k of the candidate side ``c`` (neighbor_id, nv)
+    against the broadcast query side ``q`` (query_id, qv), equi-joined
+    on ``on`` (a crossJoin when None), self-pairs dropped.  Both vector
+    columns arrive double-cast; each side's norm is computed once per
+    ROW before the join, so per pair only the dot fold and a divide
+    remain (guide §2.3/§4)."""
+    c = c.withColumn("nn", _norm(F.col("nv")))
+    q = F.broadcast(q.withColumn("qn", _norm(F.col("qv"))))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        (c.crossJoin(q) if on is None else c.join(q, on))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "score",
             F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 6),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
+    return _ranked(scored, k, "score", F.desc)
+
+
+def topk_bruteforce(embeddings: DataFrame, query_ids: list[int], k: int,
+                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """(query_id, neighbor_id, score, rank) exact top-k by cosine.
+
+    Ties broken by neighbor id ascending so results are deterministic.
+    """
+    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), _f64(F.col(vec_col)).alias("qv")
     )
+    c = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), _f64(F.col(vec_col)).alias("nv")
+    )
+    return _cosine_topk(c, q, k)
 
 
 def lsh_bucket(vec_col, planes: list[list[float]]):
@@ -130,40 +146,30 @@ def lsh_bucket(vec_col, planes: list[list[float]]):
     return bucket
 
 
+def _bucketed(embeddings: DataFrame, id_col: str, vec_col: str,
+              n_planes: int, seed: int) -> DataFrame:
+    """(id, vec, bucket): the vector cast to double ONCE per row, ahead
+    of the n_planes plane-dot bucket projection and every kernel after
+    it."""
+    planes = hyperplanes(n_planes, seed=seed)
+    return embeddings.select(
+        F.col(id_col), _f64(F.col(vec_col)).alias(vec_col)
+    ).withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
+
+
 def topk_lsh(embeddings: DataFrame, query_ids: list[int], k: int,
              id_col: str = "vec_id", vec_col: str = "embedding",
              n_planes: int = LSH_PLANES, seed: int = SEED) -> DataFrame:
     """Approximate top-k: exact cosine re-rank within the query's LSH
-    bucket only (same-bucket recall; the oracle mirrors the bucketing).
-
-    The embedding is cast to double ONCE per row (before the 8
-    plane-dot bucket projection), and each side's norm is computed in
-    its pre-join projection — per candidate pair only the dot fold and
-    a divide remain (identical doubles, guide §2.3/§4)."""
-    planes = hyperplanes(n_planes, seed=seed)
-    e = embeddings.select(
-        F.col(id_col), _f64(F.col(vec_col)).alias(vec_col)
-    ).withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
+    bucket only (same-bucket recall; the oracle mirrors the bucketing)."""
+    e = _bucketed(embeddings, id_col, vec_col, n_planes, seed)
     q = e.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"
-    ).withColumn("qn", _norm(F.col("qv")))
+    )
     c = e.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), "bucket"
-    ).withColumn("nn", _norm(F.col("nv")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 6),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    return _cosine_topk(c, q, k, "bucket")
 
 
 def topk_lsh_multiprobe(embeddings: DataFrame, query_ids: list[int], k: int,
@@ -176,10 +182,7 @@ def topk_lsh_multiprobe(embeddings: DataFrame, query_ids: list[int], k: int,
     Corpus rows still carry exactly one bucket, so candidates are
     naturally distinct; exact cosine re-ranks within the probed set.
     """
-    planes = hyperplanes(n_planes, seed=seed)
-    e = embeddings.select(
-        F.col(id_col), _f64(F.col(vec_col)).alias(vec_col)
-    ).withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
+    e = _bucketed(embeddings, id_col, vec_col, n_planes, seed)
     probes = F.explode(
         F.array(
             F.col("bucket"),
@@ -189,24 +192,11 @@ def topk_lsh_multiprobe(embeddings: DataFrame, query_ids: list[int], k: int,
     q = e.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         probes.alias("bucket"),
-    ).withColumn("qn", _norm(F.col("qv")))
+    )
     c = e.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), "bucket"
-    ).withColumn("nn", _norm(F.col("nv")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 6),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    return _cosine_topk(c, q, k, "bucket")
 
 
 IVF_CENTROIDS = 8
@@ -277,61 +267,36 @@ def topk_ivf(embeddings: DataFrame, query_ids: list[int], k: int,
     corpus = assign_clusters(embeddings, centroids, id_col, vec_col, nprobe=1)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), "cid"
-    ).withColumn("nn", _norm(F.col("nv")))
+    )
     q = assign_clusters(
         embeddings.filter(F.col(id_col).isin(query_ids)),
         centroids, id_col, vec_col, nprobe=nprobe,
-    ).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cid"
-    ).withColumn("qn", _norm(F.col("qv")))
-    scored = (
-        c.join(F.broadcast(q), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    ).select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cid")
+    return _cosine_topk(c, q, k, "cid")
 
 
 def kmeans_centroids(embeddings: DataFrame, n_clusters: int = IVF_CENTROIDS,
                      iterations: int = 5, id_col: str = "vec_id",
                      vec_col: str = "embedding") -> list[list[float]]:
     """Distributed Lloyd's k-means (cosine assignment, mean update) —
-    the trainer behind topk_ivf for real corpora.
+    the trainer behind topk_ivf for real corpora: ``_lloyd`` with one
+    codebook whose assignment is ``assign_clusters``.
 
     Deterministic: init = the ``n_clusters`` lowest-id vectors; each
     iteration is one broadcast crossJoin assignment + one element-wise
-    mean (posexplode + groupBy(cid, pos)); the k x dim centroid table
-    collects to the driver per iteration (it is broadcast state, not
-    data).  Empty clusters keep their previous centroid."""
+    mean; the k x dim centroid table collects to the driver per
+    iteration (it is broadcast state, not data).  Empty clusters keep
+    their previous centroid."""
     first = embeddings.orderBy(id_col).limit(n_clusters).select(vec_col).collect()
-    centroids = [[float(v) for v in r[vec_col]] for r in first]
-    dim = len(centroids[0])
-    for _ in range(iterations):
-        assigned = assign_clusters(embeddings, centroids, id_col, vec_col)
-        means = (
-            assigned.select("cid", F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("xs"))
-            .select("cid", F.transform("xs", lambda x: x["m"]).alias("cvec"))
-            .collect()
+
+    def assign(cb):
+        return assign_clusters(embeddings, cb[0], id_col, vec_col).select(
+            F.lit(0).alias("m"), F.col("cid").alias("code"),
+            F.col(vec_col).alias("sv"),
         )
-        new = list(centroids)
-        for r in means:
-            vec = [float(v) for v in r["cvec"]]
-            if len(vec) == dim:
-                new[r["cid"]] = vec
-        centroids = new
-    return centroids
+
+    init = [[[float(v) for v in r[vec_col]] for r in first]]
+    return _lloyd(init, assign, iterations)[0]
 
 
 def near_duplicates_cosine(embeddings: DataFrame, threshold: float,
@@ -345,25 +310,18 @@ def near_duplicates_cosine(embeddings: DataFrame, threshold: float,
     baseline.
     """
     if exact:
-        base = embeddings.select(F.col(id_col), _f64(F.col(vec_col)).alias(vec_col))
-        a = base.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va")) \
-            .withColumn("na", _norm(F.col("va")))
-        b = base.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb")) \
-            .withColumn("nb", _norm(F.col("vb")))
-        pairs = a.crossJoin(b).filter(F.col("a") < F.col("b"))
+        e = embeddings.select(F.col(id_col), _f64(F.col(vec_col)).alias(vec_col))
     else:
-        planes = hyperplanes(n_planes, seed=seed)
-        e = embeddings.select(
-            F.col(id_col), _f64(F.col(vec_col)).alias(vec_col)
-        ).withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
-        a = e.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "bucket") \
-            .withColumn("na", _norm(F.col("va")))
-        b = e.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), "bucket") \
-            .withColumn("nb", _norm(F.col("vb")))
-        pairs = a.join(b, "bucket").filter(F.col("a") < F.col("b"))
-    # cast + norms hoisted to the per-row projections above; the raw
-    # score is computed ONCE (threshold compares the unrounded value,
-    # the reported column rounds it — the repo's cross-engine rule)
+        e = _bucketed(embeddings, id_col, vec_col, n_planes, seed)
+    on = [] if exact else ["bucket"]
+    a = e.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), *on) \
+        .withColumn("na", _norm(F.col("va")))
+    b = e.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), *on) \
+        .withColumn("nb", _norm(F.col("vb")))
+    pairs = (a.join(b, on) if on else a.crossJoin(b)).filter(F.col("a") < F.col("b"))
+    # norms hoisted to the per-row projections above; the raw score is
+    # computed ONCE (threshold compares the unrounded value, the
+    # reported column rounds it — the repo's cross-engine rule)
     sc = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         pairs.withColumn("_sc", sc)
@@ -408,6 +366,37 @@ def _pq_codebook_df(spark, codebooks):
     )
 
 
+def _subvectors(df: DataFrame, id_col: str, vec_col: str, m: int,
+                subdim: int, out_id: str) -> DataFrame:
+    """(out_id, m, sv): each vector cut into ``m`` subvectors of
+    ``subdim`` doubles.  The cast to double runs ONCE per vector BEFORE
+    the slice/explode: the r5 form cast ``sv`` inside _l2sq per
+    codebook-join OUTPUT row (16x per (id, m)) — the ann_topk_pq ~4x
+    regression.  Identical values: cast(slice(x)) == slice(cast(x))."""
+    v64 = _f64(F.col(vec_col))
+    subs = F.array(*[
+        F.struct(F.lit(i).alias("m"),
+                 F.slice(v64, i * subdim + 1, subdim).alias("sv"))
+        for i in range(m)
+    ])
+    return df.select(F.col(id_col).alias(out_id), F.explode(subs).alias("s")) \
+        .select(out_id, F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
+
+
+def _nearest_codes(sub: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
+    """(id, m, code): per (id, m) the codeword nearest ``sv`` in squared
+    L2, picked by a min-struct (distance then code id — a total order,
+    deterministic, oracle-mirrored).  No UDF: the distance is a codegen
+    fold against the broadcast codebook."""
+    return (
+        sub.join(F.broadcast(cb), "m")
+        .withColumn("d", _l2sq(F.col("sv"), F.col("cvec")))
+        .groupBy(id_col, "m")
+        .agg(F.min(F.struct(F.col("d").alias("d"), F.col("j").alias("j"))).alias("mn"))
+        .select(id_col, "m", F.col("mn.j").alias("code"))
+    )
+
+
 def pq_encode(embeddings: DataFrame, codebooks=None, id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """(id, m, code): each vector compressed to PQ_M code ids — 8 bytes
@@ -415,35 +404,14 @@ def pq_encode(embeddings: DataFrame, codebooks=None, id_col: str = "vec_id",
     embedding corpus live in executor memory for candidate scoring.
 
     Relational shape: explode each vector into its M subvectors, join
-    the 128-row codebook (broadcast), argmin per (id, m) via a
-    min-struct (squared-L2 then code id — total order, deterministic,
-    oracle-mirrored).  No UDF: the distance is a codegen fold.
+    the 128-row codebook (broadcast), argmin per (id, m).
     """
     if codebooks is None:
         codebooks = seeded_pq_codebooks()
-    spark = embeddings.sparkSession
-    cb = _pq_codebook_df(spark, codebooks)
+    cb = _pq_codebook_df(embeddings.sparkSession, codebooks)
     subdim = len(codebooks[0][0])  # derive the stride from the codebook
-    # cast to double ONCE per vector BEFORE the subspace slice/explode:
-    # the r5 form cast `sv` inside _l2sq per codebook-join OUTPUT row
-    # (16x per (id, m)) — the ann_topk_pq ~4x regression.  Identical
-    # values: cast(slice(x)) == slice(cast(x)).
-    v64 = _f64(F.col(vec_col))
-    subs = F.array(*[
-        F.struct(F.lit(m).alias("m"),
-                 F.slice(v64, m * subdim + 1, subdim).alias("sv"))
-        for m in range(len(codebooks))
-    ])
-    sub = embeddings.select(F.col(id_col), F.explode(subs).alias("s")) \
-        .select(id_col, F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
-    dist = sub.join(F.broadcast(cb), "m").withColumn(
-        "d", _l2sq(F.col("sv"), F.col("cvec"))
-    )
-    return (
-        dist.groupBy(id_col, "m")
-        .agg(F.min(F.struct(F.col("d").alias("d"), F.col("j").alias("j"))).alias("mn"))
-        .select(id_col, "m", F.col("mn.j").alias("code"))
-    )
+    sub = _subvectors(embeddings, id_col, vec_col, len(codebooks), subdim, id_col)
+    return _nearest_codes(sub, cb, id_col)
 
 
 def _pq_query_table(embeddings: DataFrame, query_ids: list[int], codebooks,
@@ -452,19 +420,10 @@ def _pq_query_table(embeddings: DataFrame, query_ids: list[int], codebooks,
     """(query_id, m, code, qd): each query's per-subspace distance
     table against the full codebook — M*K rows per query, the only
     broadcast state ADC scoring needs."""
-    spark = embeddings.sparkSession
-    cb = _pq_codebook_df(spark, codebooks)
-    subdim = len(codebooks[0][0])
-    v64 = _f64(F.col(vec_col))  # cast once per query vector (pq_encode note)
-    qsubs = F.array(*[
-        F.struct(F.lit(m).alias("m"),
-                 F.slice(v64, m * subdim + 1, subdim).alias("sv"))
-        for m in range(len(codebooks))
-    ])
+    cb = _pq_codebook_df(embeddings.sparkSession, codebooks)
     return (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_id"), F.explode(qsubs).alias("s"))
-        .select("query_id", F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
+        _subvectors(embeddings.filter(F.col(id_col).isin(query_ids)), id_col,
+                    vec_col, len(codebooks), len(codebooks[0][0]), "query_id")
         .join(F.broadcast(cb), "m")
         .select("query_id", "m", F.col("j").alias("code"),
                 _l2sq(F.col("sv"), F.col("cvec")).alias("qd"))
@@ -483,9 +442,7 @@ def topk_pq(embeddings: DataFrame, query_ids: list[int], k: int,
     is an equi-join: codes ⋈ query-table on (m, code), then one
     aggregation — at scale this composes with the IVF lists (probe
     cluster -> ADC-score its list -> exact re-rank survivors); here the
-    full-scan form is the oracle-checked unit.  Rank orders by the
-    ROUNDED adist + id tie-break on both engines (the cross-engine
-    float rule: the 8-way sum's association order is engine-internal).
+    full-scan form is the oracle-checked unit.
     """
     if codebooks is None:
         codebooks = seeded_pq_codebooks()
@@ -498,13 +455,7 @@ def topk_pq(embeddings: DataFrame, query_ids: list[int], k: int,
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("qd"), 6).alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    return _ranked(scored, k, "adist", F.asc)
 
 
 def topk_ivf_pq(embeddings: DataFrame, query_ids: list[int], k: int,
@@ -518,8 +469,7 @@ def topk_ivf_pq(embeddings: DataFrame, query_ids: list[int], k: int,
     (corpus/n_lists)*nprobe candidates x 8 integer lookups, and the
     candidate state is 64x smaller than the float vectors.
 
-    (query_id, neighbor_id, adist, rank) — rank by the ROUNDED ADC
-    distance + id tie-break, both engines.
+    (query_id, neighbor_id, adist, rank), adist ascending.
     """
     if centroids is None:
         centroids = seeded_centroids()
@@ -545,13 +495,39 @@ def topk_ivf_pq(embeddings: DataFrame, query_ids: list[int], k: int,
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("qd"), 6).alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
+    return _ranked(scored, k, "adist", F.asc)
+
+
+def _mean_vectors(rows: DataFrame, keys: list[str], vec: str) -> list:
+    """Collected (*keys, cvec) rows: the element-wise mean of the
+    ``vec`` arrays per ``keys`` group (posexplode + groupBy(*keys, pos),
+    reassembled in position order)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist",
-                F.col("rank").cast("int").alias("rank"))
+        rows.select(*keys, F.posexplode(vec).alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("v").alias("mv"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "mv"))).alias("xs"))
+        .select(*keys, F.transform("xs", lambda x: x["mv"]).alias("cvec"))
+        .collect()
     )
+
+
+def _lloyd(codebooks, assign, iterations: int):
+    """Lloyd's iterations over driver-held codebooks indexed
+    ``[m][code]``.  ``assign(codebooks)`` returns one (m, code, sv) row
+    per point and subspace; each iteration moves every code to the
+    mean of its points, and a code that gets no points keeps its
+    vector.  Only the codebooks reach the driver (broadcast state, not
+    data)."""
+    for _ in range(iterations):
+        new = [list(sub) for sub in codebooks]
+        for r in _mean_vectors(assign(codebooks), ["m", "code"], "sv"):
+            vec = [float(v) for v in r["cvec"]]
+            if len(vec) == len(new[r["m"]][r["code"]]):
+                new[r["m"]][r["code"]] = vec
+        codebooks = new
+    return codebooks
 
 
 def pq_train_codebooks(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
@@ -562,15 +538,15 @@ def pq_train_codebooks(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
     topk_pq for real corpora (seeded_pq_codebooks is the oracle-able
     stand-in, exactly the kmeans_centroids/seeded_centroids split).
 
-    All M subspaces train in the SAME distributed pass: the corpus is
-    exploded once into (id, m, subvector) rows, assignment is one
-    broadcast join + min-struct argmin keyed by (id, m), the update is
-    one element-wise mean per (m, code, pos).  Only the M*K*SUBDIM
-    codebook (1k floats) ever reaches the driver — broadcast state,
-    not data.  Deterministic: init from the k lowest-id vectors'
-    subvectors, or ``init_codebooks`` when warm-starting (the OPQ
-    alternation needs Lloyd to DESCEND from the current solution, not
-    restart); empty codes keep their previous centroid.
+    All M subspaces train in the SAME distributed pass (``_lloyd``):
+    the corpus is cut once into (id, m, subvector) rows, assignment is
+    one broadcast join + min-struct argmin keyed by (id, m), the update
+    is one element-wise mean per (m, code, pos).  Only the M*K*SUBDIM
+    codebook (1k floats) ever reaches the driver.  Deterministic: init
+    from the k lowest-id vectors' subvectors, or ``init_codebooks``
+    when warm-starting (the OPQ alternation needs Lloyd to DESCEND from
+    the current solution, not restart); empty codes keep their previous
+    centroid.
     """
     spark = embeddings.sparkSession
     # subspace width follows the DATA and the requested m, not the
@@ -579,53 +555,19 @@ def pq_train_codebooks(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
     # collect entirely (review finding)
     if init_codebooks is not None:
         subdim = len(init_codebooks[0][0])
+        cb = [[list(map(float, code)) for code in sc] for sc in init_codebooks]
     else:
-        subdim = len(
-            embeddings.select(vec_col).first()[vec_col]
-        ) // m
-    v64 = _f64(F.col(vec_col))  # cast once per vector (pq_encode note)
-    subs = F.array(*[
-        F.struct(F.lit(i).alias("m"),
-                 F.slice(v64, i * subdim + 1, subdim).alias("sv"))
-        for i in range(m)
-    ])
-    sub = embeddings.select(F.col(id_col).alias("vid"),
-                            F.explode(subs).alias("s")) \
-        .select("vid", F.col("s.m").alias("m"), F.col("s.sv").alias("sv")) \
-        .persist()
-    if init_codebooks is not None:
-        cb = [[list(map(float, code)) for code in sub]
-              for sub in init_codebooks]
-    else:
+        subdim = len(embeddings.select(vec_col).first()[vec_col]) // m
         first = embeddings.orderBy(id_col).limit(k).select(vec_col).collect()
         cb = [[[float(v) for v in r[vec_col][i * subdim:(i + 1) * subdim]]
                for r in first] for i in range(m)]
-    for _ in range(iterations):
-        cbdf = _pq_codebook_df(spark, cb)
-        assigned = (
-            sub.join(F.broadcast(cbdf), "m")
-            .withColumn("d", _l2sq(F.col("sv"), F.col("cvec")))
-            .groupBy("vid", "m")
-            .agg(F.min(F.struct(F.col("d").alias("d"),
-                                F.col("j").alias("j"))).alias("mn"))
-            .select("vid", "m", F.col("mn.j").alias("code"))
-        )
-        means = (
-            assigned.join(sub, ["vid", "m"])
-            .select("m", "code", F.posexplode("sv").alias("pos", "v"))
-            .groupBy("m", "code", "pos")
-            .agg(F.avg("v").alias("mv"))
-            .groupBy("m", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mv"))).alias("xs"))
-            .select("m", "code", F.transform("xs", lambda x: x["mv"]).alias("cvec"))
-            .collect()
-        )
-        new = [list(sc) for sc in cb]
-        for r in means:
-            vec = [float(v) for v in r["cvec"]]
-            if len(vec) == subdim:
-                new[r["m"]][r["code"]] = vec
-        cb = new
+    sub = _subvectors(embeddings, id_col, vec_col, m, subdim, "vid").persist()
+
+    def assign(cb):
+        codes = _nearest_codes(sub, _pq_codebook_df(spark, cb), "vid")
+        return codes.join(sub, ["vid", "m"])
+
+    cb = _lloyd(cb, assign, iterations)
     sub.unpersist()
     return cb
 
@@ -637,18 +579,9 @@ def pq_distortion(embeddings: DataFrame, codebooks,
     subspace) of the squared-L2 distance to the nearest codeword — the
     objective k-means minimizes, the gate metric for trained vs seeded
     codebooks."""
-    spark = embeddings.sparkSession
-    cb = _pq_codebook_df(spark, codebooks)
-    subdim = len(codebooks[0][0])
-    v64 = _f64(F.col(vec_col))  # cast once per vector (pq_encode note)
-    subs = F.array(*[
-        F.struct(F.lit(i).alias("m"),
-                 F.slice(v64, i * subdim + 1, subdim).alias("sv"))
-        for i in range(len(codebooks))
-    ])
-    sub = embeddings.select(F.col(id_col).alias("vid"),
-                            F.explode(subs).alias("s")) \
-        .select("vid", F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
+    cb = _pq_codebook_df(embeddings.sparkSession, codebooks)
+    sub = _subvectors(embeddings, id_col, vec_col, len(codebooks),
+                      len(codebooks[0][0]), "vid")
     return (
         sub.join(F.broadcast(cb), "m")
         .withColumn("d", _l2sq(F.col("sv"), F.col("cvec")))
@@ -723,6 +656,14 @@ def opq_train(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
     rotated = emb
     cb = pq_train_codebooks(rotated, m=m, k=k, iterations=pq_iterations,
                             id_col=id_col, vec_col=vec_col)
+
+    def release(df):
+        # drop a superseded eager checkpoint (the identity start is the
+        # persisted corpus itself, released with ``emb`` below)
+        rdd = _checkpoint_rdd(df)
+        if rdd is not None:
+            rdd.unpersist(False)
+
     for _ in range(iterations):
         # reconstruction of each rotated vector from its codes
         enc = pq_encode(rotated, cb, id_col=id_col, vec_col=vec_col)
@@ -747,6 +688,7 @@ def opq_train(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
             M[r["p"], r["q"]] = r["s"]
         u, _, vt = np.linalg.svd(M)
         rot = u @ vt
+        release(rotated)
         rotated = rotate_embeddings(
             emb, rot.tolist(), id_col=id_col, vec_col=vec_col
         ).localCheckpoint(eager=True)
@@ -754,6 +696,7 @@ def opq_train(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
                                 iterations=pq_iterations,
                                 id_col=id_col, vec_col=vec_col,
                                 init_codebooks=cb)
+    release(rotated)
     emb.unpersist()
     return rot.tolist(), cb
 

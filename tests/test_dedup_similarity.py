@@ -463,12 +463,30 @@ def test_topk_ivf_pq_candidates_and_distances(spark):
         assert full[(q, n)] == r["adist"], (q, n)
 
 
+def _np_pq_lloyds(X, m, k, iterations):
+    """numpy reference of pq_train_codebooks: per subspace, init = the
+    first k rows' slices, squared-L2 assignment with lowest-code
+    tie-break, mean update, empty codes keep their vector."""
+    subdim = X.shape[1] // m
+    out = []
+    for i in range(m):
+        S = X[:, i * subdim:(i + 1) * subdim]
+        C = S[:k].copy()
+        for _ in range(iterations):
+            d = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            a = d.argmin(axis=1)  # argmin takes lowest index on ties
+            for j in range(k):
+                if (a == j).any():
+                    C[j] = S[a == j].mean(axis=0)
+        out.append(C)
+    return out
+
+
 def test_pq_train_codebooks_matches_numpy_and_cuts_distortion(spark):
     """Per-subspace Lloyd's replayed in numpy (same init: k lowest-id
     vectors' slices; L2 assignment, mean update, empty keeps previous);
     trained codebooks must reduce total distortion vs seeded."""
     from ner_funtool_spark.operators.similarity import (
-        PQ_SUBDIM,
         pq_distortion,
         pq_train_codebooks,
         seeded_pq_codebooks,
@@ -481,17 +499,9 @@ def test_pq_train_codebooks_matches_numpy_and_cuts_distortion(spark):
         "vec_id long, embedding array<double>",
     )
     got = np.array(pq_train_codebooks(df, k=4, iterations=3))
-
+    want = _np_pq_lloyds(X, 8, 4, 3)
     for m in range(8):
-        S = X[:, m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM]
-        C = S[:4].copy()
-        for _ in range(3):
-            d = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d.argmin(axis=1)
-            for j in range(4):
-                if (a == j).any():
-                    C[j] = S[a == j].mean(axis=0)
-        np.testing.assert_allclose(got[m], C, rtol=1e-9, err_msg=str(m))
+        np.testing.assert_allclose(got[m], want[m], rtol=1e-9, err_msg=str(m))
 
     dt = pq_distortion(df, [list(map(list, sub)) for sub in got]).first()["total"]
     ds = pq_distortion(df, seeded_pq_codebooks()).first()["total"]
@@ -546,3 +556,71 @@ def test_opq_rotation_reduces_distortion_and_is_orthogonal(spark):
     assert d_opq <= d_plain + 1e-6
     r = np.array(rot)
     assert np.abs(r @ r.T - np.eye(16)).max() < 1e-8
+
+
+def _twin_init_frame(spark, seed):
+    """Rows 0 and 1 identical: the trainers' first two init codes tie
+    for every point, ties go to code 0, and code 1 starts empty."""
+    rng = np.random.RandomState(seed)
+    X = rng.randn(24, 16) + np.repeat(np.eye(16)[:3] * 4, 8, axis=0)
+    X[1] = X[0]
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    return X, df
+
+
+def test_kmeans_empty_cluster_keeps_its_centroid(spark):
+    """The shared Lloyd core's empty-code rule, cosine case: a cluster
+    that gets no points keeps its previous centroid (numpy replay)."""
+    from ner_funtool_spark.operators.similarity import kmeans_centroids
+
+    X, df = _twin_init_frame(spark, 21)
+    one = kmeans_centroids(df, n_clusters=3, iterations=1)
+    assert one[1] == [float(v) for v in X[1]]  # empty after round 1
+    assert one[0] != one[1]
+    got = np.array(kmeans_centroids(df, n_clusters=3, iterations=3))
+    want, _ = _np_lloyds(X, 3, 3)
+    np.testing.assert_allclose(got, want, rtol=1e-9)
+
+
+def test_pq_empty_code_keeps_its_codeword(spark):
+    """The shared Lloyd core's empty-code rule, squared-L2 case: in
+    every subspace code 1 gets no points in round 1 and keeps its
+    codeword (numpy replay)."""
+    from ner_funtool_spark.operators.similarity import pq_train_codebooks
+
+    X, df = _twin_init_frame(spark, 22)
+    one = pq_train_codebooks(df, m=4, k=3, iterations=1)
+    for i in range(4):
+        assert one[i][1] == [float(v) for v in X[1, i * 4:(i + 1) * 4]], i
+        assert one[i][0] != one[i][1], i
+    got = pq_train_codebooks(df, m=4, k=3, iterations=3)
+    want = _np_pq_lloyds(X, 4, 3, 3)
+    for i in range(4):
+        np.testing.assert_allclose(np.array(got[i]), want[i], rtol=1e-9,
+                                   err_msg=str(i))
+
+
+@pytest.mark.parametrize("trainer", ["kmeans_centroids", "pq_train_codebooks",
+                                     "opq_train"])
+def test_trainers_leave_no_persistent_rdds(spark, trainer):
+    """Every trainer returns Python lists, so it must release all it
+    persists or checkpoints (opq_train's per-iteration rotated corpus
+    included)."""
+    from ner_funtool_spark.operators import similarity as S
+
+    rng = np.random.RandomState(23)
+    X = rng.randn(40, 16)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    kwargs = {"kmeans_centroids": {"n_clusters": 3, "iterations": 2},
+              "pq_train_codebooks": {"m": 4, "k": 3, "iterations": 2},
+              "opq_train": {"m": 4, "k": 3, "iterations": 2,
+                            "pq_iterations": 2}}[trainer]
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    getattr(S, trainer)(df, **kwargs)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before

@@ -210,3 +210,26 @@ def test_staging_prune_runs_once_per_process(tmp_path):
     os.makedirs(stale)
     mod._prune_stale_staging(None, prefix)
     assert os.path.exists(stale)
+
+
+def test_violations_returns_planted_bad_rows(spark):
+    """The invariant gates compare against an EMPTY oracle, so they
+    would pass vacuously if the violation builders stopped emitting
+    rows: planted bad rows must come back, tagged by their check."""
+    import __spark_entry__ as mod
+
+    df = spark.createDataFrame([(1, 5), (2, -1), (3, 11)], "id long, x long")
+    got = mod._violations(
+        df, [("x_nonneg", F.col("x") < 0), ("x_le_10", F.col("x") > 10)], "id"
+    ).collect()
+    assert sorted(tuple(r) for r in got) == [("x_le_10", 3), ("x_nonneg", 2)]
+    assert mod._violations(df, [("none", F.col("x") > 99)], "id").count() == 0
+
+    k = mod.ANN_K
+    topk = spark.createDataFrame(
+        [(0, n, n + 1) for n in range(k)] + [(0, 99, k + 1), (1, 7, 0)],
+        "query_id long, neighbor_id long, rank int",
+    )
+    bad = {tuple(r) for r in mod._topk_violations(topk).collect()}
+    assert bad == {("rank_bounds", k + 1, k), ("rank_bounds", 0, k),
+                   ("topk_size", k + 1, k)}
