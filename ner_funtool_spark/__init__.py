@@ -5,9 +5,9 @@ capabilities of the reference NER toolkit WenRichard/NER-FunTool
 (/root/reference, read-only), re-expressed Spark-first:
 
 * DataFrame/SQL logical plans, Catalyst-optimized relational glue.
-* Arrow-batched ``mapInPandas`` kernels for the tensor path
-  (encode -> emissions -> vectorized CRF Viterbi -> BMES tags),
-  never per-row Python.
+* One Arrow-batched ``mapInArrow`` tagger stage for the tensor path
+  (split lines -> encode -> emissions -> vectorized CRF Viterbi ->
+  BMES tags -> spans), never per-row Python.
 * Span extraction, entity linking (broadcast alias join + blocked
   candidate scoring), connected-components canonicalization, and a
   salted, checkpointed (subj, pred, obj) triples materialization.
@@ -17,3 +17,9 @@ reference semantics.
 """
 
 __version__ = "0.1.0"
+
+# Inside a Spark task, stop Spark re-reading its jar and pyspark.zip at
+# every task of this (reused) worker; a no-op on the driver.
+from ner_funtool_spark import _worker
+
+_worker.install()
