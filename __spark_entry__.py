@@ -35,11 +35,23 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _doc_mentions(spark: SparkSession, sf_dir: str,
+                  mode: str = "rules") -> DataFrame:
+    """The sf's documents through the flagship mention pipeline."""
+    return detect_mentions(documents_as_source(_docs(spark, sf_dir)),
+                           domain="doc", mode=mode)
+
+
+def _doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sf's documents through the flagship triple pipeline."""
+    return build_triples(documents_as_source(_docs(spark, sf_dir)),
+                         domain="doc", mode="rules")
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: documents -> segment -> Arrow CRF tagging -> mentions
     -> (subj, pred, obj) triples.  Driver checks rows>0."""
-    src = documents_as_source(_docs(spark, "/root/testdata/sf0.001"))
-    return build_triples(src, domain="doc", mode="rules").select(
+    return _doc_triples(spark, "/root/testdata/sf0.001").select(
         "subj", "pred", "obj", "repo", "content_sha"
     )
 
@@ -49,15 +61,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = documents_as_source(_docs(spark, sf_dir))
-    return build_triples(src, domain="doc", mode="rules").select(
+    return _doc_triples(spark, sf_dir).select(
         "subj", "pred", "obj", "repo", "content_sha"
     )
 
 
 def _q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return m.select(
         "repo",
         "path",
@@ -71,8 +81,7 @@ def _q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _crf_mentions_std(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-CRF pipeline mentions with compare-ready column names."""
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return m.select(
         "repo", "path",
         F.col("sent_id").cast("bigint").alias("sent_id"),
@@ -523,8 +532,7 @@ def _q_triples_degrees_salted(spark, sf_dir):
     partitioning only."""
     from ner_funtool_spark.operators.joins import salted_join
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    trip = build_triples(src, domain="doc", mode="rules").select(
+    trip = _doc_triples(spark, sf_dir).select(
         "subj", "pred", "obj"
     ).persist()
     deg = trip.groupBy("subj").agg(F.count("*").alias("out_deg"))
@@ -610,16 +618,14 @@ def _q_doc_bigrams(spark, sf_dir):
 def _q_kg_mentions_neural(spark, sf_dir):
     """Seeded BiLSTM+CRF decode path — NOT SQL-expressible (rows-only
     driver check); decode parity is pinned by fixtures in pytest."""
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="neural")
+    m = _doc_mentions(spark, sf_dir, "neural")
     return m.select("repo", "path", "begin", "end", "text", "etype", "model")
 
 
 def _q_kg_mentions_cascade(spark, sf_dir):
     """Cascade (boundary-Viterbi + type-argmax + trans_label) path —
     rows-only driver check; fixtures in pytest."""
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="cascade")
+    m = _doc_mentions(spark, sf_dir, "cascade")
     return m.select("repo", "path", "begin", "end", "text", "etype", "model")
 
 
@@ -633,8 +639,7 @@ def _decode_invariants(spark, sf_dir, mode: str):
     boundary Viterbi + type argmax + trans_label)."""
     from ner_funtool_spark.config import DOC_ETYPES
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode=mode)
+    m = _doc_mentions(spark, sf_dir, mode)
     checks = [
         ("begin_nonneg", F.col("begin") < 0),
         ("end_after_begin", F.col("end") <= F.col("begin")),
@@ -800,8 +805,7 @@ def _q_kg_comention(spark, sf_dir):
     per-document bounded self-join, one pair aggregation."""
     from ner_funtool_spark.operators.graph import comention_edges
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return comention_edges(m)
 
 
@@ -847,24 +851,33 @@ def _prune_stale_staging(spark, path_prefix: str, table_prefixes=()) -> None:
             pass
 
 
-def _mention_store(spark, sf_dir):
-    """Stage the doc-bucketed DISTINCT (repo, path, entity) mention
-    store for this sf (overwritten per call; per-PID names — the
-    _dual_triple_indexes concurrency contract); returns the table
-    name."""
+def _staging(spark, sf_dir: str, path_prefix: str, table_prefixes):
+    """The per-PID staging slot of a store-served query: table names
+    and staging path carry the sf and this process's PID — the Spark-SQL
+    catalog and /tmp are shared across processes, and a concurrent
+    driver_sim / bench pair overwriting one table mid-read yields
+    spurious mismatches (ADVICE r4).  Prunes dead PIDs' debris and
+    drops this process's tables; returns (table names, staging path)."""
     import os as _os
     import re as _re
 
+    tag = _re.sub(r"\W+", "_", sf_dir.rstrip("/")) + f"_p{_os.getpid()}"
+    _prune_stale_staging(spark, path_prefix, table_prefixes=table_prefixes)
+    tables = [f"{p}{tag}" for p in table_prefixes]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    return tables, f"{path_prefix}{tag}"
+
+
+def _mention_store(spark, sf_dir):
+    """Stage the doc-bucketed DISTINCT (repo, path, entity) mention
+    store for this sf (overwritten per call in its ``_staging`` slot);
+    returns the table name."""
     from ner_funtool_spark.sources.store import write_mentions_bucketed
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
-    tag = _re.sub(r"\W+", "_", sf_dir.rstrip("/")) + f"_p{_os.getpid()}"
-    table = f"comention_store{tag}"
-    _prune_stale_staging(spark, "/tmp/nfs_mention_store",
-                         table_prefixes=("comention_store",))
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_mentions_bucketed(m, table, f"/tmp/nfs_mention_store{tag}")
+    (table,), path = _staging(spark, sf_dir, "/tmp/nfs_mention_store",
+                              ("comention_store",))
+    write_mentions_bucketed(_doc_mentions(spark, sf_dir), table, path)
     return table
 
 
@@ -953,8 +966,7 @@ def _triples_edges(spark, sf_dir):
     cached = _EDGE_CACHE.get(key)
     if cached is not None:
         return cached
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules")
+    t = _doc_triples(spark, sf_dir)
     e = t.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).persist()
     _EDGE_CACHE[key] = e
     return e
@@ -1156,8 +1168,7 @@ def _q_triples_upsert(spark, sf_dir, bloom: bool = False):
     matched keys take the newest version, the rest pass through."""
     from ner_funtool_spark.operators.upsert import upsert_triples
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules")
+    t = _doc_triples(spark, sf_dir)
     # existing/incoming both derive from one pipeline here (a real
     # deployment reads `existing` from the store); persist so the
     # tagging stage runs once, not once per upsert branch
@@ -1192,8 +1203,7 @@ def _q_triples_history_scd2(spark, sf_dir):
     [valid_from, valid_to); the oracle replays the same MERGE in SQL."""
     from ner_funtool_spark.operators.upsert import scd2_upsert
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules")
+    t = _doc_triples(spark, sf_dir)
     base = t.select(
         "subj", "pred", "obj", "repo", "content_sha",
         F.regexp_extract(F.col("provenance.path"), r"docs/(\d+)\.txt", 1)
@@ -1246,8 +1256,7 @@ def _q_doc_len_quantiles(spark, sf_dir):
 
 
 def _q_kg_repo_rollup(spark, sf_dir):
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules")
+    t = _doc_triples(spark, sf_dir)
     return t.rollup("repo", "pred").agg(F.count("*").alias("n"))
 
 
@@ -1267,8 +1276,7 @@ def _q_kg_pred_cooccurrence(spark, sf_dir):
     subject — the schema-profiling self-join the bucketed store serves
     Exchange-free (sources/store.py); here gated on the plain layout so
     the query itself is value-hash-checked."""
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules") \
+    t = _doc_triples(spark, sf_dir) \
         .select("subj", "pred").distinct()
     a = t.select("subj", F.col("pred").alias("pred1"))
     b = t.select("subj", F.col("pred").alias("pred2"))
@@ -1287,8 +1295,7 @@ def _q_kg_two_hop(spark, sf_dir):
     oracle applies the same one."""
     from ner_funtool_spark.operators.graph import two_hop
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules")
+    t = _doc_triples(spark, sf_dir)
     return two_hop(t, max_mid_degree=TWO_HOP_MID_CAP)
 
 
@@ -1296,30 +1303,14 @@ def _dual_triple_indexes(spark, sf_dir):
     """Stage the KEY-UNIQUE triple set as the dual SPO/OPS bucketed
     indexes for this sf (overwritten per call — the queries stay
     self-contained); returns the two table names."""
-    import os as _os
-    import re as _re
-
     from ner_funtool_spark.sources.store import (
         write_triples_bucketed,
         write_triples_bucketed_by_obj,
     )
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = (
-        build_triples(src, domain="doc", mode="rules")
-        .select("subj", "pred", "obj").distinct()
-    )
-    # table names + staging path are per-PID: the Spark-SQL catalog and
-    # /tmp are shared across processes, and a concurrent driver_sim /
-    # bench pair overwriting one table mid-read yields spurious
-    # mismatches (ADVICE r4)
-    tag = _re.sub(r"\W+", "_", sf_dir.rstrip("/")) + f"_p{_os.getpid()}"
-    spo, ops = f"twohop_spo{tag}", f"twohop_ops{tag}"
-    base = f"/tmp/nfs_twohop_store{tag}"
-    _prune_stale_staging(spark, "/tmp/nfs_twohop_store",
-                         table_prefixes=("twohop_spo", "twohop_ops"))
-    spark.sql(f"DROP TABLE IF EXISTS {spo}")
-    spark.sql(f"DROP TABLE IF EXISTS {ops}")
+    t = _doc_triples(spark, sf_dir).select("subj", "pred", "obj").distinct()
+    (spo, ops), base = _staging(spark, sf_dir, "/tmp/nfs_twohop_store",
+                                ("twohop_spo", "twohop_ops"))
     write_triples_bucketed(t, spo, f"{base}/spo")
     # the OPS index holds the SAME key-unique triple set — build it
     # from the just-written SPO table instead of re-running the whole
@@ -1360,8 +1351,7 @@ def _q_kg_comention_pmi(spark, sf_dir):
     threshold n_ab >= 2; ln rounded to 6 decimals on both engines)."""
     from ner_funtool_spark.operators.graph import comention_pmi
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return comention_pmi(m, min_pair_docs=2)
 
 
@@ -1371,8 +1361,7 @@ def _q_kg_triangles(spark, sf_dir):
     enumeration — the hash match proves orientation-invariance."""
     from ner_funtool_spark.operators.graph import comention_edges, triangle_counts
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return triangle_counts(comention_edges(m))
 
 
@@ -1382,8 +1371,7 @@ def _q_kg_skew_report(spark, sf_dir):
     salted-write factors; TakeOrdered top-k, no global sort."""
     from ner_funtool_spark.operators.analytics import key_skew_report
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    t = build_triples(src, domain="doc", mode="rules")
+    t = _doc_triples(spark, sf_dir)
     return key_skew_report(t.select("subj"), "subj", top_k=20)
 
 
@@ -1633,8 +1621,7 @@ def _q_kg_communities(spark, sf_dir):
     replays every round as unrolled CTEs."""
     from ner_funtool_spark.operators.graph import comention_edges, label_propagation
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return label_propagation(comention_edges(m))
 
 
@@ -1660,8 +1647,7 @@ def _q_kg_lpa_inc_invariants(spark, sf_dir):
     claim would be false by construction."""
     from ner_funtool_spark.operators.graph import comention_edges, lpa_converged
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     e = comention_edges(m)
     cold, cold_rounds, cold_conv = lpa_converged(e)
     warm, warm_rounds, warm_conv = lpa_converged(e, init_labels=cold)
@@ -1720,8 +1706,7 @@ def _q_kg_kcore(spark, sf_dir):
     oracle replays each round as unrolled CTEs."""
     from ner_funtool_spark.operators.graph import comention_edges, kcore
 
-    src = documents_as_source(_docs(spark, sf_dir))
-    m = detect_mentions(src, domain="doc", mode="rules")
+    m = _doc_mentions(spark, sf_dir)
     return kcore(comention_edges(m), k=KCORE_K, rounds=KCORE_ROUNDS)
 
 

@@ -16,14 +16,10 @@ integer hash is our scale-path equivalent for minhash / LSH / salting.
 from __future__ import annotations
 
 import hashlib
-from typing import TYPE_CHECKING
 
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-if TYPE_CHECKING:  # pandas loads only where a function needs it
-    import pandas as pd
 
 MERSENNE_P = (1 << 31) - 1  # modulus for minhash permutations
 
@@ -33,18 +29,9 @@ def md5_int(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
 
 
-def md5_int_series(s: pd.Series) -> pd.Series:
-    return s.map(md5_int).astype("int64")
-
-
 def md5_int_col(c: Column) -> Column:
     """Spark column: same 32-bit md5 prefix hash."""
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
-def md5_int_sql_duckdb(expr: str) -> str:
-    """DuckDB SQL snippet computing the same hash of ``expr``."""
-    return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
 
 
 def md5_int2(s: str) -> int:
@@ -57,11 +44,6 @@ def md5_int2(s: str) -> int:
 def md5_int2_col(c: Column) -> Column:
     """Spark column form of :func:`md5_int2`."""
     return F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long")
-
-
-def md5_int2_sql_duckdb(expr: str) -> str:
-    """DuckDB SQL form of :func:`md5_int2`."""
-    return f"(('0x' || substr(md5({expr}), 9, 8))::BIGINT)"
 
 
 def minhash_params(k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:

@@ -175,33 +175,6 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame, id_col: str,
     )
 
 
-def minhash_signatures(documents: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = MINHASH_K,
-                       shingle_k: int = SHINGLE_K, seed: int = SEED) -> DataFrame:
-    """(id, i, sig): per-doc minhash signature — min over shingles of
-    (a_i * H(shingle) + b_i) mod p, H = cross-engine md5 hash."""
-    a_arr, b_arr = minhash_params(k, seed)
-    params = documents.sparkSession.createDataFrame(
-        [(int(i), int(a_arr[i]), int(b_arr[i])) for i in range(k)],
-        "i int, a bigint, b bigint",
-    )
-    sh = shingles(documents, text_col, id_col, shingle_k).withColumn(
-        "h", md5_int_col(F.col("shingle"))
-    )
-    # reduce h mod p BEFORE multiplying: a < 2^31 and (h % p) < 2^31 so
-    # the product stays under 2^62 — no int64 overflow in any engine
-    return (
-        sh.crossJoin(F.broadcast(params))
-        .groupBy(id_col, "i")
-        .agg(
-            F.min(
-                (F.col("a") * (F.col("h") % F.lit(MERSENNE_P)) + F.col("b"))
-                % F.lit(MERSENNE_P)
-            ).alias("sig")
-        )
-    )
-
-
 def minhash_lsh_pairs(documents: DataFrame, threshold: float,
                       text_col: str = "text", id_col: str = "doc_id",
                       k: int = MINHASH_K, bands: int = LSH_BANDS,

@@ -90,10 +90,18 @@ def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
 def degrees(edges: DataFrame, src_col: str = "src",
             dst_col: str = "dst") -> DataFrame:
     """(node, out_deg, in_deg, deg) over a multigraph edge list."""
-    out_d = edges.groupBy(F.col(src_col).alias("node")).agg(
+    return _degrees(edges, src_col, edges, dst_col)
+
+
+def _degrees(out_edges: DataFrame, src_col: str, in_edges: DataFrame,
+             dst_col: str) -> DataFrame:
+    """``degrees`` with the out-degrees counted over ``out_edges`` and
+    the in-degrees over ``in_edges`` — the same frame for an edge list,
+    the SPO and OPS indexes of the bucketed store."""
+    out_d = out_edges.groupBy(F.col(src_col).alias("node")).agg(
         F.count("*").alias("out_deg")
     )
-    in_d = edges.groupBy(F.col(dst_col).alias("node")).agg(
+    in_d = in_edges.groupBy(F.col(dst_col).alias("node")).agg(
         F.count("*").alias("in_deg")
     )
     return (
@@ -120,8 +128,17 @@ def comention_edges(mentions: DataFrame, doc_cols=("repo", "path"),
     document-length-bounded, never corpus-quadratic; one groupBy on the
     (a, b) pair aggregates the weights.
     """
+    return _comention(_doc_entities(mentions, doc_cols, text_col), doc_cols)
+
+
+def _doc_entities(mentions: DataFrame, doc_cols, text_col: str) -> DataFrame:
+    """The distinct (doc, e) projection every co-mention view reads."""
+    return mentions.select(*doc_cols, F.col(text_col).alias("e")).distinct()
+
+
+def _comention(ents: DataFrame, doc_cols) -> DataFrame:
+    """``comention_edges`` over an already-distinct (doc, e) frame."""
     d = list(doc_cols)
-    ents = mentions.select(*d, F.col(text_col).alias("e")).distinct()
     a = ents.select(*d, F.col("e").alias("a"))
     b = ents.select(*d, F.col("e").alias("b"))
     return (
@@ -149,7 +166,16 @@ def two_hop(triples: DataFrame, max_mid_degree: int | None = None) -> DataFrame:
     the DuckDB oracle — deterministic, not a silent truncation).
     """
     t = triples.select("subj", "pred", "obj").distinct()
-    e2 = t.select(
+    return _two_hop(t, t, max_mid_degree)
+
+
+def _two_hop(hop1: DataFrame, hop2: DataFrame,
+             max_mid_degree: int | None) -> DataFrame:
+    """``two_hop`` over key-unique (subj, pred, obj) frames: hop-1
+    edges end at the middle node, hop-2 edges (and the hub-degree cap)
+    start there — one distinct triple set for a triples frame, the OPS
+    and SPO indexes of the bucketed store."""
+    e2 = hop2.select(
         F.col("subj").alias("m"), F.col("pred").alias("pred2"),
         F.col("obj").alias("c"),
     )
@@ -158,7 +184,7 @@ def two_hop(triples: DataFrame, max_mid_degree: int | None = None) -> DataFrame:
         e2 = e2.join(
             mid_deg.filter(F.col("md") <= max_mid_degree).select("m"), "m"
         )
-    e1 = t.select(
+    e1 = hop1.select(
         F.col("subj").alias("a"), F.col("pred").alias("pred1"),
         F.col("obj").alias("m"),
     )
@@ -190,9 +216,15 @@ def comention_pmi(mentions: DataFrame, doc_cols=("repo", "path"),
     kg_comention's in bench); the plan-snapshot arrow_stages count is
     a textual upper bound (plans/inspect.py docstring).
     """
+    return _comention_pmi(_doc_entities(mentions, doc_cols, text_col),
+                          doc_cols, min_pair_docs)
+
+
+def _comention_pmi(ents: DataFrame, doc_cols,
+                   min_pair_docs: int) -> DataFrame:
+    """``comention_pmi`` over an already-distinct (doc, e) frame."""
     d = list(doc_cols)
-    ents = mentions.select(*d, F.col(text_col).alias("e")).distinct()
-    pairs = comention_edges(mentions, doc_cols=doc_cols, text_col=text_col)
+    pairs = _comention(ents, doc_cols)
     ent_docs = ents.groupBy("e").agg(F.count("*").alias("n_e"))
     n_docs = ents.select(*d).distinct().agg(F.count("*").alias("n_docs"))
     return (

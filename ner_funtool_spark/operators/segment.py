@@ -12,10 +12,8 @@ pushes the surrounding filters.  The flagship plan does not call
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-SENTENCE_PUNCT_RE = r"[。？?！!；;\n]"
 
 
 def segment_lines(df: DataFrame, content_col: str = "content",
@@ -31,21 +29,3 @@ def segment_lines(df: DataFrame, content_col: str = "content",
         F.posexplode(F.split(F.col(content_col), r"\n")).alias("sent_id", "sentence"),
     )
     return out.filter(F.length("sentence") > 0)
-
-
-def segment_sentences(df: DataFrame, text_col: str = "text",
-                      keep: list[str] | None = None,
-                      pattern: str = SENTENCE_PUNCT_RE) -> DataFrame:
-    """Punctuation-based sentence splitting (predict_lstm_crf.py:104)."""
-    keep = keep if keep is not None else [c for c in df.columns if c != text_col]
-    out = df.select(
-        *keep,
-        F.posexplode(F.split(F.col(text_col), pattern)).alias("sent_id", "sentence"),
-    )
-    return out.filter(F.length(F.trim("sentence")) > 0)
-
-
-def token_array(col: Column | str) -> Column:
-    """Whitespace tokenization as a JVM-side expression."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.trim(c), r"\s+")

@@ -24,6 +24,12 @@ Reference parity note: the reference materializes tag outputs to flat
 files re-read from scratch per run (run_bert_crf.py result files); a
 catalog-registered bucketed store is the Spark-native replacement for
 that re-read path.
+
+The readers state no view formula of their own: each passes its
+tables to the private helper behind the graph.py operator it serves
+(``_degrees``, ``_two_hop``, ``_comention``, ``_comention_pmi``), so
+a store-served view and its plain form are one definition over
+different inputs — only the layout, not the arithmetic, differs.
 """
 
 from __future__ import annotations
@@ -31,7 +37,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import (_comention, _comention_pmi, _degrees,
+                               _doc_entities, _two_hop)
+
 N_BUCKETS = 32
+
+
+def _write_bucketed(df: DataFrame, cols, table: str, path: str,
+                    n_buckets: int) -> None:
+    """repartition + bucketBy + sortBy on ``cols``, saved as an external
+    catalog table — one file per bucket (see the module docstring)."""
+    (
+        df.repartition(n_buckets, *cols)
+        .write.format("parquet")
+        .bucketBy(n_buckets, *cols)
+        .sortBy(*cols)
+        .option("path", path)
+        .mode("overwrite")
+        .saveAsTable(table)
+    )
 
 
 def write_triples_bucketed(triples: DataFrame, table: str, path: str,
@@ -42,15 +66,7 @@ def write_triples_bucketed(triples: DataFrame, table: str, path: str,
     subj-keyed query would pay; afterwards the catalog's bucketing spec
     makes that the LAST subj shuffle the store ever needs.
     """
-    (
-        triples.repartition(n_buckets, "subj")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "subj")
-        .sortBy("subj")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    _write_bucketed(triples, ["subj"], table, path, n_buckets)
 
 
 def write_triples_bucketed_by_obj(triples: DataFrame, table: str, path: str,
@@ -60,15 +76,7 @@ def write_triples_bucketed_by_obj(triples: DataFrame, table: str, path: str,
     store's index orderings — queries that join subj-to-obj (two-hop
     paths) read each side from the index bucketed on ITS join key, so
     the join itself plans with no Exchange on either input."""
-    (
-        triples.repartition(n_buckets, "obj")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "obj")
-        .sortBy("obj")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    _write_bucketed(triples, ["obj"], table, path, n_buckets)
 
 
 def two_hop_from_store(spark: SparkSession, spo_table: str, ops_table: str,
@@ -90,24 +98,8 @@ def two_hop_from_store(spark: SparkSession, spo_table: str, ops_table: str,
     aggregation of the (much smaller) aggregated output.  At 100 TB
     the removed shuffle is 2x the store per query; the bucketing cost
     was paid once at write."""
-    e1 = spark.table(ops_table).select(
-        F.col("subj").alias("a"), F.col("pred").alias("pred1"),
-        F.col("obj").alias("m"),
-    )
-    e2 = spark.table(spo_table).select(
-        F.col("subj").alias("m"), F.col("pred").alias("pred2"),
-        F.col("obj").alias("c"),
-    )
-    if max_mid_degree is not None:
-        mid_deg = e2.groupBy("m").agg(F.count("*").alias("md"))
-        e2 = e2.join(
-            mid_deg.filter(F.col("md") <= max_mid_degree).select("m"), "m"
-        )
-    return (
-        e1.join(e2, "m")
-        .groupBy("a", "pred1", "pred2", "c")
-        .agg(F.count("*").cast("bigint").alias("n_paths"))
-    )
+    return _two_hop(spark.table(ops_table), spark.table(spo_table),
+                    max_mid_degree)
 
 
 def degrees_from_store(spark: SparkSession, spo_table: str,
@@ -121,22 +113,8 @@ def degrees_from_store(spark: SparkSession, spo_table: str,
     ZERO Exchange (asserted in tests/test_store.py).  At store scale
     this is the difference between three shuffles of the triple table
     and none."""
-    out_d = spark.table(spo_table).groupBy(
-        F.col("subj").alias("node")
-    ).agg(F.count("*").alias("out_deg"))
-    in_d = spark.table(ops_table).groupBy(
-        F.col("obj").alias("node")
-    ).agg(F.count("*").alias("in_deg"))
-    return (
-        out_d.join(in_d, "node", "full_outer")
-        .fillna(0, subset=["out_deg", "in_deg"])
-        .select(
-            "node",
-            F.col("out_deg").cast("bigint").alias("out_deg"),
-            F.col("in_deg").cast("bigint").alias("in_deg"),
-            (F.col("out_deg") + F.col("in_deg")).cast("bigint").alias("deg"),
-        )
-    )
+    return _degrees(spark.table(spo_table), "subj", spark.table(ops_table),
+                    "obj")
 
 
 def subj_degrees_from_store(spark: SparkSession, table: str) -> DataFrame:
@@ -181,17 +159,8 @@ def write_mentions_bucketed(mentions: DataFrame, table: str, path: str,
     ``write_triples_bucketed`` economics applied to the mention
     fact table).  The store holds the distinct projection by
     construction so readers never re-add the distinct's shuffle."""
-    d = list(doc_cols)
-    ents = mentions.select(*d, F.col(text_col).alias("e")).distinct()
-    (
-        ents.repartition(n_buckets, *d)
-        .write.format("parquet")
-        .bucketBy(n_buckets, *d)
-        .sortBy(*d)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    _write_bucketed(_doc_entities(mentions, doc_cols, text_col),
+                    list(doc_cols), table, path, n_buckets)
 
 
 def comention_from_store(spark: SparkSession, table: str,
@@ -205,16 +174,7 @@ def comention_from_store(spark: SparkSession, table: str,
     only Exchange left is the final (a, b) pair aggregation of the
     (much smaller) pair list.  At store scale the removed shuffle is
     2x the mention table per query."""
-    d = list(doc_cols)
-    t = spark.table(table)
-    a = t.select(*d, F.col("e").alias("a"))
-    b = t.select(*d, F.col("e").alias("b"))
-    return (
-        a.join(b, d)
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
+    return _comention(spark.table(table), doc_cols)
 
 
 def comention_pmi_from_store(spark: SparkSession, table: str,
@@ -227,30 +187,7 @@ def comention_pmi_from_store(spark: SparkSession, table: str,
     the (entity, count) dimension, and the distinct-doc count N reads
     the bucketed distribution directly (the doc-keyed distinct's
     first aggregation is satisfied by the bucketing)."""
-    d = list(doc_cols)
-    ents = spark.table(table)
-    pairs = comention_from_store(spark, table, doc_cols=doc_cols)
-    ent_docs = ents.groupBy("e").agg(F.count("*").alias("n_e"))
-    n_docs = ents.select(*d).distinct().agg(F.count("*").alias("n_docs"))
-    return (
-        pairs.filter(F.col("n_docs") >= min_pair_docs)
-        .withColumnRenamed("n_docs", "n_ab")
-        .join(ent_docs.withColumnRenamed("e", "a")
-              .withColumnRenamed("n_e", "n_a"), "a")
-        .join(ent_docs.withColumnRenamed("e", "b")
-              .withColumnRenamed("n_e", "n_b"), "b")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "a", "b",
-            F.col("n_ab").cast("bigint").alias("n_ab"),
-            F.col("n_a").cast("bigint").alias("n_a"),
-            F.col("n_b").cast("bigint").alias("n_b"),
-            F.round(
-                F.log(F.col("n_ab") * F.col("n_docs")
-                      / (F.col("n_a") * F.col("n_b"))), 6
-            ).alias("pmi"),
-        )
-    )
+    return _comention_pmi(spark.table(table), doc_cols, min_pair_docs)
 
 
 def compact_parquet(spark: SparkSession, in_dir: str, out_dir: str,

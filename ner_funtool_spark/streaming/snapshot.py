@@ -162,8 +162,9 @@ def _apply_merge(frags: list[DataFrame], merge: dict | None) -> DataFrame:
       (degrees, co-mention n_docs);
     * ``upsert``: latest_per_key max-struct by the version column —
       MERGE-INTO semantics, newest batch wins per (subj, pred, obj)
-      (requires a globally monotone version column across batches; the
-      triples loop stamps commit='e%05d' % epoch);
+      (requires a version column whose STRING order is batch order;
+      the triples loop stamps commit='e%010d' % epoch — fixed width,
+      so epoch 100000 still sorts above 99999);
     * ``distinct``: set union (edge stores).
     """
     df = frags[0]

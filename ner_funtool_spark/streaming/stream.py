@@ -3,18 +3,32 @@
 The reference has NO streaming operators (SURVEY.md §2.10): its "online"
 mode is synchronous request/response serving (infer_online.py:221-240).
 We keep the batch pipeline pure and host it behind Structured Streaming
-where a deployment needs it:
+where a deployment needs it.  Events analytics:
 
+* ``read_events_stream`` / ``run_stream_to_memory`` — a file stream
+  over the events table and a synchronous availableNow driver for it;
 * ``windowed_event_counts`` — event-time tumbling window aggregation
-  with a watermark for late data (the standard micro-batch analytics
-  shape over the events table).
-* ``sessionize_batch`` — gap-based sessionization (lag + cumsum), the
-  batch formulation that ``session_window`` mirrors in streaming.
+  with a watermark for late data (the same plan on batch and stream);
+* ``sessionize_batch`` — gap-based sessionization (lag + cumsum), and
+  ``sessionize_stateful``, its applyInPandasWithState streaming form;
+* ``running_type_counts`` — arbitrary state across micro-batches;
+* ``dedup_stream`` — watermark-bounded exact dedup of re-deliveries.
+
+Documents:
+
 * ``stream_mentions`` — foreachBatch hosting the (pure) mention
   pipeline: each micro-batch of documents runs the same
   segment->tag->extract dataflow as the batch engine, proving the
   serving path is "just another batch over a micro-partition"
-  (SURVEY.md §1.3).
+  (SURVEY.md §1.3);
+* five KG view maintainers on ONE loop, ``_maintain`` — the document
+  stream (``DOCS_SCHEMA``), the snapshot-version base and read floor
+  (``_version_base``), the foreachBatch run and the per-batch log —
+  each passing only its own delta + merge step:
+  ``stream_triples_upsert`` (MERGE-INTO triples),
+  ``stream_degrees_ivm`` and ``stream_comention_ivm`` (additive count
+  views), ``stream_pagerank_ivm`` and ``stream_communities_ivm``
+  (warm-started fixed points over a maintained edge store).
 """
 
 from __future__ import annotations
@@ -25,6 +39,9 @@ from pyspark.sql import functions as F
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
+)
+DOCS_SCHEMA = (
+    "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
 
 
@@ -221,36 +238,60 @@ def dedup_stream(events: DataFrame, key_cols=("event_id",),
     )
 
 
-def stream_mentions(spark: SparkSession, docs_path: str, sink: list,
-                    schema: str = "doc_id bigint, text string, lang string, "
-                                  "source string, n_chars bigint"):
+def stream_mentions(spark: SparkSession, docs_path: str, sink: list):
     """foreachBatch host for the pure mention pipeline: every
     micro-batch runs the same dataflow the batch engine runs."""
-    from ..plans.kg import detect_mentions, documents_as_source
+    from ..plans.kg import detect_mentions
+
+    def process(src: DataFrame, epoch_id: int) -> None:
+        m = detect_mentions(src, domain="doc", mode="rules")
+        sink.append((epoch_id, m.count()))
+
+    return _run_docs(spark, docs_path, None, process)
+
+
+def _run_docs(spark: SparkSession, docs_path: str,
+              checkpoint_location: str | None, process):
+    """Stream the document files under ``docs_path`` one file per
+    micro-batch, call ``process(src, epoch_id)`` on each batch's
+    ``documents_as_source`` frame, and block until every available
+    file is processed; returns the finished StreamingQuery."""
+    from ..plans.kg import documents_as_source
 
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(docs_path)
     )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        m = detect_mentions(documents_as_source(batch_df), domain="doc", mode="rules")
-        sink.append((epoch_id, m.count()))
-
-    q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return q
-
-
-def _run_foreach_batch(stream: DataFrame, process,
-                       checkpoint_location: str | None):
-    w = stream.writeStream.foreachBatch(process)
+    w = stream.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: process(documents_as_source(batch_df),
+                                           epoch_id)
+    )
     if checkpoint_location:
         w = w.option("checkpointLocation", checkpoint_location)
     q = w.trigger(availableNow=True).start()
     q.awaitTermination()
     return q
+
+
+def _maintain(spark: SparkSession, docs_path: str, store_path: str,
+              checkpoint_location: str | None, step) -> list:
+    """The one maintenance loop behind every ``stream_*`` view
+    maintainer: each micro-batch calls ``step(src, version, at_least,
+    epoch_id)``, where ``src`` is the batch's document source,
+    ``version`` the snapshot slot it writes (``_version_base`` +
+    epoch) and ``at_least`` the read floor (None with a checkpoint, the
+    base without one — so a rebuild never merges the old head).
+    Returns the per-batch log: ``step``'s results in epoch order."""
+    base = _version_base(spark, store_path, checkpoint_location)
+    at_least = None if checkpoint_location else base
+    log: list = []
+
+    def process(src: DataFrame, epoch_id: int) -> None:
+        log.append(step(src, base + epoch_id, at_least, epoch_id))
+
+    _run_docs(spark, docs_path, checkpoint_location, process)
+    return log
 
 
 def _version_base(spark: SparkSession, store_path: str,
@@ -280,22 +321,20 @@ def _version_base(spark: SparkSession, store_path: str,
     """
     from .snapshot import latest_committed_version
 
-    if checkpoint_location:
-        head = latest_committed_version(spark, store_path)
-        if head is not None and not _checkpoint_has_progress(
-            spark, checkpoint_location
-        ):
-            raise ValueError(
-                f"store {store_path!r} already holds committed version "
-                f"v{head} but checkpoint {checkpoint_location!r} has no "
-                "progress: the store was populated by a different "
-                "(checkpoint-less rebuild?) run. Resume with the store's "
-                "original checkpoint, or use a fresh store."
-            )
-        return 0
-
     head = latest_committed_version(spark, store_path)
-    return 0 if head is None else head + 1
+    if not checkpoint_location:
+        return 0 if head is None else head + 1
+    if head is not None and not _checkpoint_has_progress(
+        spark, checkpoint_location
+    ):
+        raise ValueError(
+            f"store {store_path!r} already holds committed version "
+            f"v{head} but checkpoint {checkpoint_location!r} has no "
+            "progress: the store was populated by a different "
+            "(checkpoint-less rebuild?) run. Resume with the store's "
+            "original checkpoint, or use a fresh store."
+        )
+    return 0
 
 
 def _checkpoint_has_progress(spark: SparkSession,
@@ -308,11 +347,36 @@ def _checkpoint_has_progress(spark: SparkSession,
     return bool(fs.exists(p)) and len(fs.listStatus(p)) > 0
 
 
+def _commit_stamp(epoch_id: int):
+    """The ``commit`` column of one batch's triples: the epoch at a
+    fixed width (that of the snapshot ``v%010d`` slots), so string
+    order is epoch order — the ``upsert`` merge keeps the largest
+    stamp, and a checkpointed stream's epochs keep counting across
+    runs (a 5-digit stamp would rank epoch 100000 below 99999)."""
+    return F.format_string("e%010d", F.lit(epoch_id))
+
+
+def _comention_delta(src: DataFrame, store_path: str, version: int,
+                     at_least: int | None) -> None:
+    """Write the (a, b, n_docs) co-mention pairs of one batch's
+    documents as an additive delta version of ``store_path``."""
+    from ..operators.graph import comention_edges
+    from ..plans.kg import detect_mentions
+    from .snapshot import write_delta
+
+    m = detect_mentions(src, domain="doc", mode="rules")
+    delta = comention_edges(m).select(
+        "a", "b", F.col("n_docs").cast("bigint").alias("n_docs")
+    )
+    write_delta(
+        delta, store_path, version,
+        merge={"kind": "additive", "keys": ["a", "b"], "sums": ["n_docs"]},
+        at_least=at_least,
+    )
+
+
 def stream_triples_upsert(spark: SparkSession, docs_path: str,
                           store_path: str,
-                          schema: str = "doc_id bigint, text string, "
-                                        "lang string, source string, "
-                                        "n_chars bigint",
                           checkpoint_location: str | None = None) -> int:
     """Incremental KG maintenance under Structured Streaming: every
     micro-batch of documents re-runs the triple pipeline for ITS docs
@@ -336,45 +400,30 @@ def stream_triples_upsert(spark: SparkSession, docs_path: str,
     of micro-batches processed.
     """
     from ..operators.upsert import TRIPLE_KEY
-    from ..plans.kg import build_triples, documents_as_source
+    from ..plans.kg import build_triples
     from .snapshot import write_delta
 
     cols = ["subj", "pred", "obj", "repo", "content_sha"]
-    n_batches = [0]
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
-
-    base = _version_base(spark, store_path, checkpoint_location)
-    lo = None if checkpoint_location else base
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(src, version, at_least, epoch_id):
         inc = (
-            build_triples(documents_as_source(batch_df),
-                          domain="doc", mode="rules")
+            build_triples(src, domain="doc", mode="rules")
             .select(*cols).distinct()
-            .withColumn("commit", F.format_string("e%05d", F.lit(epoch_id)))
+            .withColumn("commit", _commit_stamp(epoch_id))
         )
         write_delta(
-            inc, store_path, base + epoch_id,
+            inc, store_path, version,
             merge={"kind": "upsert", "keys": list(TRIPLE_KEY),
                    "version_col": "commit"},
-            at_least=lo,
+            at_least=at_least,
         )
-        n_batches[0] += 1
 
-    _run_foreach_batch(stream, process, checkpoint_location)
-    return n_batches[0]
+    return len(_maintain(spark, docs_path, store_path, checkpoint_location,
+                         step))
 
 
 def stream_degrees_ivm(spark: SparkSession, docs_path: str,
                        store_path: str,
-                       schema: str = "doc_id bigint, text string, "
-                                     "lang string, source string, "
-                                     "n_chars bigint",
                        checkpoint_location: str | None = None) -> int:
     """Incremental view maintenance (IVM) of the node-degree view under
     Structured Streaming: each micro-batch contributes only its DELTA
@@ -395,44 +444,29 @@ def stream_degrees_ivm(spark: SparkSession, docs_path: str,
     equals the batch-computed degrees exactly (asserted e2e in tests).
     Returns the number of micro-batches processed.
     """
-    from ..plans.kg import build_triples, documents_as_source
+    from ..plans.kg import build_triples
     from .snapshot import write_delta
 
-    n_batches = [0]
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
-
-    base = _version_base(spark, store_path, checkpoint_location)
-    lo = None if checkpoint_location else base
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        t = build_triples(documents_as_source(batch_df),
-                          domain="doc", mode="rules")
+    def step(src, version, at_least, epoch_id):
+        t = build_triples(src, domain="doc", mode="rules")
         delta = (
             t.select(F.col("subj").alias("node"))
             .union(t.select(F.col("obj").alias("node")))
             .groupBy("node").agg(F.count("*").cast("bigint").alias("deg"))
         )
         write_delta(
-            delta, store_path, base + epoch_id,
+            delta, store_path, version,
             merge={"kind": "additive", "keys": ["node"], "sums": ["deg"]},
-            at_least=lo,
+            at_least=at_least,
         )
-        n_batches[0] += 1
 
-    _run_foreach_batch(stream, process, checkpoint_location)
-    return n_batches[0]
+    return len(_maintain(spark, docs_path, store_path, checkpoint_location,
+                         step))
 
 
 def stream_pagerank_ivm(spark: SparkSession, docs_path: str,
                         edges_store: str, ranks_store: str,
                         tol: float = 1e-9, damping: float = 0.85,
-                        schema: str = "doc_id bigint, text string, "
-                                      "lang string, source string, "
-                                      "n_chars bigint",
                         checkpoint_location: str | None = None) -> list:
     """Incremental PageRank maintenance under Structured Streaming —
     the IVM pattern extended from additive degree counts to a
@@ -457,46 +491,30 @@ def stream_pagerank_ivm(spark: SparkSession, docs_path: str,
     converge in fewer rounds than the batch cold start.
     """
     from ..operators.graph import pagerank_converged
-    from ..plans.kg import build_triples, documents_as_source
+    from ..plans.kg import build_triples
     from .snapshot import read_snapshot, write_delta, write_snapshot
 
-    rounds_log: list = []
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
-
-    base = _version_base(spark, edges_store, checkpoint_location)
-    lo = None if checkpoint_location else base
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        v = base + epoch_id
-        t = build_triples(documents_as_source(batch_df),
-                          domain="doc", mode="rules")
+    def step(src, v, at_least, epoch_id):
+        t = build_triples(src, domain="doc", mode="rules")
         delta = t.select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")).distinct()
         write_delta(delta, edges_store, v, merge={"kind": "distinct"},
-                    at_least=lo)
+                    at_least=at_least)
         # the previous RANK vector only warm-starts; reading an older
         # run's ranks is always safe (any init converges)
         prev_r = read_snapshot(spark, ranks_store, below=v)
         ranks, n_rounds = pagerank_converged(
-            read_snapshot(spark, edges_store, below=v + 1, at_least=lo),
+            read_snapshot(spark, edges_store, below=v + 1, at_least=at_least),
             tol=tol, damping=damping, init_ranks=prev_r,
         )
         write_snapshot(ranks, ranks_store, v)
-        rounds_log.append((epoch_id, n_rounds))
+        return epoch_id, n_rounds
 
-    _run_foreach_batch(stream, process, checkpoint_location)
-    return rounds_log
+    return _maintain(spark, docs_path, edges_store, checkpoint_location, step)
 
 
 def stream_comention_ivm(spark: SparkSession, docs_path: str,
                          store_path: str,
-                         schema: str = "doc_id bigint, text string, "
-                                       "lang string, source string, "
-                                       "n_chars bigint",
                          checkpoint_location: str | None = None) -> int:
     """Incremental maintenance of the co-mention edge view (the input
     of the PMI / LPA / k-core analytics tier): each micro-batch
@@ -516,44 +534,16 @@ def stream_comention_ivm(spark: SparkSession, docs_path: str,
     on the maintained view.  Returns the number of micro-batches
     processed.
     """
-    from ..operators.graph import comention_edges
-    from ..plans.kg import detect_mentions, documents_as_source
-    from .snapshot import write_delta
+    def step(src, version, at_least, epoch_id):
+        _comention_delta(src, store_path, version, at_least)
 
-    n_batches = [0]
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
-
-    base = _version_base(spark, store_path, checkpoint_location)
-    lo = None if checkpoint_location else base
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        m = detect_mentions(documents_as_source(batch_df),
-                            domain="doc", mode="rules")
-        delta = comention_edges(m).select(
-            "a", "b", F.col("n_docs").cast("bigint").alias("n_docs")
-        )
-        write_delta(
-            delta, store_path, base + epoch_id,
-            merge={"kind": "additive", "keys": ["a", "b"],
-                   "sums": ["n_docs"]},
-            at_least=lo,
-        )
-        n_batches[0] += 1
-
-    _run_foreach_batch(stream, process, checkpoint_location)
-    return n_batches[0]
+    return len(_maintain(spark, docs_path, store_path, checkpoint_location,
+                         step))
 
 
 def stream_communities_ivm(spark: SparkSession, docs_path: str,
                            edges_store: str, labels_store: str,
                            max_rounds: int = 25,
-                           schema: str = "doc_id bigint, text string, "
-                                         "lang string, source string, "
-                                         "n_chars bigint",
                            checkpoint_location: str | None = None) -> list:
     """Incremental LPA community maintenance under Structured Streaming
     — the fixed-point IVM pattern (stream_pagerank_ivm) applied to
@@ -579,40 +569,18 @@ def stream_communities_ivm(spark: SparkSession, docs_path: str,
 
     Returns [(epoch, n_rounds, converged), ...].
     """
-    from ..operators.graph import comention_edges, lpa_converged
-    from ..plans.kg import detect_mentions, documents_as_source
-    from .snapshot import read_snapshot, write_delta, write_snapshot
+    from ..operators.graph import lpa_converged
+    from .snapshot import read_snapshot, write_snapshot
 
-    log: list = []
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
-
-    base = _version_base(spark, edges_store, checkpoint_location)
-    lo = None if checkpoint_location else base
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        v = base + epoch_id
-        m = detect_mentions(documents_as_source(batch_df),
-                            domain="doc", mode="rules")
-        delta = comention_edges(m).select(
-            "a", "b", F.col("n_docs").cast("bigint").alias("n_docs")
-        )
-        write_delta(
-            delta, edges_store, v,
-            merge={"kind": "additive", "keys": ["a", "b"],
-                   "sums": ["n_docs"]},
-            at_least=lo,
-        )
+    def step(src, v, at_least, epoch_id):
+        _comention_delta(src, edges_store, v, at_least)
         prev_l = read_snapshot(spark, labels_store, below=v)
-        edges = read_snapshot(spark, edges_store, below=v + 1, at_least=lo)
+        edges = read_snapshot(spark, edges_store, below=v + 1,
+                              at_least=at_least)
         labels, n_rounds, converged = lpa_converged(
             edges, init_labels=prev_l, max_rounds=max_rounds
         )
         write_snapshot(labels, labels_store, v)
-        log.append((epoch_id, n_rounds, converged))
+        return epoch_id, n_rounds, converged
 
-    _run_foreach_batch(stream, process, checkpoint_location)
-    return log
+    return _maintain(spark, docs_path, edges_store, checkpoint_location, step)

@@ -176,24 +176,56 @@ def test_compact_folds_delta_chain(spark, tmp_path):
     assert _counts(spark, store) == before == {"n0": 1, "n1": 2, "n2": 3}
 
 
-def test_checkpointed_run_rejects_foreign_store(spark, tmp_path):
+MAINTAINERS = ("stream_triples_upsert", "stream_degrees_ivm",
+               "stream_pagerank_ivm", "stream_comention_ivm",
+               "stream_communities_ivm")
+# maintainers that also write a derived (ranks / labels) snapshot store
+TWO_STORE = ("stream_pagerank_ivm", "stream_communities_ivm")
+
+
+@pytest.mark.parametrize("name", MAINTAINERS)
+def test_checkpointed_run_rejects_foreign_store(spark, tmp_path, name):
     """Store-checkpoint pairing contract (r4 ADVICE item 1): a FRESH
     checkpointed run against a store populated by a checkpoint-less
-    rebuild fails loudly instead of double-merging stale versions."""
-    from ner_funtool_spark.streaming.stream import stream_degrees_ivm
+    rebuild fails loudly instead of double-merging stale versions —
+    for every maintainer on the shared loop."""
+    from ner_funtool_spark.streaming import stream as stream_mod
 
+    maintain = getattr(stream_mod, name)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     src = tmp_path / "src"
     src.mkdir()
     (docs.limit(50).coalesce(1).write.parquet(str(src / "b0")))
-    store = str(tmp_path / "store")
+    stores = [str(tmp_path / "store")]
+    if name in TWO_STORE:
+        stores.append(str(tmp_path / "derived"))
     # populate via a checkpoint-less rebuild run
-    stream_degrees_ivm(spark, f"{src}/*", store)
-    assert latest_committed_version(spark, store) is not None
+    maintain(spark, f"{src}/*", *stores)
+    assert latest_committed_version(spark, stores[0]) is not None
     # a FRESH checkpoint against that store must refuse
     with pytest.raises(ValueError, match="no progress"):
-        stream_degrees_ivm(spark, f"{src}/*", store,
-                           checkpoint_location=str(tmp_path / "fresh_ckpt"))
+        maintain(spark, f"{src}/*", *stores,
+                 checkpoint_location=str(tmp_path / "fresh_ckpt"))
+
+
+def test_triples_commit_stamp_orders_past_five_digits(spark):
+    """A checkpointed stream's epoch ids keep counting across runs, and
+    the upsert fold keeps the LARGEST commit string per key: the stamp
+    of epoch 100000 must outrank that of 99999 (a 5-digit stamp gave
+    'e100000' < 'e99999', so the older batch's row won)."""
+    from ner_funtool_spark.streaming.snapshot import _apply_merge
+    from ner_funtool_spark.streaming.stream import _commit_stamp
+
+    cols = "subj string, pred string, obj string, content_sha string"
+    older = spark.createDataFrame([("r1", "DEFINES", "f1", "sha_old")], cols)
+    newer = spark.createDataFrame([("r1", "DEFINES", "f1", "sha_new")], cols)
+    frags = [older.withColumn("commit", _commit_stamp(99_999)),
+             newer.withColumn("commit", _commit_stamp(100_000))]
+    merge = {"kind": "upsert", "keys": ["subj", "pred", "obj"],
+             "version_col": "commit"}
+    for order in (frags, frags[::-1]):
+        got = [tuple(r) for r in _apply_merge(order, merge).collect()]
+        assert got == [("r1", "DEFINES", "f1", "sha_new", "e0000100000")]
 
 
 def test_write_paths_have_no_driver_materialization():
