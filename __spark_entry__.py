@@ -51,7 +51,8 @@ def _doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: documents -> segment -> Arrow CRF tagging -> mentions
     -> (subj, pred, obj) triples.  Driver checks rows>0."""
-    return _doc_triples(spark, "/root/testdata/sf0.001").select(
+    src = documents_as_source(_docs(spark, "/root/testdata/sf0.001"))
+    return build_triples(src, domain="doc", mode="rules").select(
         "subj", "pred", "obj", "repo", "content_sha"
     )
 

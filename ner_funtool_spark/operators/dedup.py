@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import logging
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
