@@ -9,10 +9,12 @@ degrees and node importance.  Both are expressed as DataFrame ops:
 * degrees — two groupBy counts + one outer join (two shuffles total);
   multigraph semantics (parallel edges count separately).
 * pagerank — fixed-iteration power method over DISTINCT edges with the
-  standard damping + dangling-mass redistribution.  Each iteration is
-  one join + one aggregation.  The dangling-mass scalar stays
-  distributed (1-row aggregate broadcast-crossJoined back), no driver
-  collect in the loop.
+  standard damping + dangling-mass redistribution, as message-passing
+  supersteps: the node table carries each node's out-neighbours, and a
+  round is one aggregation of the messages sent along them with the
+  node rows — one shuffle, no join, no broadcast.  The dangling mass a
+  round reads is a literal ``observe``-d on the previous round's
+  checkpoint job, so the loop runs no job for its scalars.
 
 Both are DuckDB-oracle-checked (unrolled-CTE SQL, oracles.py) at
 round(6) on doubles.
@@ -30,7 +32,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 DAMPING = 0.85
@@ -50,13 +52,14 @@ def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
     until ``done(prev, new)`` holds; returns ``(finish(state), rounds,
     converged)``.  Every round's state is ``localCheckpoint``-ed
     (``eager`` picks the form), and so is the initial one when a
-    ``done`` check will read it; a checked loop that runs out of rounds
-    warns.  An eager checkpoint no longer reads its predecessor, which
-    is released once the round's check has run; lazy ones are computed
-    only with the finished frame, so they are released after
-    ``finish`` — if it returned a checkpoint (a lazy result keeps what
-    it reads).  The ``inputs`` persisted for the loop are unpersisted
-    after ``finish``.
+    ``done`` check will read it or the loop is eager (a step may
+    ``observe`` its round scalars on that checkpoint's job); a checked
+    loop that runs out of rounds warns.  An eager checkpoint no longer
+    reads its predecessor, which is released once the round's check has
+    run; lazy ones are computed only with the finished frame, so they
+    are released after ``finish`` — if it returned a checkpoint (a lazy
+    result keeps what it reads).  The ``inputs`` persisted or checkpointed for the loop
+    are released after ``finish``.
     """
     held = []
 
@@ -65,7 +68,7 @@ def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
         held.append(_checkpoint_rdd(df))
         return df
 
-    if done is not None:
+    if done is not None or eager:
         state = checkpoint(state)
     rounds, converged = 0, False
     while rounds < max_rounds and not converged:
@@ -83,7 +86,11 @@ def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
         for rdd in held:
             rdd.unpersist(False)
     for df in inputs:
-        df.unpersist()
+        rdd = _checkpoint_rdd(df)
+        if rdd is None:
+            df.unpersist()
+        else:
+            rdd.unpersist(False)
     return out, rounds, converged
 
 
@@ -325,94 +332,110 @@ def _pagerank(edges: DataFrame, src_col: str, dst_col: str, damping: float,
     Returns ``(ranks, rounds)``.  Each teleport form keeps the literal
     arithmetic its oracle mirrors (``oracles.kg_pagerank_sql``,
     ``kg_ppr_sql``): uniform is NOT personalized with s(v) = 1/N, which
-    would differ in the last float bit.  Loop-invariant state is built
-    once (guide §2.4): ``ew`` = distinct edges joined with their
-    source's out-degree, ``ninfo`` = nodes with a nullable out-degree
-    (NULL = dangling) and, if personalized, the teleport weight ``sv``.
+    would differ in the last float bit.
+
+    The node table is one aggregation over the out-endpoints (src, dst)
+    and in-endpoints (dst, NULL): ``dsts`` is a node's DISTINCT out-
+    neighbours (empty = dangling), plus the teleport weight ``sv`` if
+    personalized; a warm start's ``init_ranks`` rows ride the same
+    aggregation.  A round is one superstep on the state alone: every
+    node sends pr/|dsts| along ``dsts``, and one ``groupBy(node)`` over
+    the messages and the node rows (which carry ``dsts`` and the old pr)
+    yields the new pr — one Exchange, no join, no broadcast.  The round
+    scalars — N (or the seeds present), the dangling mass the next round
+    reads as a literal, and the converged form's L1 residual — are
+    ``observe``-d on the eager checkpoint that materializes each frame,
+    so they cost no job of their own.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    e = edges.select(F.col(src_col).alias("node"), F.col(dst_col).alias("dst"))
+    no_dst = F.lit(None).alias("dst")
+    ends = e.union(e.select(F.col("dst").alias("node"), no_dst))
+    aggs = [F.collect_set("dst").alias("dsts")]
+    if init_ranks is not None:
+        # warm-start rows add their pr0 to graph nodes; a node that has
+        # no endpoint row (g NULL) is not in the graph and is dropped
+        ends = ends.select("node", "dst", F.lit(True).alias("g"),
+                           F.lit(None).alias("pr0")).union(
+            init_ranks.select("node", no_dst, F.lit(None), "pr"))
+        aggs += [F.max("g").alias("g"),
+                 F.first("pr0", ignorenulls=True).alias("pr0")]
+    seen = []  # the Observation of each checkpointed frame, newest last
+
+    def observed(df, *metrics):
+        seen.append(Observation())
+        return df.observe(seen[-1], *metrics)
+
+    nodes = ends.groupBy("node").agg(*aggs)
+    if init_ranks is not None:
+        nodes = nodes.filter("g")
+    # N, or the number of seeds present in the graph
+    present = (F.count("*") if seeds is None
+               else F.count(F.when(F.col("node").isin(seeds), 1)))
+    nodes = observed(nodes, present.alias("n")).localCheckpoint(eager=True)
+    n = seen[-1].get["n"]
     pr = F.col("pr") if tol is not None else F.round("pr", 6).alias("pr")
 
     def finish(ranks):
         return ranks.select("node", pr).localCheckpoint(eager=True)
 
-    # N, or the number of seeds present in the graph
-    n = (nodes if seeds is None
-         else nodes.filter(F.col("node").isin(seeds))).count()
     if n == 0:
         # empty edge list, or no seed present: the teleport vector is
         # all-zero, so emit exactly that (one 0.0 row per node, zero
         # rounds), matching the SQL mirror's CASE semantics instead of
         # an empty frame — and guarding the 1.0/n below
         zeros = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
-        return _iterate(zeros, None, 0, finish, inputs=(e, nodes))[:2]
-    out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
-    ew = e.join(out_deg, "src").persist()
-    ninfo = nodes.join(out_deg.withColumnRenamed("src", "node"), "node", "left")
+        return _iterate(zeros, None, 0, finish, inputs=(nodes,))[:2]
+    cols = ["node", "dsts"]  # what a node row carries besides pr
+    init = nodes
     if seeds is None:
         start = F.lit(1.0 / n)
 
         def update(c, dm):
             return F.lit((1.0 - damping) / n) + F.lit(damping) * (c + dm / n)
     else:
-        ninfo = ninfo.withColumn(
+        init = nodes.withColumn(
             "sv",
             F.when(F.col("node").isin(seeds), F.lit(1.0 / n)).otherwise(F.lit(0.0)),
         )
+        cols.append("sv")
         start = F.col("sv")
 
         def update(c, dm):
             return (F.lit(1.0 - damping) * F.col("sv")
                     + F.lit(damping) * (c + dm * F.col("sv")))
-    ninfo = ninfo.persist()
-    ranks = ninfo
     if init_ranks is not None:
-        ranks = ninfo.join(
-            init_ranks.select("node", F.col("pr").alias("pr0")), "node", "left"
-        )
         start = F.coalesce(F.col("pr0"), start)
-    ranks = ranks.select("node", "od", start.alias("pr"))
+    dangling = F.coalesce(F.sum(F.when(F.size("dsts") == 0, F.col("pr"))),
+                          F.lit(0.0)).alias("dm")
+    residual = ([] if tol is None else
+                [F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("d")])
 
     def step(ranks):
-        contribs = (
-            ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
+        dm = F.lit(seen[-1].get["dm"])
+        msgs = ranks.select(F.explode("dsts").alias("node"),
+                            (F.col("pr") / F.size("dsts")).alias("msg"))
+        new = (
+            ranks.withColumnRenamed("pr", "pr_old")
+            .unionByName(msgs, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(*[F.first(c, ignorenulls=True).alias(c)
+                   for c in cols[1:] + ["pr_old"]],
+                 F.sum("msg").alias("contrib"))
+            .select(*cols, "pr_old",
+                    update(F.coalesce(F.col("contrib"), F.lit(0.0)),
+                           dm).alias("pr"))
         )
-        dangling = (
-            ranks.filter(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-        )
-        return (
-            ninfo.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node", "od",
-                update(F.coalesce(F.col("contrib"), F.lit(0.0)),
-                       F.col("dm")).alias("pr"),
-            )
-        )
+        return observed(new, dangling, *residual).select(*cols, "pr")
 
     def settled(old, new):
-        delta = (
-            new.join(old.select("node", F.col("pr").alias("pr_old")), "node")
-            .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("d"))
-            .first()["d"]
-        )
+        delta = seen[-1].get["d"]
         return delta is not None and delta < tol
 
     return _iterate(
-        ranks, step, max_rounds, finish,
-        done=None if tol is None else settled,
-        inputs=(ew, ninfo, e, nodes), name="pagerank_converged",
+        observed(init.select(*cols, start.alias("pr")), dangling),
+        step, max_rounds, finish,
+        done=None if tol is None else settled, eager=True,
+        inputs=(nodes,), name="pagerank_converged",
     )[:2]
 
 
@@ -425,8 +448,9 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                                  + dangling_mass_t / N)
 
     Returns (node, pr) with pr rounded to 6 decimals (cross-engine
-    float determinism rule).  N is computed once (scalar dimension);
-    everything in the loop is distributed.
+    float determinism rule).  N is observed once, on the node table's
+    checkpoint; the rounds are distributed, and the only driver values
+    they read are scalars observed on their own checkpoint jobs.
     """
     return _pagerank(edges, src_col, dst_col, damping, iterations)[0]
 
@@ -482,9 +506,10 @@ def pagerank_converged(edges: DataFrame, src_col: str = "src",
     wins exactly in the micro-batch regime it exists for: small deltas
     on a large accumulated graph.
 
-    Per round: the same join+agg shape as ``pagerank`` plus ONE
-    node-keyed join/agg for the L1 delta — all distributed, the driver
-    sees a single float per round.
+    Per round: the same one-shuffle superstep as ``pagerank``; the node
+    row carries its previous pr through the aggregation, and the L1
+    delta is ``observe``-d on the round's own checkpoint job — no join
+    and no job for the check, the driver sees a single float per round.
     """
     return _pagerank(edges, src_col, dst_col, damping, max_iterations,
                      tol=tol, init_ranks=init_ranks)
@@ -564,9 +589,8 @@ def label_propagation(edges: DataFrame, a_col: str = "a", b_col: str = "b",
 
     Shape at scale: per iteration one join (labels onto the edge list)
     and two aggregations (neighbour-label counts, then a min-struct
-    argmax per node) — the same join+agg-per-round shape as pagerank;
-    the label dimension is never broadcast (unbounded), no driver
-    collect.
+    argmax per node); the label dimension is never broadcast
+    (unbounded), no driver collect.
 
     Fixed-horizon LPA has no warm-start story (the labeling is defined
     BY its trajectory); ``lpa_converged`` below is the incremental

@@ -421,3 +421,90 @@ def test_round_limit_warns_only_when_unconverged(spark):
         assert {r["canonical_id"] for r in
                 connected_components(path).collect()} == {"n000"}
         assert pagerank_converged(cycle)[1] == 1
+
+
+def test_pagerank_multigraph_self_loop_and_sinks_match_numpy(spark):
+    """Parallel edges count once (the node table's ``collect_set``), a
+    self-loop sends a node's mass to itself, a node seen only as a
+    destination is dangling, and a node whose one out-edge is its own
+    self-loop is not."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from ner_funtool_spark.operators.graph import pagerank_converged
+
+    edges = [("a", "b"), ("a", "b"), ("a", "b"), ("a", "a"), ("b", "c"),
+             ("c", "a"), ("c", "d"), ("c", "e"), ("e", "e"), ("f", "d"),
+             ("f", "g"), ("f", "g")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = _np_pagerank(sorted(set(edges)), list("abcdefg"))
+    got = _as_dict(pagerank(df))
+    assert set(got) == set(want)
+    for node, pr in want.items():
+        assert abs(got[node] - pr) < 1e-6, node
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        conv, rounds = pagerank_converged(df, tol=0.0, max_iterations=5)
+    assert rounds == 5
+    full = _as_dict(conv)
+    for node, pr in want.items():
+        assert abs(full[node] - pr) < 1e-12, node
+    assert _as_dict(conv.select("node", F.round("pr", 6).alias("pr"))) == got
+
+
+def _pagerank_forms():
+    from ner_funtool_spark.operators import graph as G
+
+    return {
+        "pagerank": lambda d: (G.pagerank(d), G.PR_ITERATIONS),
+        "pagerank_personalized": lambda d: (
+            G.pagerank_personalized(d, ["n000", "n001"]), G.PR_ITERATIONS),
+        "pagerank_converged": lambda d: G.pagerank_converged(d, tol=1e-6),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_pagerank_forms()))
+def test_pagerank_jobs_per_round_bounded(spark, name):
+    """A round is one shuffle whose scalars ride its own checkpoint job:
+    at most 2 jobs a round (AQE runs the map stage as a job of its own)
+    plus at most 4 for the node table, the initial state and the
+    result."""
+    _, d = _random_digraph(spark, n_nodes=60, n_edges=240)
+    sc = spark.sparkContext
+    group = f"pagerank-jobs-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        _, rounds = _pagerank_forms()[name](d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rounds >= 1
+    assert jobs <= 2 * rounds + 4, (jobs, rounds)
+
+
+@pytest.mark.parametrize("name", sorted(_pagerank_forms()))
+def test_pagerank_round_plan_is_one_exchange(spark, monkeypatch, name):
+    """Every round's physical plan has exactly one hash Exchange and
+    no join or broadcast: the node rows carry their out-edges, so the
+    messages and the rows meet in one aggregation."""
+    from ner_funtool_spark.operators import graph as G
+
+    rounds, iterate = [], G._iterate
+
+    def recording(state, step, *args, **kwargs):
+        def recorded(s):
+            rounds.append(step(s))
+            return rounds[-1]
+        return iterate(state, recorded, *args, **kwargs)
+
+    monkeypatch.setattr(G, "_iterate", recording)
+    _, d = _random_digraph(spark, n_nodes=40, n_edges=120)
+    _pagerank_forms()[name](d)
+    assert rounds
+    for frame in rounds:
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[-1]
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        for op in ("BroadcastExchange", "Join", "CartesianProduct"):
+            assert op not in plan, plan
