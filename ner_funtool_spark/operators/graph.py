@@ -58,8 +58,8 @@ def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
     reads its predecessor, which is released once the round's check has
     run; lazy ones are computed only with the finished frame, so they
     are released after ``finish`` — if it returned a checkpoint (a lazy
-    result keeps what it reads).  The ``inputs`` persisted or checkpointed for the loop
-    are released after ``finish``.
+    result keeps what it reads).  The ``inputs`` persisted or
+    checkpointed for the loop are released after ``finish``.
     """
     held = []
 

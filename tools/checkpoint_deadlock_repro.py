@@ -10,12 +10,13 @@ It needs a chain of lazy ``localCheckpoint``s that a broadcast reads.
 The tool runs ``--calls`` calls of one graph loop in a child process
 over a seeded graph shaped like ``kg_canonical_rank``'s canonical
 triples (files mentioning Zipf-distributed entities, repos containing
-files).  A watchdog reads the child's progress: when one call makes no
-progress for ``--stall`` seconds it runs ``jcmd <pid> Thread.print`` on
+files).  A watchdog reads the child's progress.  When one call makes no
+progress for ``STALL_S`` seconds, or the run reaches ``--budget``
+seconds with a call still open, it runs ``jcmd <pid> Thread.print`` on
 the child's JVM, reports whether the dump holds ``Found one Java-level
-deadlock`` and kills the JVM and the child.  The run stops at ``--budget`` seconds
-in any case.  The hit rate is low, so a clean run is no proof; the
-report says what was run and what was seen, as one JSON line:
+deadlock`` (and that section of the dump) and kills the JVM and the
+child.  The hit rate is low, so a clean run is no proof; the report
+says what was run and what was seen, as one JSON line:
 
     python tools/checkpoint_deadlock_repro.py --loop pagerank --calls 40 --budget 600
 """
@@ -36,6 +37,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LOOPS = ("pagerank", "lpa", "kcore")
 SEED = 6  # the perfbench seed the deadlock was first seen on
 CORES = 3  # kg_canonical_rank's local[nproc-1] on a 4-core host
+STALL_S = 120.0  # seconds without a finished call that count as a hang
+DEADLOCK = "Found one Java-level deadlock"
 
 
 def graph_rows(seed: int, files: int = 500, repos: int = 10,
@@ -78,12 +81,19 @@ def child(loop: str, calls: int) -> None:
     spark.stop()
 
 
+def deadlock_section(dump: str) -> str | None:
+    """The JVM's own deadlock report at the end of a thread dump: the
+    threads in the cycle, the locks each holds and waits for, and their
+    stacks."""
+    at = dump.find(DEADLOCK)
+    return None if at < 0 else dump[at:].strip()
+
+
 def watch(args) -> dict:
     env = dict(os.environ)
     env.setdefault("SPARK_DRIVER_MEM", "1g")
-    cmd = [sys.executable, os.path.abspath(__file__), "--child",
-           "--loop", args.loop, "--calls", str(args.calls),
-           "--budget", str(args.budget)]
+    cmd = [sys.executable, os.path.abspath(__file__), "--child", args.loop,
+           str(args.calls)]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE,
                             stderr=subprocess.DEVNULL, text=True, env=env)
     lines: queue.Queue = queue.Queue()
@@ -92,7 +102,7 @@ def watch(args) -> dict:
     t0 = time.monotonic()
     last, pid, walls = t0, None, []
     report = {"loop": args.loop, "calls": args.calls, "seed": SEED,
-              "cores": CORES, "stall_s": args.stall,
+              "cores": CORES, "stall_s": STALL_S,
               "budget_s": args.budget, "spark_root": ROOT}
     outcome = None
     while outcome is None:
@@ -102,10 +112,10 @@ def watch(args) -> dict:
         except queue.Empty:
             if proc.poll() is not None:
                 outcome = "finished" if proc.returncode == 0 else "failed"
+            elif pid is not None and now - last > STALL_S:
+                outcome = "stalled"
             elif now - t0 > args.budget:
                 outcome = "budget"
-            elif pid is not None and now - last > args.stall:
-                outcome = "stalled"
             continue
         if line[:1] == ["jvm"]:
             pid, last = int(line[1]), time.monotonic()
@@ -114,38 +124,35 @@ def watch(args) -> dict:
             last = time.monotonic()
     report.update(outcome=outcome, calls_done=len(walls),
                   wall_s=round(time.monotonic() - t0, 1),
-                  call_walls_s=walls, deadlock=False)
-    if outcome == "stalled":
+                  call_walls_s=walls, deadlock=False, deadlock_dump=None)
+    if pid is not None and proc.poll() is None:
+        # stalled, or out of budget mid-call: the dump says which threads
+        # wait on what, so a hang shorter than STALL_S is not missed
         dump = subprocess.run(["jcmd", str(pid), "Thread.print"],
                               capture_output=True, text=True).stdout
-        report["deadlock"] = "Found one Java-level deadlock" in dump
-        if args.dump:
-            with open(args.dump, "w") as fh:
-                fh.write(dump)
-            report["dump"] = args.dump
+        section = deadlock_section(dump)
+        report.update(deadlock=section is not None, deadlock_dump=section)
         # a deadlocked JVM can hang in its shutdown hooks: end it first
-        os.kill(pid, signal.SIGKILL)
+        try:
+            os.kill(pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
     if proc.poll() is None:
         proc.kill()
-        proc.wait()
+    proc.wait()
     return report
 
 
 def main() -> int:
+    if sys.argv[1:2] == ["--child"]:
+        child(sys.argv[2], int(sys.argv[3]))
+        return 0
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--loop", choices=LOOPS, required=True)
     p.add_argument("--calls", type=int, required=True)
     p.add_argument("--budget", type=float, required=True,
                    help="seconds for the whole run")
-    p.add_argument("--stall", type=float, default=120.0,
-                   help="seconds without a finished call that count as a hang")
-    p.add_argument("--dump", default=None,
-                   help="where to write the thread dump of a stalled run")
-    p.add_argument("--child", action="store_true", help=argparse.SUPPRESS)
     args = p.parse_args()
-    if args.child:
-        child(args.loop, args.calls)
-        return 0
     report = watch(args)
     print(json.dumps(report))
     return 2 if report["deadlock"] else 0
