@@ -1094,22 +1094,22 @@ def _q_kg_entity_temporal(spark, sf_dir):
 
 
 def _q_kg_pagerank_inc_invariants(spark, sf_dir):
-    """Incremental (warm-start) PageRank invariants — the IVM rank-
-    maintenance path (streaming/stream.stream_pagerank_ivm).  Two
+    """Warm-start PageRank invariants of
+    operators/graph.pagerank_converged(init_ranks=...).  Two
     guaranteed-by-contraction properties, as violations vs a typed
-    empty oracle:
+    empty oracle (tests/test_graph.py::
+    test_pagerank_converged_warm_start pins the same two):
 
     * ANY-START CONVERGENCE: re-converging the full graph warm-started
       from the half-edge-graph fixed point lands on the cold start's
       (unique) fixed point — both vectors within tol*d/(1-d) of the
       true fixed point, gate 1e-6 per node;
     * DELTA-SCALED COST: with an UNCHANGED graph, re-converging from
-      the previous (full-precision) fixed point takes <= 2 rounds —
-      and strictly fewer than the cold start.  This is the measurable
-      IVM payoff; note a LARGE delta can legitimately take more rounds
-      than cold (slow-mode error — operators/graph.pagerank_converged
-      docstring), so no rounds claim is made for the half-graph warm
-      start."""
+      the previous (full-precision) fixed point takes
+      <= min(2, cold rounds).  A LARGE change can legitimately take
+      more rounds than cold (slow-mode error —
+      operators/graph.pagerank_converged docstring), so no rounds
+      claim is made for the half-graph warm start."""
     from ner_funtool_spark.operators.graph import pagerank_converged
 
     edges = _triples_edges(spark, sf_dir)
@@ -1627,17 +1627,17 @@ def _q_kg_communities(spark, sf_dir):
 
 
 def _q_kg_lpa_inc_invariants(spark, sf_dir):
-    """Incremental (warm-start) LPA invariants — the community-IVM
-    path (streaming/stream.stream_communities_ivm).  The guaranteed
+    """Warm-start LPA invariants of
+    operators/graph.lpa_converged(init_labels=...).  The guaranteed
     properties, as violations vs a typed empty oracle:
 
     * COLD CONVERGENCE: lpa_converged reaches a fixed point on the
       co-mention graph within its round budget (measured ~3 rounds at
       these sfs; graph-dependent, hence gated);
     * WARM RESTART IS FREE: restarting from the converged labeling on
-      the UNCHANGED graph re-confirms stability in exactly 1 round —
-      the delta-scaled IVM payoff (a fixed point of the deterministic
-      plurality update maps to itself);
+      the UNCHANGED graph re-confirms stability in exactly 1 round (a
+      fixed point of the deterministic plurality update maps to
+      itself);
     * WARM LABELS == CONVERGED LABELS row-for-row on the unchanged
       graph;
     * PARTITION VALIDITY: exactly one label per node.

@@ -480,31 +480,33 @@ def pagerank_converged(edges: DataFrame, src_col: str = "src",
                        damping: float = DAMPING,
                        init_ranks: DataFrame | None = None):
     """PageRank iterated to an L1 fixed-point tolerance, optionally
-    WARM-STARTED from a previous rank vector — the incremental-
-    maintenance primitive: after an edge-batch arrives, re-converging
-    from the previous ranks reaches the (unique) fixed point in far
-    fewer rounds than a cold start.
+    WARM-STARTED from a previous rank vector: after the edge set
+    changes, re-converging from the previous ranks reaches the
+    (unique) fixed point of the new graph.
 
     The update pr_{t+1} = (1-d)/N + d*(M·pr_t + dm_t/N) is an L1
     contraction with factor d for ANY starting vector, so no
     renormalization of the warm start is needed — nodes missing from
-    ``init_ranks`` (new this batch) start at 1/N and the iteration
+    ``init_ranks`` (new to the graph) start at 1/N and the iteration
     pulls everything to the same fixed point the cold start reaches.
     Returns ``(ranks, n_rounds)``: (node, pr) at FULL double precision
     (round at the reporting edge only — a 6-decimal store would
     re-inflate a warm start's error to ~n_nodes*5e-7 L1 and forfeit
     the saving), and the number of rounds actually run.  Running out
-    of ``max_iterations`` before the tolerance holds warns.
+    of ``max_iterations`` before the tolerance holds warns.  An
+    ``init_ranks`` row for a node outside the graph is dropped.
 
-    Honest scaling note (measured, tests/test_streaming.py): warm
-    rounds track the DELTA'S distance to the new fixed point, not the
-    graph size — an unchanged graph re-converges in <= 2 rounds, a
-    small edge delta in a handful, while a graph grown by a third can
-    take MORE rounds than a uniform cold start (the uniform vector
-    excites only fast-decaying modes; a stale fixed point holds error
-    in the slow modes, which decay at the worst-case rate d).  IVM
-    wins exactly in the micro-batch regime it exists for: small deltas
-    on a large accumulated graph.
+    Warm-start invariants (gated by Q:kg_pagerank_inc_invariants and
+    tests/test_graph.py::test_pagerank_converged_warm_start): a warm
+    start from the half-graph fixed point lands on the full graph's
+    fixed point (1e-6 per node), and a restart from the fixed point on
+    the unchanged graph takes <= 2 rounds.  Warm rounds track the
+    start's distance to the new fixed point, not the graph size: a
+    graph grown by a third can take MORE rounds than a uniform cold
+    start (the uniform vector excites only fast-decaying modes; a stale
+    fixed point holds error in the slow modes, which decay at the
+    worst-case rate d), so only the unchanged-graph restart carries a
+    rounds claim.
 
     Per round: the same one-shuffle superstep as ``pagerank``; the node
     row carries its previous pr through the aggregation, and the L1
@@ -604,21 +606,20 @@ def lpa_converged(edges: DataFrame, a_col: str = "a", b_col: str = "b",
                   init_labels: DataFrame | None = None,
                   max_rounds: int = 25):
     """Label propagation iterated until the labeling stops changing,
-    optionally WARM-STARTED from a previous assignment — the
-    incremental-maintenance variant backing stream_communities_ivm.
-    Returns ``(labels, n_rounds, converged)``: (node, community) rows,
-    the number of plurality rounds applied (including the final round
-    that confirmed stability), and whether a fixed point was reached
-    within ``max_rounds``.
+    optionally WARM-STARTED from a previous assignment.  Returns
+    ``(labels, n_rounds, converged)``: (node, community) rows, the
+    number of plurality rounds applied (including the final round that
+    confirmed stability), and whether a fixed point was reached within
+    ``max_rounds``.
 
     Warm-start guarantees — what holds and what does NOT:
 
-    * GUARANTEED (gated by Q:kg_lpa_inc_invariants): on an UNCHANGED
-      graph, restarting from a converged labeling re-confirms the same
-      fixed point in exactly 1 round with zero label changes — the
-      plurality update is deterministic, and a fixed point maps to
-      itself.  This is the delta-scaled IVM payoff: an empty/small
-      delta costs ~1 round instead of a full cold trajectory.
+    * GUARANTEED (gated by Q:kg_lpa_inc_invariants and
+      tests/test_graph.py::test_lpa_converged_fixed_point_and_warm_start):
+      on an UNCHANGED graph, restarting from a converged labeling
+      re-confirms the same fixed point in exactly 1 round with zero
+      label changes — the plurality update is deterministic, and a
+      fixed point maps to itself.
     * NOT guaranteed (documented, not claimed): warm labels on a
       CHANGED graph need not equal the cold labels of the new graph.
       Unlike PageRank's contraction (unique fixed point, any start),

@@ -70,16 +70,6 @@ def synth_media(spark, n: int, seed: int = 7) -> DataFrame:
     return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def decode_image_real(payload: bytes):
-    """Real decode path — requires PIL, which this container lacks."""
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL/Pillow; not available in this "
-            "environment — use extract_features(stub=True)"
-        )
-    raise NotImplementedError("real decode wired when codec libs are present")
-
-
 def _fake_features(payload: np.ndarray, dim: int = FEATURE_DIM) -> np.ndarray:
     """Deterministic stand-in feature extractor: bytes -> float vector.
 

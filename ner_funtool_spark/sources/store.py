@@ -188,45 +188,3 @@ def comention_pmi_from_store(spark: SparkSession, table: str,
     the bucketed distribution directly (the doc-keyed distinct's
     first aggregation is satisfied by the bucketing)."""
     return _comention_pmi(spark.table(table), doc_cols, min_pair_docs)
-
-
-def compact_parquet(spark: SparkSession, in_dir: str, out_dir: str,
-                    target_mb: int = 128) -> dict:
-    """Small-file compaction for a parquet store: rewrite ``in_dir``
-    into ceil(total_bytes / target_mb) files of ~target size.
-
-    Streaming micro-batches and per-bucket resumable writes both leave
-    stores with thousands of small files; at 100 TB the scan-planning
-    and open-cost overhead of small files dominates read latency, so
-    periodic compaction is part of operating the store (Iceberg's
-    rewrite_data_files analog).  The file count is computed from the
-    ACTUAL on-disk bytes (Hadoop FS listing — no data pass), then one
-    round-robin repartition rewrites; returns stats for the caller's
-    metrics ledger.
-    """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(in_dir)
-    fs = path.getFileSystem(conf)
-    total = 0
-    n_files = 0
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if name.endswith(".parquet"):
-            total += f.getLen()
-            n_files += 1
-    n_out = max(1, -(-total // (target_mb * 1024 * 1024)))  # ceil
-    df = spark.read.parquet(in_dir)
-    df.repartition(int(n_out)).write.mode("overwrite").parquet(out_dir)
-    out_files = sum(
-        1 for name in fs.listStatus(jvm.org.apache.hadoop.fs.Path(out_dir))
-        if name.getPath().getName().endswith(".parquet")
-    )
-    return {
-        "in_files": n_files,
-        "in_bytes": int(total),
-        "out_files": int(out_files),
-        "target_mb": target_mb,
-    }

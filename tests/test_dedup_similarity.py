@@ -268,14 +268,6 @@ def test_multimodal_plumbing(spark):
     assert all(max(r["out_width"], r["out_height"]) <= 64 for r in rp)
 
 
-def test_real_decode_is_gated(spark):
-    from ner_funtool_spark.operators import multimodal as mm
-
-    if not mm.HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            mm.decode_image_real(b"xx")
-
-
 def _np_lloyds(X, k, iterations):
     """numpy reference of kmeans_centroids: cosine assignment with
     cid-ascending tie-break, mean update, init = first k rows."""

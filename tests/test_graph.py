@@ -346,6 +346,35 @@ def test_pagerank_forms_agree(spark):
     assert _as_dict(pagerank_personalized(e, nodes)) == want
 
 
+def test_pagerank_converged_warm_start(spark):
+    """pagerank_converged(init_ranks=...): the update is an L1
+    contraction, so a warm start from the half-graph fixed point lands
+    on the full graph's unique fixed point; restarting from the cold
+    fixed point on the unchanged graph costs at most 2 rounds; and an
+    init_ranks row for a node outside the graph is dropped."""
+    from ner_funtool_spark.operators.graph import pagerank_converged
+
+    _, e = _random_digraph(spark)
+    pairs = [(r["src"], r["dst"]) for r in e.collect()]
+    nodes = sorted({n for p in pairs for n in p})
+    tol, d = 1e-9, 0.5
+    want = _np_pagerank(pairs, nodes, iterations=100, d=d)
+
+    half = spark.createDataFrame(pairs[::2], "src string, dst string")
+    r_half, _ = pagerank_converged(half, tol=tol, damping=d)
+    ghost = spark.createDataFrame([("ghost", 0.5)], "node string, pr double")
+    warm, _ = pagerank_converged(e, tol=tol, damping=d,
+                                 init_ranks=r_half.unionByName(ghost))
+    got = _as_dict(warm)
+    assert set(got) == set(want)  # "ghost" is not a graph node
+    for node, pr in want.items():
+        assert abs(got[node] - pr) <= 1e-6, node
+
+    cold, cold_rounds = pagerank_converged(e, tol=tol, damping=d)
+    _, rounds = pagerank_converged(e, tol=tol, damping=d, init_ranks=cold)
+    assert rounds <= min(2, cold_rounds)
+
+
 def test_label_propagation_equals_lpa_converged_horizon(spark):
     import warnings
 

@@ -93,21 +93,6 @@ def test_self_join_from_store_is_colocated(store):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from ner_funtool_spark.sources.store import compact_parquet
-
-    src = str(tmp_path / "frag")
-    out = str(tmp_path / "compact")
-    df = spark.range(0, 20000).selectExpr("id", "id * 2 AS v")
-    df.repartition(64).write.parquet(src)  # 64 tiny files
-    stats = compact_parquet(spark, src, out, target_mb=128)
-    assert stats["in_files"] == 64
-    assert stats["out_files"] == 1  # 20k rows << 128MB -> one file
-    got = spark.read.parquet(out)
-    assert got.count() == 20000
-    assert got.exceptAll(df).count() == 0 and df.exceptAll(got).count() == 0
-
-
 def test_two_hop_from_store_is_colocated_and_exact(store):
     """Dual SPO/OPS bucketed indexes: the 2-hop join (and the hub-cap
     degree filter) plan with ZERO Exchange in the join subtree, and

@@ -60,37 +60,6 @@ def test_stream_mentions_foreachbatch(spark, stream_dirs):
     assert total == want and want > 0
 
 
-def test_stateful_running_counts(spark, stream_dirs, tmp_path):
-    """applyInPandasWithState running counters across MULTIPLE
-    micro-batches (state re-entry exercised): final state must equal
-    the batch groupBy over the same data."""
-    from ner_funtool_spark.streaming.stream import running_type_counts
-
-    # split into several files so maxFilesPerTrigger=1 yields >1 batch
-    multi = str(tmp_path / "events_multi")
-    spark.read.parquet(f"{SF}/events.parquet").repartition(4).write.parquet(multi)
-    stream = read_events_stream(spark, multi)
-    q = run_stream_to_memory(running_type_counts(stream), "rtc", output_mode="update")
-    try:
-        got = {
-            r["event_type"]: (r["n"], r["total"])
-            for r in spark.sql(
-                "SELECT * FROM (SELECT *, row_number() OVER ("
-                "PARTITION BY event_type ORDER BY n DESC) rn FROM rtc) WHERE rn = 1"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    batch = spark.read.parquet(f"{SF}/events.parquet")
-    want = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in batch.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total"))
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """Append-mode windowed agg with a 30-min watermark: an event
     arriving in a later micro-batch but older than the watermark is
@@ -175,456 +144,16 @@ def test_sessionize_gap_semantics(spark):
     assert got == {(1, 1): 2, (1, 2): 1, (2, 1): 1}
 
 
-def test_sessionize_stateful_closed_sessions_equal_batch(spark, tmp_path):
-    """Streaming stateful sessionization (applyInPandasWithState +
-    EventTimeTimeout) must emit exactly the batch formulation's CLOSED
-    sessions when events arrive time-ordered; each user's final open
-    session stays in state (would emit on timeout in a live stream)."""
-    import os
-
-    from ner_funtool_spark.streaming.stream import (
-        sessionize_batch,
-        sessionize_stateful,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select("user_id", "ts")
-    # ordered finite stream: chunk by time so per-user order holds
-    src = tmp_path / "sessionsrc"
-    src.mkdir()
-    chunks = ev.orderBy("ts").coalesce(1).withColumn(
-        "chunk", (F.row_number().over(
-            __import__("pyspark.sql.window", fromlist=["Window"]).Window
-            .orderBy("ts")) / 500).cast("int"),
-    )
-    pdf = chunks.toPandas()
-    for c, grp in pdf.groupby("chunk"):
-        grp[["user_id", "ts"]].to_parquet(
-            src / f"part_{c:04d}.parquet",
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp_ntz")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = run_stream_to_memory(
-        sessionize_stateful(stream, gap_minutes=30), "sess_state",
-        output_mode="append",
-    )
-    got = {
-        (r["user_id"], r["t_start"], r["t_end"], r["n_events"])
-        for r in spark.table("sess_state").collect()
-    }
-    batch = sessionize_batch(ev, gap_minutes=30).collect()
-    # each user's LAST session may still be open in state
-    last = {}
-    for r in batch:
-        key = r["user_id"]
-        if key not in last or r["session_id"] > last[key]:
-            last[key] = r["session_id"]
-    want_closed = {
-        (r["user_id"], r["t_start"], r["t_end"], r["n_events"])
-        for r in batch if r["session_id"] != last[r["user_id"]]
-    }
-    assert want_closed <= got
-    # nothing emitted that the batch result doesn't contain
-    want_all = {
-        (r["user_id"], r["t_start"], r["t_end"], r["n_events"]) for r in batch
-    }
-    assert got <= want_all
-
-
-def test_stream_triples_upsert_converges_to_batch(spark, tmp_path):
-    """Micro-batched incremental maintenance == one-shot batch build:
-    after streaming the corpus file-by-file through foreachBatch +
-    upsert_triples, the store holds exactly the triples of a single
-    batch run (keys and provenance; versions differ by design)."""
-    from ner_funtool_spark.plans.kg import build_triples, documents_as_source
-    from ner_funtool_spark.streaming.stream import stream_triples_upsert
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src_dir = str(tmp_path / "docs_stream")
-    # three files -> three micro-batches
-    docs.repartition(3).write.parquet(src_dir)
-    store = str(tmp_path / "triples_store")
-
-    n = stream_triples_upsert(spark, src_dir, store)
-    assert n >= 3
-
-    from ner_funtool_spark.streaming.snapshot import read_snapshot
-
-    got = {
-        (r["subj"], r["pred"], r["obj"], r["content_sha"])
-        for r in read_snapshot(spark, store).collect()
-    }
-    want = {
-        (r["subj"], r["pred"], r["obj"], r["content_sha"])
-        for r in build_triples(
-            documents_as_source(docs), domain="doc", mode="rules"
-        ).select("subj", "pred", "obj", "content_sha").distinct().collect()
-    }
-    assert got == want
-    # store is key-unique (the MERGE invariant)
-    st = read_snapshot(spark, store)
-    assert st.count() == st.select("subj", "pred", "obj").distinct().count()
-
-
-def test_dedup_stream_suppresses_redeliveries(spark, tmp_path):
-    """Duplicates planted across micro-batches (maxFilesPerTrigger=1 so
-    each file is its own batch): every key surfaces exactly once, and
-    the surviving set equals the batch dropDuplicates result."""
-    from ner_funtool_spark.streaming.stream import dedup_stream
-
-    src = tmp_path / "dupsrc"
-    src.mkdir()
-    rows1 = [(i, f"2024-01-01 10:{i % 60:02d}:00", i, "click", 1.0, "{}")
-             for i in range(50)]
-    # batch 2 re-delivers every 5th key with a slightly later ts
-    rows2 = [(i, f"2024-01-01 10:{(i % 60):02d}:30", i, "click", 1.0, "{}")
-             for i in range(0, 50, 5)] + [
-        (i, f"2024-01-01 10:{i % 60:02d}:00", i, "click", 1.0, "{}")
-        for i in range(50, 60)
-    ]
-    schema = ("event_id bigint, ts_s string, user_id bigint, "
-              "event_type string, value double, props string")
-
-    def write_one(rows, name):
-        (spark.createDataFrame(rows, schema)
-         .select("event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-                 "user_id", "event_type", "value", "props")
-         .coalesce(1).write.mode("append").parquet(str(src / name)))
-
-    write_one(rows1, "b1")
-    write_one(rows2, "b2")
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    deduped = dedup_stream(stream, key_cols=("event_id",), watermark="2 hours")
-    q = (
-        deduped.writeStream.outputMode("append").format("memory")
-        .queryName("dedup_stream_t").trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("dedup_stream_t").select("event_id").collect()
-    ids = [r["event_id"] for r in got]
-    assert sorted(ids) == list(range(60))  # every key exactly once
-    assert len(ids) == len(set(ids))
-
-
-def test_stream_degrees_ivm_equals_batch(spark, tmp_path):
-    """Incrementally-maintained degree view (per-batch deltas merged
-    additively) must equal the batch degrees of the full corpus."""
-    import os
-
-    from ner_funtool_spark.plans.kg import build_triples, documents_as_source
-    from ner_funtool_spark.streaming.stream import stream_degrees_ivm
-
-    # three micro-batch files from the sf0.001 documents
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = tmp_path / "ivmsrc"
-    src.mkdir()
-    for i in range(3):
-        (docs.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.parquet(str(src / f"b{i}")))
-    store = str(tmp_path / "degstore")
-    n = stream_degrees_ivm(spark, f"{src}/*", store)
-    assert n == 3
-    from ner_funtool_spark.streaming.snapshot import read_snapshot
-
-    got = {r["node"]: r["deg"] for r in read_snapshot(spark, store).collect()}
-    t = build_triples(documents_as_source(docs), domain="doc", mode="rules")
-    want = {
-        r["node"]: r["deg"]
-        for r in t.select(F.col("subj").alias("node"))
-        .union(t.select(F.col("obj").alias("node")))
-        .groupBy("node").agg(F.count("*").alias("deg")).collect()
-    }
-    assert got == want
-
-
-def test_snapshot_store_commit_prune_replay(spark, tmp_path):
-    """Versioned snapshot store semantics: _SUCCESS gates visibility,
-    replays read the predecessor (below=), old versions are pruned."""
-    import os
-
-    from ner_funtool_spark.streaming.snapshot import (
-        latest_committed_version,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    store = str(tmp_path / "snapstore")
-    assert read_snapshot(spark, store) is None  # missing store != error
-
-    df0 = spark.range(5).withColumnRenamed("id", "n")
-    write_snapshot(df0, store, 0)
-    assert latest_committed_version(spark, store) == 0
-
-    # an UNcommitted (crashed) later version is invisible to readers
-    os.makedirs(f"{store}/v{7:010d}", exist_ok=True)
-    assert latest_committed_version(spark, store) == 0
-    assert read_snapshot(spark, store).count() == 5
-
-    # replay isolation: below= resolves to the strict predecessor
-    write_snapshot(spark.range(9).withColumnRenamed("id", "n"), store, 1)
-    assert read_snapshot(spark, store).count() == 9
-    assert read_snapshot(spark, store, below=1).count() == 5
-
-    # pruning: after v2 commits (keep=2), v0 and the v7 debris are gone
-    write_snapshot(spark.range(3).withColumnRenamed("id", "n"), store, 2)
-    left = sorted(d for d in os.listdir(store) if d.startswith("v"))
-    assert left == [f"v{1:010d}", f"v{2:010d}"]
-
-
-def test_ivm_replayed_epoch_does_not_double_count(spark, tmp_path):
-    """An at-least-once replay of a committed epoch must produce the
-    same store (additive deltas re-merged against the SAME predecessor,
-    not against the replayed epoch's own output)."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from ner_funtool_spark.streaming.snapshot import read_snapshot, write_snapshot
-
-    store = str(tmp_path / "ivm_replay")
-
-    def apply_epoch(epoch, delta_rows):
-        delta = spark.createDataFrame(delta_rows, "node string, deg bigint")
-        existing = read_snapshot(spark, store, below=epoch)
-        if existing is not None:
-            merged = existing.unionByName(delta).groupBy("node").agg(
-                F.sum("deg").cast("bigint").alias("deg")
-            )
-        else:
-            merged = delta
-        write_snapshot(merged, store, epoch)
-
-    apply_epoch(0, [("a", 1), ("b", 2)])
-    apply_epoch(1, [("a", 3), ("c", 1)])
-    first = {r["node"]: r["deg"] for r in read_snapshot(spark, store).collect()}
-    apply_epoch(1, [("a", 3), ("c", 1)])  # replay of epoch 1
-    second = {r["node"]: r["deg"] for r in read_snapshot(spark, store).collect()}
-    assert first == second == {"a": 4, "b": 2, "c": 1}
-
-
 def test_streaming_hot_path_has_no_driver_materialization():
-    """The foreachBatch maintenance loops must never round-trip the
-    store through the driver: no toPandas/collect/createDataFrame in
-    the shared loop, the co-mention delta writer or any maintainer's
-    step (the r3 scale-killer, VERDICT r3 item 1)."""
+    """The foreachBatch document path must never round-trip a batch's
+    frames through the driver: no toPandas/collect/createDataFrame in
+    the stream runner or the mention host (the r3 scale-killer,
+    VERDICT r3 item 1)."""
     import inspect
 
     from ner_funtool_spark.streaming import stream as stream_mod
 
-    for fn in (stream_mod._maintain, stream_mod._run_docs,
-               stream_mod._comention_delta,
-               stream_mod.stream_triples_upsert, stream_mod.stream_degrees_ivm,
-               stream_mod.stream_pagerank_ivm, stream_mod.stream_comention_ivm,
-               stream_mod.stream_communities_ivm):
+    for fn in (stream_mod._run_docs, stream_mod.stream_mentions):
         src = inspect.getsource(fn)
         for banned in ("toPandas", ".collect(", "createDataFrame"):
             assert banned not in src, f"{fn.__name__} contains {banned}"
-
-
-def test_stream_pagerank_ivm_matches_batch_and_saves_rounds(spark, tmp_path):
-    """Incrementally-maintained PageRank: after streaming the corpus in
-    micro-batches (edge deltas + warm-started re-convergence), the
-    final ranks equal the batch fixed point, and the warm-started final
-    batch converges in FEWER rounds than a cold start on the same
-    graph (the IVM payoff)."""
-    from ner_funtool_spark.operators.graph import pagerank_converged
-    from ner_funtool_spark.plans.kg import build_triples, documents_as_source
-    from ner_funtool_spark.streaming.snapshot import read_snapshot
-    from ner_funtool_spark.streaming.stream import stream_pagerank_ivm
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = tmp_path / "prsrc"
-    src.mkdir()
-    for i in range(3):
-        (docs.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.parquet(str(src / f"b{i}")))
-    # batch 4 RE-DELIVERS batch 0's documents (new file, same rows):
-    # its edge delta is a subset of the accumulated graph, so the
-    # warm-started re-convergence must be near-free
-    (docs.filter(F.col("doc_id") % 3 == 0).coalesce(1)
-     .write.parquet(str(src / "b3_redelivery")))
-    e_store = str(tmp_path / "pr_edges")
-    r_store = str(tmp_path / "pr_ranks")
-    # d=0.5 keeps the contraction fast (test-speed knob; the IVM
-    # invariants are damping-independent)
-    tol, d = 1e-9, 0.5
-    rounds_log = stream_pagerank_ivm(
-        spark, f"{src}/*", e_store, r_store, tol=tol, damping=d)
-    assert len(rounds_log) == 4
-
-    t = build_triples(documents_as_source(docs), domain="doc", mode="rules")
-    edges = t.select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")).distinct()
-    want_df, cold_rounds = pagerank_converged(edges, tol=tol, damping=d)
-    got = {r["node"]: r["pr"] for r in read_snapshot(spark, r_store).collect()}
-    want = {r["node"]: r["pr"] for r in want_df.collect()}
-    assert set(got) == set(want)
-    # both sides converged to the same unique fixed point (tol 1e-9);
-    # compare beyond the 6-decimal rounding boundary noise
-    assert all(abs(got[n] - want[n]) <= 2e-6 for n in want)
-    # the IVM payoff scales with the DELTA: the unchanged-graph
-    # re-delivery batch re-converges in <= 2 rounds (contraction bound
-    # 1.5*tol after one application), strictly under the cold start
-    assert rounds_log[-1][1] <= 2 < cold_rounds
-
-
-def test_stream_comention_ivm_equals_batch(spark, tmp_path):
-    """Incrementally-maintained co-mention edge view == batch
-    comention_edges over the full corpus (per-document pair counts are
-    additive across disjoint doc batches), and the maintained view
-    feeds the batch analytics unchanged."""
-    from ner_funtool_spark.operators.graph import comention_edges
-    from ner_funtool_spark.plans.kg import detect_mentions, documents_as_source
-    from ner_funtool_spark.streaming.snapshot import read_snapshot
-    from ner_funtool_spark.streaming.stream import stream_comention_ivm
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = tmp_path / "cmsrc"
-    src.mkdir()
-    for i in range(3):
-        (docs.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.parquet(str(src / f"b{i}")))
-    store = str(tmp_path / "cmstore")
-    n = stream_comention_ivm(spark, f"{src}/*", store)
-    assert n == 3
-    got = {
-        (r["a"], r["b"]): r["n_docs"]
-        for r in read_snapshot(spark, store).collect()
-    }
-    m = detect_mentions(documents_as_source(docs), domain="doc", mode="rules")
-    want = {
-        (r["a"], r["b"]): r["n_docs"] for r in comention_edges(m).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_compact_snapshot_preserves_rows_and_advances_head(spark, tmp_path):
-    from ner_funtool_spark.streaming.snapshot import (
-        compact_snapshot,
-        latest_committed_version,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    store = str(tmp_path / "fragstore")
-    df = spark.range(0, 5000).selectExpr("id AS node", "id * 2 AS deg")
-    write_snapshot(df.repartition(16), store, 0)  # 16 small files
-    stats = compact_snapshot(spark, store)
-    assert stats == {"from_version": 0, "to_version": 1, "out_files": 1}
-    assert latest_committed_version(spark, store) == 1
-    got = read_snapshot(spark, store)
-    assert got.count() == 5000
-    assert got.exceptAll(df).count() == 0 and df.exceptAll(got).count() == 0
-
-
-def test_degrees_ivm_across_invocations(spark, tmp_path):
-    """Cross-run semantics of the maintenance loops (review finding):
-    WITH a checkpoint, a second invocation processes only NEW files
-    and merges incrementally onto the previous head; WITHOUT one, a
-    re-run rebuilds the view above the old head — in both cases the
-    final store equals the batch recompute, never a partial or
-    double-counted view."""
-    from ner_funtool_spark.plans.kg import build_triples, documents_as_source
-    from ner_funtool_spark.streaming.snapshot import read_snapshot
-    from ner_funtool_spark.streaming.stream import stream_degrees_ivm
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-
-    def batch_degrees(d):
-        t = build_triples(documents_as_source(d), domain="doc", mode="rules")
-        return {
-            r["node"]: r["deg"]
-            for r in t.select(F.col("subj").alias("node"))
-            .union(t.select(F.col("obj").alias("node")))
-            .groupBy("node").agg(F.count("*").alias("deg")).collect()
-        }
-
-    # --- checkpointed: resume processes ONLY the new file ---
-    src = tmp_path / "ckpt_src"
-    src.mkdir()
-    for i in range(2):
-        (docs.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.parquet(str(src / f"b{i}")))
-    store = str(tmp_path / "ckpt_store")
-    ckpt = str(tmp_path / "ckpt")
-    n1 = stream_degrees_ivm(spark, f"{src}/*", store,
-                            checkpoint_location=ckpt)
-    assert n1 == 2
-    (docs.filter(F.col("doc_id") % 3 == 2).coalesce(1)
-     .write.parquet(str(src / "b2")))
-    n2 = stream_degrees_ivm(spark, f"{src}/*", store,
-                            checkpoint_location=ckpt)
-    assert n2 == 1  # only the new file
-    got = {r["node"]: r["deg"] for r in read_snapshot(spark, store).collect()}
-    assert got == batch_degrees(docs)
-
-    # --- checkpoint-less: a re-run REBUILDS (no double counting) ---
-    src2 = tmp_path / "plain_src"
-    src2.mkdir()
-    (docs.filter(F.col("doc_id") % 3 == 0).coalesce(1)
-     .write.parquet(str(src2 / "b0")))
-    store2 = str(tmp_path / "plain_store")
-    stream_degrees_ivm(spark, f"{src2}/*", store2)
-    (docs.filter(F.col("doc_id") % 3 == 1).coalesce(1)
-     .write.parquet(str(src2 / "b1")))
-    stream_degrees_ivm(spark, f"{src2}/*", store2)  # reprocesses BOTH files
-    got2 = {r["node"]: r["deg"] for r in read_snapshot(spark, store2).collect()}
-    want2 = batch_degrees(docs.filter(F.col("doc_id") % 3 != 2))
-    assert got2 == want2
-
-
-def test_stream_communities_ivm_guarantees(spark, tmp_path):
-    """Incremental LPA maintenance: edge deltas accumulate additively;
-    labels re-converge warm-started per batch.  Gated are the
-    GUARANTEED properties only (lpa_converged docstring): every batch
-    converges, and the final re-delivery batch (unchanged edge SET —
-    additive counts grow, the pair set doesn't) re-confirms the
-    previous labeling in exactly 1 round with zero label changes.
-    Warm == cold equality on a grown graph is deliberately NOT
-    asserted (sync LPA has many fixed points; the start selects one)."""
-    from ner_funtool_spark.operators.graph import comention_edges
-    from ner_funtool_spark.plans.kg import detect_mentions, documents_as_source
-    from ner_funtool_spark.streaming.snapshot import read_snapshot
-    from ner_funtool_spark.streaming.stream import stream_communities_ivm
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = tmp_path / "lpasrc"
-    src.mkdir()
-    for i in range(3):
-        (docs.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.parquet(str(src / f"b{i}")))
-    # batch 4 re-delivers batch 0's documents: same co-mention PAIRS
-    (docs.filter(F.col("doc_id") % 3 == 0).coalesce(1)
-     .write.parquet(str(src / "b3_redelivery")))
-    e_store = str(tmp_path / "lpa_edges")
-    l_store = str(tmp_path / "lpa_labels")
-    log = stream_communities_ivm(spark, f"{src}/*", e_store, l_store)
-    assert len(log) == 4
-    assert all(conv for _, _, conv in log)
-    # the unchanged-graph re-delivery batch is 1 confirm round
-    assert log[-1][1] == 1
-    # and changed nothing: final labels == labels after epoch 2
-    final = {r["node"]: r["community"]
-             for r in read_snapshot(spark, l_store).collect()}
-    prev = {r["node"]: r["community"]
-            for r in read_snapshot(spark, l_store, below=3).collect()}
-    assert final == prev and len(final) > 0
-    # maintained edge view == batch comention pairs => same node universe
-    m = detect_mentions(documents_as_source(docs), domain="doc", mode="rules")
-    ce = comention_edges(m)
-    want_nodes = {
-        r["n"]
-        for r in ce.select(F.col("a").alias("n"))
-        .union(ce.select(F.col("b").alias("n"))).distinct().collect()
-    }
-    assert set(final) == want_nodes
