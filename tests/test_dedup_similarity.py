@@ -268,6 +268,18 @@ def test_multimodal_plumbing(spark):
     assert all(max(r["out_width"], r["out_height"]) <= 64 for r in rp)
 
 
+def test_real_decode_is_gated(spark, monkeypatch):
+    """Without the image stack, real (non-stub) feature extraction is
+    refused up front instead of silently falling back to the stub."""
+    from ner_funtool_spark.operators import multimodal as mm
+
+    media = synth_media(spark, 2)
+    monkeypatch.setattr(mm, "HAS_PIL", False)
+    with pytest.raises(NotImplementedError):
+        mm.extract_features(media, stub=False)
+    assert mm.extract_features(media, stub=True).count() == 2
+
+
 def _np_lloyds(X, k, iterations):
     """numpy reference of kmeans_centroids: cosine assignment with
     cid-ascending tie-break, mean update, init = first k rows."""
