@@ -16,6 +16,14 @@ at its last read and ``zipimport._zip_directory_cache`` still holds the
 archive, the cached file table is reused; otherwise the stock method
 runs and the new stamp is recorded.  An archive that changes or
 disappears behaves exactly as with the stock method.
+
+The hook serves any session whose workers import this package, and
+matters where they import pyspark from Spark's archives: sessions the
+package does not build, such as a harness passing its own ``spark``,
+run Spark's stock daemon.  Sessions built by ``get_spark`` start their
+daemon through ``_daemon.py``, which takes the archives off the
+workers' path when an installed pyspark of the same release exists;
+their workers then have no Spark zip importer for the hook to skip.
 """
 
 from __future__ import annotations

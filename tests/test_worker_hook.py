@@ -1,15 +1,23 @@
-"""Stat-checked zip-importer invalidation in the package's Python workers."""
+"""Stat-checked zip-importer invalidation in Python workers that import
+pyspark from Spark's archives, and which pyspark a ``get_spark`` session's
+workers run."""
 
 from __future__ import annotations
 
 import importlib
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
+from types import SimpleNamespace
 
 import pytest
 
-from ner_funtool_spark import _worker
+from ner_funtool_spark import _daemon, _worker
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -102,38 +110,82 @@ def test_install_only_in_a_task_before_python_313(monkeypatch):
     assert zipimport.zipimporter.invalidate_caches is _worker._stat_checked_invalidate
 
 
+# A session built with a plain ``SparkSession.builder`` runs Spark's stock
+# daemon, whose workers import pyspark from Spark's archives: the case the
+# hook serves.  ``get_spark`` sessions start on the installed pyspark
+# instead (``_daemon.py``), so the probe runs in a session of its own.
+STOCK_DAEMON_PROBE = """
+import json
+import pyarrow as pa
+from pyspark.sql import SparkSession
+
+
+def probe(batches):
+    import importlib as il
+    import sys as s
+    import zipimport as zi
+
+    import ner_funtool_spark  # noqa: F401  (what any package stage imports)
+
+    for _ in batches:
+        pass
+    il.invalidate_caches()  # stamps archives first seen by this worker
+    calls = []
+    stock_read = zi._read_directory
+
+    def counting(path):
+        calls.append(path)
+        return stock_read(path)
+
+    zi._read_directory = counting
+    try:
+        il.invalidate_caches()
+    finally:
+        zi._read_directory = stock_read
+    n_zip = sum(isinstance(v, zi.zipimporter) for v in s.path_importer_cache.values())
+    yield pa.RecordBatch.from_pydict({"reads": [len(calls)], "zip_importers": [n_zip]})
+
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+df = spark.range(4, numPartitions=2).mapInArrow(probe, "reads long, zip_importers long")
+df.collect()  # warms (and reuses) the workers
+print("ROWS", json.dumps([r.asDict() for r in df.collect()]))
+spark.stop()
+"""
+
+
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ re-reads zips lazily")
-def test_spark_workers_skip_the_zip_reread(spark):
-    import pyarrow as pa
-
-    def probe(batches):
-        import importlib as il
-        import sys as s
-        import zipimport as zi
-
-        import ner_funtool_spark  # noqa: F401  (what any package stage imports)
-
-        for _ in batches:
-            pass
-        il.invalidate_caches()  # stamps archives first seen by this worker
-        calls = []
-        stock_read = zi._read_directory
-
-        def counting(path):
-            calls.append(path)
-            return stock_read(path)
-
-        zi._read_directory = counting
-        try:
-            il.invalidate_caches()
-        finally:
-            zi._read_directory = stock_read
-        n_zip = sum(isinstance(v, zi.zipimporter) for v in s.path_importer_cache.values())
-        yield pa.RecordBatch.from_pydict({"reads": [len(calls)], "zip_importers": [n_zip]})
-
-    df = spark.range(4, numPartitions=2).mapInArrow(probe, "reads long, zip_importers long")
-    df.collect()  # warms (and reuses) the workers
-    rows = df.collect()
+def test_spark_workers_skip_the_zip_reread(tmp_path):
+    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_DRIVER_MEM": "1g"}
+    run = subprocess.run([sys.executable, "-c", STOCK_DAEMON_PROBE], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    out = [line for line in run.stdout.splitlines() if line.startswith("ROWS ")]
+    assert run.returncode == 0 and len(out) == 1, run.stderr[-3000:]
+    rows = [SimpleNamespace(**r) for r in json.loads(out[0][5:])]
     assert len(rows) == 2
     assert all(r.zip_importers > 0 for r in rows), rows  # the check has zips to skip
     assert all(r.reads == 0 for r in rows), rows
+
+
+def test_get_spark_workers_run_the_installed_pyspark(spark):
+    """Workers of a ``get_spark`` session import pyspark from a plain
+    directory and hold no Spark archive on their path."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import sys as s
+
+        import pyspark
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"file": [pyspark.__file__], "path": [s.path]})
+
+    rows = spark.range(4, numPartitions=2).mapInArrow(
+        probe, "file string, path array<string>").collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert os.path.isfile(r.file), r.file  # not a member inside a zip
+        assert not any(_daemon._archive_package(p) is not None for p in r.path), r.path
