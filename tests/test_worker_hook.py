@@ -157,7 +157,7 @@ spark.stop()
 
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ re-reads zips lazily")
 def test_spark_workers_skip_the_zip_reread(tmp_path):
-    env = {**os.environ, "PYTHONPATH": ROOT, "SPARK_DRIVER_MEM": "1g"}
+    env = {**os.environ, "PYTHONPATH": ROOT}
     run = subprocess.run([sys.executable, "-c", STOCK_DAEMON_PROBE], cwd=tmp_path, env=env,
                          capture_output=True, text=True, timeout=300)
     out = [line for line in run.stdout.splitlines() if line.startswith("ROWS ")]

@@ -1,68 +1,63 @@
-"""Per-task Python worker start and init times of new sessions' first job.
+"""Per-task Python worker start and init times of perfbench's set-up job.
 
-Starts ``--sessions`` ``get_spark`` sessions one after another, as
-perfbench's set-up does, each with the event log on.  Each runs
-``build_triples`` over ``--files`` synthetic code files in ``--cores``
-partitions, so every core starts a Python worker, then asks the workers
+Stages FILES seeded source files as perfbench stages them, then starts
+SESSIONS sessions one after another with perfbench's own ``set_up`` on
+CORES cores, each with the event log on, and asks each session's workers
 where they imported pyspark from.  Prints one JSON line per session: the
-wall from session start to the end of the first job, each task's "time
-to start Python workers" and "time to initialize Python workers" (ms,
-from the event log), and the workers' ``pyspark.__file__``.
+``set_up`` wall, each set-up task's "time to start Python workers" and
+"time to initialize Python workers" (ms, from the event log, keyed by
+perfbench's ``PY_METRICS`` names), and the workers' ``pyspark.__file__``.
 
-    python tools/worker_start_probe.py [--sessions 3] [--cores 4] [--files 400]
+    python tools/worker_start_probe.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-METRICS = {"time to start Python workers": "start_ms",
-           "time to initialize Python workers": "init_ms"}
+import run as perfbench  # noqa: E402
+import workloads  # noqa: E402
+from tracing import PY_METRICS, event_log_file  # noqa: E402
+
+SESSIONS = 3
+CORES = 4
+FILES = 400
+WORKER_TIMES = ("py_worker_start", "py_worker_init")
 
 
-def task_times(log_path: str, description: str) -> list[dict]:
-    """Python worker times of each task of the jobs with ``description``."""
+def set_up_task_times(log_path: str) -> list[dict]:
+    """Python worker times of each task of the jobs with no description:
+    ``set_up`` names none, the probe after it does."""
     stages, tasks = set(), []
     with open(log_path) as f:
         for line in f:
             ev = json.loads(line)
-            if ev["Event"] == "SparkListenerJobStart" and (
-                    ev.get("Properties") or {}).get("spark.job.description") == description:
+            if ev["Event"] == "SparkListenerJobStart" and not (
+                    ev.get("Properties") or {}).get("spark.job.description"):
                 stages.update(ev["Stage IDs"])
             elif ev["Event"] == "SparkListenerTaskEnd" and ev["Stage ID"] in stages:
                 accs = (ev.get("Task Info") or {}).get("Accumulables", [])
-                times = {METRICS[a["Name"]]: int(a["Update"])
-                         for a in accs if a.get("Name") in METRICS}
+                times = {PY_METRICS[a["Name"]]: int(a["Update"]) for a in accs
+                         if PY_METRICS.get(a.get("Name")) in WORKER_TIMES}
                 if times:
                     tasks.append(times)
     return tasks
 
 
-def one_session(cores: int, n_files: int, log_dir: str) -> dict:
+def one_session(stage_dir: str, run_dir: Path) -> dict:
     import pyarrow as pa
-    from pyspark.sql import functions as F
 
-    from ner_funtool_spark.plans.kg import build_triples
-    from ner_funtool_spark.session import get_spark
-
+    conf = perfbench.session_conf(run_dir, trace=True)
     t0 = time.perf_counter()
-    spark = get_spark("worker_start_probe", cores=cores, shuffle_partitions=cores, extra={
-        "spark.eventLog.enabled": "true", "spark.eventLog.dir": log_dir,
-        "spark.eventLog.compress": "false", "spark.eventLog.rolling.enabled": "false"})
-    rows = [("r0", f"m{i}.py", "c0", "py", f"import pkg.mod{i}\ndef fn_{i}(a):\n")
-            for i in range(n_files)]
-    src = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string",
-    ).withColumn("content_sha", F.sha2("content", 256))  # one scan partition per core
-    spark.sparkContext.setJobDescription("setup")
-    build_triples(src, mode="rules").write.format("noop").mode("overwrite").save()
+    spark = perfbench.set_up(stage_dir, FILES, conf, CORES)
     setup_s = time.perf_counter() - t0
 
     def origin(batches):
@@ -72,25 +67,22 @@ def one_session(cores: int, n_files: int, log_dir: str) -> dict:
             pass
         yield pa.RecordBatch.from_pydict({"file": [pyspark.__file__]})
 
-    spark.sparkContext.setJobDescription(None)
-    files = sorted({r.file for r in spark.range(cores, numPartitions=cores)
+    spark.sparkContext.setJobDescription("origin")
+    files = sorted({r.file for r in spark.range(CORES, numPartitions=CORES)
                     .mapInArrow(origin, "file string").collect()})
     app_id = spark.sparkContext.applicationId
     spark.stop()
-    log = os.path.join(log_dir, app_id)
-    return {"setup_s": round(setup_s, 3), "tasks": task_times(log, "setup"),
+    log = event_log_file(str(run_dir / "events"), app_id)
+    return {"setup_s": round(setup_s, 3), "tasks": set_up_task_times(log),
             "worker_pyspark": files}
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--sessions", type=int, default=3)
-    ap.add_argument("--cores", type=int, default=4)
-    ap.add_argument("--files", type=int, default=400)
-    args = ap.parse_args(argv)
-    with tempfile.TemporaryDirectory() as log_dir:
-        for i in range(args.sessions):
-            rec = one_session(args.cores, args.files, log_dir)
+def main() -> int:
+    with tempfile.TemporaryDirectory() as tmp:
+        stage_dir = os.path.join(tmp, "stage")
+        workloads.stage(stage_dir, FILES, 1, lambda files, d: {})
+        for i in range(SESSIONS):
+            rec = one_session(stage_dir, Path(tmp) / f"run{i}")
             print(json.dumps({"session": i, **rec}), flush=True)
     return 0
 
