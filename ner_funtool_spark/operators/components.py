@@ -3,9 +3,11 @@
 Alternating large-star / small-star DataFrame joins (the classic
 MapReduce CC formulation, converges in O(log n) rounds) with a
 driver-side convergence check (SURVEY.md §7 M4; north_star's
-union-find analog).  The loop runs on ``graph._iterate``: an eager
-``localCheckpoint`` per round, each predecessor released once compared,
-and a warning when ``max_iter`` runs out before the fixed point.
+union-find analog).  The loop runs on ``graph._iterate``: the edge list
+and every round are eager ``localCheckpoint``s, each predecessor is
+released once compared, and a warning is raised when ``max_iter`` runs
+out before the fixed point.  The (node, canonical_id) result is an
+eager checkpoint as well, so the call leaves no round behind.
 
 Node ids are any orderable column (we use entity strings; the
 representative is the lexicographic min of the component, so DuckDB's
@@ -89,10 +91,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("canonical_id")).distinct()
         return members.unionByName(roots).groupBy("node").agg(
             F.min("canonical_id").alias("canonical_id")
-        )
+        ).localCheckpoint(eager=True)
 
     return _iterate(e, lambda e: _small_star(_large_star(e)), max_iter, canonical,
-                    done=stable, eager=True, name="connected_components")[0]
+                    done=stable, name="connected_components")[0]
 
 
 def canonicalize(nodes: DataFrame, edges: DataFrame, node_col: str = "node",

@@ -92,8 +92,7 @@ def shingles(documents: DataFrame, text_col: str = "text",
 def ngram_jaccard_pairs(documents: DataFrame, threshold: float,
                         text_col: str = "text", id_col: str = "doc_id",
                         k: int = SHINGLE_K,
-                        max_df: int = MAX_SHINGLE_DF,
-                        log_dropped: bool = True) -> DataFrame:
+                        max_df: int = MAX_SHINGLE_DF) -> DataFrame:
     """(a, b, score) doc pairs with shingle-set jaccard >= threshold.
 
     Candidates = pairs sharing >= 1 *blocking* shingle; a blocking
@@ -103,19 +102,18 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float,
     yields O(D²) candidate rows on one skewed key.  Verification uses
     the FULL shingle sets, so reported jaccard scores are exact; the
     only approximation is recall for pairs whose overlap consists
-    ENTIRELY of >max_df shingles.  Dropped shingles are logged
-    (``log_dropped``), never silent.
+    ENTIRELY of >max_df shingles.  Dropped shingles are logged, never
+    silent.
     """
     sh = shingles(documents, text_col, id_col, k).persist()
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-    if log_dropped:
-        hot = df_counts.filter(F.col("_df") > max_df)
-        n_hot = hot.count()
-        if n_hot:
-            sample = [r["shingle"] for r in hot.orderBy(F.desc("_df")).head(5)]
-            logger.warning(
-                "ngram_jaccard_pairs: %d shingles over max_df=%d dropped "
-                "from candidate blocking (top: %s)", n_hot, max_df, sample)
+    hot = df_counts.filter(F.col("_df") > max_df)
+    n_hot = hot.count()
+    if n_hot:
+        sample = [r["shingle"] for r in hot.orderBy(F.desc("_df")).head(5)]
+        logger.warning(
+            "ngram_jaccard_pairs: %d shingles over max_df=%d dropped "
+            "from candidate blocking (top: %s)", n_hot, max_df, sample)
     block_sh = sh.join(
         df_counts.filter(F.col("_df") <= max_df).select("shingle"), "shingle"
     )

@@ -21,11 +21,15 @@ round(6) on doubles.
 
 Every convergence loop — the three PageRank forms, label propagation,
 k-core and ``components.connected_components`` — runs on ``_iterate``,
-the one owner of the loop policy: a ``localCheckpoint`` per round (so
-the lineage never grows with the round count), the round limit (a
-loop with a convergence check warns when it runs out of rounds), and
-the release of round checkpoints and persisted inputs once the result
-no longer reads them, so a call leaves at most its result persistent.
+the one owner of the loop policy.  It has one form: the initial state,
+every round and every result are eager ``localCheckpoint``s, so the
+lineage never grows with the round count and no later job computes a
+checkpoint.  Each round's predecessor is released after the round's
+check, and the last round and the persisted inputs after the result;
+a call leaves exactly its result persistent.  A convergence check
+reads a scalar ``observe``-d on the round's own checkpoint job (the
+PageRank residual, the number of changed LPA labels), so it costs no
+job of its own; a loop with a check warns when it runs out of rounds.
 """
 
 from __future__ import annotations
@@ -46,51 +50,42 @@ def _checkpoint_rdd(df: DataFrame):
     return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
 
 
+def _release(df: DataFrame) -> None:
+    """Drop what ``df`` holds: its checkpoint RDD, or else its cache."""
+    rdd = _checkpoint_rdd(df)
+    if rdd is None:
+        df.unpersist()
+    else:
+        rdd.unpersist(False)
+
+
 def _iterate(state: DataFrame, step, max_rounds: int, finish, done=None,
-             eager: bool = False, inputs=(), name: str = "loop"):
+             inputs=(), name: str = "loop"):
     """Run ``state = step(state)`` for at most ``max_rounds`` rounds, or
     until ``done(prev, new)`` holds; returns ``(finish(state), rounds,
-    converged)``.  Every round's state is ``localCheckpoint``-ed
-    (``eager`` picks the form), and so is the initial one when a
-    ``done`` check will read it or the loop is eager (a step may
-    ``observe`` its round scalars on that checkpoint's job); a checked
-    loop that runs out of rounds warns.  An eager checkpoint no longer
-    reads its predecessor, which is released once the round's check has
-    run; lazy ones are computed only with the finished frame, so they
-    are released after ``finish`` — if it returned a checkpoint (a lazy
-    result keeps what it reads).  The ``inputs`` persisted or
-    checkpointed for the loop are released after ``finish``.
+    converged)``.  The initial state and every round are eager
+    ``localCheckpoint``s, so a step may ``observe`` its round scalars on
+    the checkpoint's own job and ``done`` may read them; a checked loop
+    that runs out of rounds warns.  An eager checkpoint no longer reads
+    its predecessor, which is released once the round's check has run.
+    ``finish`` returns an eager checkpoint too, so the last round and
+    the ``inputs`` persisted or checkpointed for the loop are released
+    after it.
     """
-    held = []
-
-    def checkpoint(df):
-        df = df.localCheckpoint(eager=eager)
-        held.append(_checkpoint_rdd(df))
-        return df
-
-    if done is not None or eager:
-        state = checkpoint(state)
+    state = state.localCheckpoint(eager=True)
     rounds, converged = 0, False
     while rounds < max_rounds and not converged:
-        new = checkpoint(step(state))
+        new = step(state).localCheckpoint(eager=True)
         rounds += 1
         converged = done is not None and done(state, new)
-        if eager and len(held) > 1:
-            held.pop(0).unpersist(False)
+        _release(state)
         state = new
     if done is not None and not converged:
         warnings.warn(f"{name} did not converge within {rounds} rounds",
                       RuntimeWarning, stacklevel=3)
     out = finish(state)
-    if _checkpoint_rdd(out) is not None:
-        for rdd in held:
-            rdd.unpersist(False)
-    for df in inputs:
-        rdd = _checkpoint_rdd(df)
-        if rdd is None:
-            df.unpersist()
-        else:
-            rdd.unpersist(False)
+    for df in (state, *inputs):
+        _release(df)
     return out, rounds, converged
 
 
@@ -434,8 +429,8 @@ def _pagerank(edges: DataFrame, src_col: str, dst_col: str, damping: float,
     return _iterate(
         observed(init.select(*cols, start.alias("pr")), dangling),
         step, max_rounds, finish,
-        done=None if tol is None else settled, eager=True,
-        inputs=(nodes,), name="pagerank_converged",
+        done=None if tol is None else settled, inputs=(nodes,),
+        name="pagerank_converged",
     )[:2]
 
 
@@ -544,19 +539,13 @@ def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _labels_unchanged(old: DataFrame, new: DataFrame) -> bool:
-    return (
-        old.join(new.select("u", F.col("lbl").alias("lbl2")), "u")
-        .filter(F.col("lbl") != F.col("lbl2"))
-        .count()
-    ) == 0
-
-
 def _lpa(edges: DataFrame, a_col: str, b_col: str, max_rounds: int,
-         init_labels: DataFrame | None = None, done=None):
+         init_labels: DataFrame | None = None, converge: bool = False):
     """The LPA body behind ``label_propagation`` (fixed rounds) and
-    ``lpa_converged`` (``done`` = no label changed); returns
-    ``(labels, rounds, converged)``."""
+    ``lpa_converged`` (``converge``: stop once no label changed);
+    returns ``(labels, rounds, converged)``.  The converged form joins
+    each round's labels with the previous round's and ``observe``-s the
+    number that changed on the round's own checkpoint job."""
     e, und = _undirected(edges, a_col, b_col)
     und = und.persist()
     labels, lbl = und.select("u").distinct(), F.col("u")
@@ -567,13 +556,28 @@ def _lpa(edges: DataFrame, a_col: str, b_col: str, max_rounds: int,
             "u", "left",
         )
         lbl = F.coalesce(F.col("lbl0"), F.col("u"))
+    seen = []  # the Observation of each round, newest last
+
+    def step(lb):
+        new = _lpa_round(und, lb)
+        if not converge:
+            return new
+        seen.append(Observation())
+        changed = F.count(F.when(F.col("lbl") != F.col("old"), 1))
+        return (
+            new.join(lb.select("u", F.col("lbl").alias("old")), "u")
+            .observe(seen[-1], changed.alias("changed"))
+            .select("u", "lbl")
+        )
+
     return _iterate(
-        labels.select("u", lbl.alias("lbl")),
-        lambda lb: _lpa_round(und, lb), max_rounds,
+        labels.select("u", lbl.alias("lbl")), step, max_rounds,
         lambda lb: lb.select(
             F.col("u").alias("node"), F.col("lbl").alias("community")
         ).localCheckpoint(eager=True),
-        done=done, inputs=(und, e), name="lpa_converged",
+        done=(lambda old, new: seen[-1].get["changed"] == 0) if converge
+        else None,
+        inputs=(und, e), name="lpa_converged",
     )
 
 
@@ -634,13 +638,15 @@ def lpa_converged(edges: DataFrame, a_col: str = "a", b_col: str = "b",
       (measured: the co-mention graphs converge in ~3 rounds at
       sf0.001-0.01).
 
-    Per round: one join + two aggregations + one node-keyed equality
-    check (count of changed labels — the driver sees one long per
-    round).  New nodes absent from ``init_labels`` start as their own
-    community, exactly like a cold start.
+    Per round: the ``label_propagation`` round (one join + two
+    aggregations), joined on the node key with the previous round's
+    labels; the number of changed labels is ``observe``-d on the
+    round's own checkpoint job, so the check costs no job of its own
+    and the driver sees one long per round.  New nodes absent from
+    ``init_labels`` start as their own community, exactly like a cold
+    start.
     """
-    return _lpa(edges, a_col, b_col, max_rounds, init_labels,
-                done=_labels_unchanged)
+    return _lpa(edges, a_col, b_col, max_rounds, init_labels, converge=True)
 
 
 def kcore(edges: DataFrame, k: int = 3, rounds: int = 5,

@@ -28,15 +28,13 @@ JACCARD_THRESHOLD = 0.5
 MAX_BLOCK = 1000  # entities per blocking key before secondary refinement
 
 
-def _refine_hot_blocks(e: DataFrame, raw_col: str = "raw",
-                       max_block: int = MAX_BLOCK,
-                       log_refined: bool = True) -> DataFrame:
+def _refine_hot_blocks(e: DataFrame, max_block: int = MAX_BLOCK) -> DataFrame:
     """Block-size cap: any block holding more than ``max_block``
-    entities is refined with a secondary key (the SECOND token, '' if
-    absent), so one common first token ("get", "the") can never create
-    a block with quadratic pair count.  Pairs inside an oversized block
-    that differ in their second token are the documented recall
-    tradeoff; refined blocks are logged, never silent.
+    entities is refined with a secondary key (the SECOND token of the
+    ``raw`` token list, '' if absent), so one common first token ("get",
+    "the") can never create a block with quadratic pair count.  Pairs
+    inside an oversized block that differ in their second token are the
+    documented recall tradeoff; refined blocks are logged, never silent.
 
     ``e`` (the distinct entity table — small relative to mentions) is
     persisted so the logging count and the main plan share one pass of
@@ -45,16 +43,15 @@ def _refine_hot_blocks(e: DataFrame, raw_col: str = "raw",
     """
     e = e.persist()
     counts = e.groupBy("block").agg(F.count("*").alias("_bn"))
-    if log_refined:
-        hot = counts.filter(F.col("_bn") > max_block)
-        n_hot = hot.count()
-        if n_hot:
-            sample = [r["block"] for r in hot.orderBy(F.desc("_bn")).head(5)]
-            logger.warning(
-                "linking: %d blocks over max_block=%d refined with the "
-                "second-token key (top: %s)", n_hot, max_block, sample)
+    hot = counts.filter(F.col("_bn") > max_block)
+    n_hot = hot.count()
+    if n_hot:
+        sample = [r["block"] for r in hot.orderBy(F.desc("_bn")).head(5)]
+        logger.warning(
+            "linking: %d blocks over max_block=%d refined with the "
+            "second-token key (top: %s)", n_hot, max_block, sample)
     refined = F.concat_ws(
-        "#", F.col("block"), F.coalesce(F.element_at(raw_col, 2), F.lit(""))
+        "#", F.col("block"), F.coalesce(F.element_at("raw", 2), F.lit(""))
     )
     e2 = (
         e.join(counts, "block")
@@ -69,14 +66,12 @@ def _refine_hot_blocks(e: DataFrame, raw_col: str = "raw",
     # their entities become isolated nodes — so worst-case pair count
     # per key is hard-bounded at max_block², never quadratic in n
     counts2 = e2.groupBy("block").agg(F.count("*").alias("_bn2"))
-    if log_refined:
-        still = counts2.filter(F.col("_bn2") > max_block)
-        n_still = still.count()
-        if n_still:
-            logger.warning(
-                "linking: %d blocks still over max_block=%d AFTER "
-                "second-token refinement — dropped from candidate "
-                "generation", n_still, max_block)
+    n_still = counts2.filter(F.col("_bn2") > max_block).count()
+    if n_still:
+        logger.warning(
+            "linking: %d blocks still over max_block=%d AFTER "
+            "second-token refinement — dropped from candidate "
+            "generation", n_still, max_block)
     return (
         e2.join(counts2, "block")
         .filter(F.col("_bn2") <= max_block)

@@ -122,13 +122,13 @@ def test_ngram_hot_shingle_capped(spark):
     rows.append((100, f"{hot} u0 v0 w0"))  # true near-dup of doc 0
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["a"], r["b"]): r["score"]
-           for r in ngram_jaccard_pairs(df, 0.2, max_df=5, log_dropped=False).collect()}
+           for r in ngram_jaccard_pairs(df, 0.2, max_df=5).collect()}
     # docs 1..9 overlap doc 0 ONLY through hot shingles -> not candidates
     assert all(a == 0 and b == 100 for a, b in got)
     # the true near-dup is found via its rare shingles, score uses full sets
     assert got[(0, 100)] == 1.0
     # with the cap above every df, all >=threshold pairs appear
-    uncapped = ngram_jaccard_pairs(df, 0.2, max_df=1000, log_dropped=False).count()
+    uncapped = ngram_jaccard_pairs(df, 0.2, max_df=1000).count()
     assert uncapped >= len(got)
 
 

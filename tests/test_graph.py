@@ -410,22 +410,47 @@ def _loop_calls():
     }
 
 
+def _loop_graph(spark, n_nodes=40, n_edges=120):
+    """A random digraph ``d`` and its unordered edge list ``u`` (a < b)."""
+    from pyspark.sql import functions as F
+
+    _, d = _random_digraph(spark, n_nodes, n_edges)
+    return d, d.select(F.least("src", "dst").alias("a"),
+                       F.greatest("src", "dst").alias("b")).distinct()
+
+
 @pytest.mark.filterwarnings("ignore::RuntimeWarning")
 @pytest.mark.parametrize("name", sorted(_loop_calls()))
 def test_loop_leaves_at_most_its_result_persistent(spark, name):
     """Round checkpoints and persisted loop inputs are released: a call
-    grows the persistent-RDD count by at most its own result."""
-    from pyspark.sql import functions as F
+    leaves exactly one new persistent RDD, its result's own checkpoint."""
+    from ner_funtool_spark.operators.graph import _checkpoint_rdd
 
-    _, d = _random_digraph(spark, n_nodes=40, n_edges=120)
-    u = d.select(F.least("src", "dst").alias("a"),
-                 F.greatest("src", "dst").alias("b")).distinct()
+    d, u = _loop_graph(spark)
     persistent = spark.sparkContext._jsc.getPersistentRDDs
-    call = _loop_calls()[name]
-    before = persistent().size()
-    out = call(d, u)
-    assert persistent().size() - before <= 1
+    before = set(persistent().keySet())
+    out = _loop_calls()[name](d, u)
+    rdd = _checkpoint_rdd(out)
+    assert rdd is not None
+    assert set(persistent().keySet()) - before == {rdd.id()}
     assert out.count() > 0
+
+
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")
+@pytest.mark.parametrize("name", sorted(_loop_calls()))
+def test_loop_makes_no_lazy_checkpoint(spark, monkeypatch, name):
+    """Every ``localCheckpoint`` a graph loop makes is eager, so no later
+    job (an AQE broadcast among them) computes a round's checkpoint."""
+    d, u = _loop_graph(spark)
+    made, checkpoint = [], type(d).localCheckpoint
+
+    def recording(self, eager=True, storageLevel=None):
+        made.append(eager)
+        return checkpoint(self, eager, storageLevel)
+
+    monkeypatch.setattr(type(d), "localCheckpoint", recording)
+    _loop_calls()[name](d, u)
+    assert made and all(e is True for e in made), made
 
 
 def test_round_limit_warns_only_when_unconverged(spark):
@@ -537,3 +562,24 @@ def test_pagerank_round_plan_is_one_exchange(spark, monkeypatch, name):
         assert plan.count("Exchange hashpartitioning") == 1, plan
         for op in ("BroadcastExchange", "Join", "CartesianProduct"):
             assert op not in plan, plan
+
+
+def test_lpa_converged_check_costs_no_job(spark):
+    """The "no label changed" check is observed on each round's own
+    checkpoint job.  On this graph (13 rounds to the fixed point) a
+    separate join + count check job per round runs 108 jobs, 8.3 a
+    round; the observed check runs 84, 6.5 a round (AQE runs each
+    shuffle's map stage as a job of its own)."""
+    from ner_funtool_spark.operators.graph import lpa_converged
+
+    _, u = _loop_graph(spark, n_nodes=100, n_edges=400)
+    sc = spark.sparkContext
+    group = "lpa-converged-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        _, rounds, converged = lpa_converged(u)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert converged and rounds >= 5
+    assert jobs <= 7 * rounds, (jobs, rounds)

@@ -6,8 +6,12 @@ from a ``broadcast-exchange`` thread) and waits for an RDD's lock; the
 other, ``dag-scheduler-event-loop``, holds that lock in
 ``getCacheLocs -> checkpointRDD`` and waits for ``RDDCheckpointData$``.
 It needs a chain of lazy ``localCheckpoint``s that a broadcast reads.
+The graph loops make eager checkpoints only; the tool checks that none
+of them hangs.
 
-The tool runs ``--calls`` calls of one graph loop in a child process
+The tool runs ``--calls`` calls of one graph loop (each caller of
+``graph._iterate``: PageRank, label propagation fixed and converged,
+k-core, connected components) in a child process
 over a seeded graph shaped like ``kg_canonical_rank``'s canonical
 triples (files mentioning Zipf-distributed entities, repos containing
 files).  A watchdog reads the child's progress.  When one call makes no
@@ -34,7 +38,7 @@ import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-LOOPS = ("pagerank", "lpa", "kcore")
+LOOPS = ("pagerank", "lpa", "lpa_converged", "kcore", "cc")
 SEED = 6  # the perfbench seed the deadlock was first seen on
 CORES = 3  # kg_canonical_rank's local[nproc-1] on a 4-core host
 STALL_S = 120.0  # seconds without a finished call that count as a hang
@@ -62,6 +66,7 @@ def child(loop: str, calls: int) -> None:
     from pyspark.sql import functions as F
 
     from ner_funtool_spark.operators import graph as G
+    from ner_funtool_spark.operators.components import connected_components
     from ner_funtool_spark.session import get_spark
 
     spark = get_spark("checkpoint_deadlock_repro", cores=CORES,
@@ -73,7 +78,9 @@ def child(loop: str, calls: int) -> None:
                  F.greatest("src", "dst").alias("b")).distinct()
     run = {"pagerank": lambda: G.pagerank(d),
            "lpa": lambda: G.label_propagation(u),
-           "kcore": lambda: G.kcore(u, k=2)}[loop]
+           "lpa_converged": lambda: G.lpa_converged(u)[0],
+           "kcore": lambda: G.kcore(u, k=2),
+           "cc": lambda: connected_components(d)}[loop]
     for i in range(calls):
         t0 = time.perf_counter()
         n = run().count()
