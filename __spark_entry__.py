@@ -67,21 +67,9 @@ def _q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _doc_mentions(spark, sf_dir)
-    return m.select(
-        "repo",
-        "path",
-        F.col("sent_id").cast("bigint").alias("sent_id"),
-        F.col("begin").alias("mbegin"),
-        F.col("end").alias("mend"),
-        "text",
-        "etype",
-    )
-
-
 def _crf_mentions_std(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-CRF pipeline mentions with compare-ready column names."""
+    """Arrow-CRF pipeline mentions with compare-ready column names (the
+    kg_mentions query)."""
     m = _doc_mentions(spark, sf_dir)
     return m.select(
         "repo", "path",
@@ -179,16 +167,25 @@ def _q_embedding_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_link_scores(ents, threshold=0.5)
 
 
-def _q_entity_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _canon_map(mentions: DataFrame) -> DataFrame:
+    """Mentions -> (node = entity text, canonical_id) over the blocked
+    candidate-pair graph, identity for unlinked entities, as an eager
+    checkpoint.  The distinct entity table feeds both the edge builder
+    and the node list, so it is cached for the call (the tagging stage
+    runs once) and released once the result is computed."""
     from ner_funtool_spark.operators.components import canonicalize
     from ner_funtool_spark.operators.linking import candidate_pairs
 
-    # ents feeds both the edge builder and the node list — persist the
-    # (small) distinct entity table so the tagging stage runs once
-    ents = _crf_mentions_std(spark, sf_dir).select("text", "etype").distinct().persist()
+    ents = mentions.select("text", "etype").distinct().persist()
     edges = candidate_pairs(ents).select("src", "dst")
     nodes = ents.select(F.col("text").alias("node")).distinct()
-    return canonicalize(nodes, edges)
+    out = canonicalize(nodes, edges).localCheckpoint(eager=True)
+    ents.unpersist()
+    return out
+
+
+def _q_entity_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _canon_map(_crf_mentions_std(spark, sf_dir))
 
 
 JACCARD_T = 0.08
@@ -333,22 +330,23 @@ def _q_vocab_build(spark, sf_dir):
     return vocab_build(toks, min_count=2)
 
 
-def _q_dedup_clusters(spark, sf_dir):
-    from ner_funtool_spark.operators.components import canonicalize
+def _near_dup_clusters(docs: DataFrame) -> DataFrame:
+    """(node = doc_id, canonical_id) of every doc in a jaccard
+    near-dup cluster.  The pairs have a < b (no self-loops), so every
+    edge endpoint is in the connected-components result, and the
+    loop's eager initial checkpoint is the edge list's only reader: the
+    candidate + verify pipeline runs once."""
+    from ner_funtool_spark.operators.components import connected_components
     from ner_funtool_spark.operators.dedup import ngram_jaccard_pairs
 
-    # persist the (tiny) edge list: it feeds the CC init checkpoint AND
-    # the node list — without this the jaccard candidate+verify
-    # pipeline re-runs per materialization (r6, training_corpus probe)
-    edges = (
-        ngram_jaccard_pairs(_docs(spark, sf_dir), JACCARD_T)
+    return connected_components(
+        ngram_jaccard_pairs(docs, JACCARD_T)
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .persist()
     )
-    nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    )
-    return canonicalize(nodes, edges).select(
+
+
+def _q_dedup_clusters(spark, sf_dir):
+    return _near_dup_clusters(_docs(spark, sf_dir)).select(
         F.col("node").alias("doc_id"), F.col("canonical_id").alias("keep_id")
     )
 
@@ -358,19 +356,8 @@ def _q_dedup_keep_docs(spark, sf_dir):
     a jaccard cluster except its min-id representative is dropped
     (the keep-one-per-cluster materialization a training pipeline
     actually runs)."""
-    from ner_funtool_spark.operators.components import canonicalize
-    from ner_funtool_spark.operators.dedup import ngram_jaccard_pairs
-
     docs = _docs(spark, sf_dir)
-    edges = (
-        ngram_jaccard_pairs(docs, JACCARD_T)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .persist()  # feeds CC init + node list (dedup_clusters note)
-    )
-    nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    )
-    drop = canonicalize(nodes, edges).filter(
+    drop = _near_dup_clusters(docs).filter(
         F.col("node") != F.col("canonical_id")
     ).select(F.col("node").alias("doc_id"))
     return docs.join(drop, "doc_id", "left_anti").select("doc_id", "source", "lang")
@@ -381,24 +368,11 @@ def _q_dedup_keep_docs_longest(spark, sf_dir):
     doc_id asc) — the representative choice a real LLM training
     pipeline uses (keep the highest-content doc, not the lowest id;
     VERDICT r2 item 8).  Same cluster graph as Q:dedup_keep_docs."""
-    from ner_funtool_spark.operators.components import (
-        canonicalize,
-        keep_one_per_cluster,
-    )
-    from ner_funtool_spark.operators.dedup import ngram_jaccard_pairs
+    from ner_funtool_spark.operators.components import keep_one_per_cluster
 
     docs = _docs(spark, sf_dir)
-    edges = (
-        ngram_jaccard_pairs(docs, JACCARD_T)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .persist()  # feeds CC init + node list (dedup_clusters note)
-    )
-    nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    )
-    clusters = canonicalize(nodes, edges)
     kept = keep_one_per_cluster(
-        docs, clusters,
+        docs, _near_dup_clusters(docs),
         order_cols=[F.col("n_chars").desc(), F.col("doc_id").asc()],
     )
     return kept.select("doc_id", "source", "lang", "n_chars")
@@ -1029,8 +1003,6 @@ def _q_kg_entity_temporal(spark, sf_dir):
     dimension join: the history is entity-keyed (small vs the mention
     fact table) and per-entity interval lists are tiny, so the bind is
     an equi-join plus an interval filter — no range-join blowup."""
-    from ner_funtool_spark.operators.components import canonicalize
-    from ner_funtool_spark.operators.linking import candidate_pairs
     from ner_funtool_spark.operators.upsert import scd2_upsert
 
     # r6: ONE Arrow tagging pass serves the epoch-1 entity set, the
@@ -1040,14 +1012,6 @@ def _q_kg_entity_temporal(spark, sf_dir):
     # filtering the full mention table by doc parity is EXACTLY the
     # mention set of the half corpus — same rows, same hash.
     mentions = _crf_mentions_std(spark, sf_dir).persist()
-
-    def canon_map(ments):
-        ents = ments.select("text", "etype").distinct().persist()
-        edges = candidate_pairs(ents).select("src", "dst")
-        nodes = ents.select(F.col("text").alias("node")).distinct()
-        out = canonicalize(nodes, edges).localCheckpoint(eager=True)
-        ents.unpersist()
-        return out
 
     doc_num = F.regexp_extract("path", r"docs/(\d+)\.txt", 1).cast("bigint")
     # materialize the shared mention cache once, then run the two
@@ -1061,8 +1025,8 @@ def _q_kg_entity_temporal(spark, sf_dir):
 
     mentions.count()
     with _TPE(max_workers=2) as _pool:
-        f1 = _pool.submit(canon_map, mentions.filter(doc_num % 2 == 0))
-        f2 = _pool.submit(canon_map, mentions)
+        f1 = _pool.submit(_canon_map, mentions.filter(doc_num % 2 == 0))
+        f2 = _pool.submit(_canon_map, mentions)
         v1, v2 = f1.result(), f2.result()
     hist0 = v1.select(
         "node", "canonical_id",
@@ -1715,7 +1679,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     return {
         "kg_triples": _q_kg_triples,
-        "kg_mentions": _q_kg_mentions,
+        "kg_mentions": _crf_mentions_std,
         "mentions_relational": _q_mentions_relational,
         "tag_metrics": _q_tag_metrics,
         "tag_metrics_avg": _q_tag_metrics_avg,

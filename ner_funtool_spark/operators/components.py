@@ -114,8 +114,8 @@ def keep_one_per_cluster(docs: DataFrame, clusters: DataFrame,
     """Materialize the deduped corpus: ONE representative row of
     ``docs`` per near-dup cluster, unclustered docs pass through.
 
-    ``clusters``: (node, canonical_id) from canonicalize over the
-    near-dup edge graph (node = doc id).  ``order_cols``: window
+    ``clusters``: (node, canonical_id) from connected_components over
+    the near-dup edge graph (node = doc id).  ``order_cols``: window
     ordering choosing the representative — default ascending id (the
     min-id policy).  Real LLM pipelines usually keep the longest /
     highest-quality doc: pass e.g.

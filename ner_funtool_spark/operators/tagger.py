@@ -15,7 +15,9 @@ dictionary-encodes the lines, tokenizes once per distinct line, then
 decodes and extracts per line.  :func:`tag_mentions` is the same stage
 on line rows, with segmentation skipped.  Per-chunk dynamic
 padding reproduces pad_sequences' batch-max semantics
-(data_preprocess.py:228-242, the shadowed ``max_len`` quirk).
+(data_preprocess.py:228-242, the shadowed ``max_len`` quirk).  This is
+the engine's only tagger: token matrices become tag ids in one method,
+:meth:`_LineKernel.tags`, which the decode-parity fixtures pin.
 
 Two decoders share the Viterbi kernel (functions/crf.py):
 
@@ -34,7 +36,7 @@ Two decoders share the Viterbi kernel (functions/crf.py):
 from __future__ import annotations
 
 import re
-from typing import TYPE_CHECKING, Iterator
+from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -51,11 +53,7 @@ from ..functions.model import (
     SeededBiLSTM,
 )
 
-if TYPE_CHECKING:  # pandas loads only where a function needs it
-    import pandas as pd
-
-
-def _build_encoder(mode: str, n_types: int, seed: int,
+def _build_encoder(mode: str, n_types: int,
                    opts: dict | None = None) -> SeededBiLSTM:
     """Encoder per mode: 'albert' = factorized-embedding shared-layer
     variant (modeling_albert.py semantics), else the BERT-style stack;
@@ -71,7 +69,7 @@ def _build_encoder(mode: str, n_types: int, seed: int,
     kw = {k: opts[k] for k in ("n_layers", "n_heads", "embed_dim", "hidden")
           if k in opts}
     vocab = opts.get("vocab_size", NEURAL_VOCAB)
-    return cls(vocab, 1 + 4 * n_types, n_attr=n_types + 1, seed=seed, **kw)
+    return cls(vocab, 1 + 4 * n_types, n_attr=n_types + 1, seed=SEED, **kw)
 
 
 TOKEN_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*|[0-9]+|[^\sA-Za-z0-9_]")
@@ -87,25 +85,6 @@ NEURAL_VOCAB = 4096
 NEURAL_MODES = ("neural", "cascade", "albert")
 
 MENTION_COLS = "begin int, end int, text string, etype string, score float, model string"
-
-
-# --------------------------------------------------------------------------
-# tokenization (P4-P7 analog: precompiled regex, whole batch at once)
-# --------------------------------------------------------------------------
-
-def tokenize_batch(sentences: pd.Series, max_len: int = MAX_LEN):
-    """-> (toks [B,S] object, tbegin [B,S] i32, tend [B,S] i32, lengths [B]).
-
-    S is the batch max (dynamic per-batch padding, P3 semantics);
-    sequences longer than max_len truncate like convert_single_example
-    (run_bert_crf.py:378-381).  Duplicate sentences (very common in
-    code corpora) are tokenized once and gathered back by inverse index.
-    """
-    import pandas as pd
-
-    codes, uniques = pd.factorize(sentences.astype(str))
-    utoks, ubegin, uend, ulens = _tokenize_unique(list(uniques), max_len)
-    return utoks[codes], ubegin[codes], uend[codes], ulens[codes]
 
 
 # --------------------------------------------------------------------------
@@ -265,7 +244,7 @@ _ID_CACHES: dict[int, dict[str, int]] = {}
 _ID_CACHE_MAX = 1_000_000
 
 
-def _ids_from_tokens(toks: np.ndarray, vocab_size: int = NEURAL_VOCAB) -> np.ndarray:
+def _ids_from_tokens(toks: np.ndarray, vocab_size: int) -> np.ndarray:
     """Hash-vocab token ids — the scale-path analog of the char2id
     broadcast lookup with UNK folding (data_preprocess.py:144-160):
     no driver-side dictionary, deterministic on any executor.  The
@@ -293,8 +272,6 @@ MENTION_NAMES = [f.split()[0] for f in MENTION_COLS.split(", ")]
 
 
 def tag_mentions(df: DataFrame, *, domain: str = "code", mode: str = "rules",
-                 sentence_col: str = "sentence", max_len: int = MAX_LEN,
-                 seed: int = SEED,
                  encoder_opts: dict | None = None) -> DataFrame:
     """sentences -> mention rows; all pass-through columns preserved.
 
@@ -302,8 +279,8 @@ def tag_mentions(df: DataFrame, *, domain: str = "code", mode: str = "rules",
     into the sentence, end exclusive.  This is the line-row entry of
     the stage :func:`tag_file_mentions` runs, with segmentation skipped.
     """
-    return _mention_stage(df, sentence_col, list(df.columns), False,
-                          domain, mode, max_len, seed, encoder_opts)
+    return _mention_stage(df, "sentence", list(df.columns), False,
+                          domain, mode, encoder_opts)
 
 
 def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
@@ -322,12 +299,12 @@ def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
         keep = [c for c in df.columns if c != "content"] + list(LINE_COLS)
     file_cols = [c for c in keep if c not in LINE_COLS]
     return _mention_stage(df.select(*file_cols, "content"), "content", keep,
-                          True, domain, mode, MAX_LEN, SEED, encoder_opts)
+                          True, domain, mode, encoder_opts)
 
 
 def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
-                   segment: bool, domain: str, mode: str, max_len: int,
-                   seed: int, encoder_opts: dict | None) -> DataFrame:
+                   segment: bool, domain: str, mode: str,
+                   encoder_opts: dict | None) -> DataFrame:
     """The one ``mapInArrow`` stage behind both entries.
 
     Per Arrow batch: (if ``segment``) split each file's text into lines
@@ -351,7 +328,7 @@ def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
     # regex path.  Zero or negative means no limit, as in Spark.
     chunk = int(df.sparkSession.conf.get(
         "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
-    kernel = _LineKernel(domain, mode, max_len, seed, encoder_opts)
+    kernel = _LineKernel(domain, mode, encoder_opts)
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for rb in batches:
@@ -436,9 +413,8 @@ class _LineKernel:
     regex.
     """
 
-    def __init__(self, domain, mode, max_len, seed, encoder_opts):
-        self.domain, self.mode, self.max_len = domain, mode, max_len
-        self.seed, self.encoder_opts = seed, encoder_opts
+    def __init__(self, domain, mode, encoder_opts=None):
+        self.domain, self.mode, self.encoder_opts = domain, mode, encoder_opts
         self.class_fn, self.etypes = CLASS_FNS[domain]
         self.model_name = f"{mode}_{domain}_v1"
         self.neural = None
@@ -454,7 +430,7 @@ class _LineKernel:
         enc = pc.dictionary_encode(lines)
         codes = enc.indices.to_numpy(zero_copy_only=False)
         uarr = enc.dictionary
-        fast = padded_spans(uarr, self.max_len) if self.mode == "rules" else None
+        fast = padded_spans(uarr, MAX_LEN) if self.mode == "rules" else None
         if fast is not None:
             data, offs, utb, ute, ulens, tstart, tlen = fast
             ucls = _classes_bytes(self.domain, data, tstart, tlen, ulens)
@@ -465,19 +441,10 @@ class _LineKernel:
                                    (m["end"] - m["begin"]).astype(np.int64))
         else:
             strs = uarr.to_pylist()
-            utoks, utb, ute, ulens = _tokenize_unique(strs, self.max_len)
-            toks, tb, te, lens = utoks[codes], utb[codes], ute[codes], ulens[codes]
-            if self.mode == "rules":
-                tags = bmes_tags_from_classes(self.class_fn(toks, lens), lens)
-            else:
-                if self.neural is None:
-                    self.neural = _build_encoder(self.mode, len(self.etypes),
-                                                 self.seed, self.encoder_opts)
-                ids = _ids_from_tokens(
-                    toks, (self.encoder_opts or {}).get("vocab_size", NEURAL_VOCAB))
-                tags = _neural_decode(self.neural, ids, lens, len(self.etypes),
-                                      "neural" if self.mode == "albert" else self.mode)
-            m = extract_mentions_arrays(tags, tb, te, lens)
+            utoks, utb, ute, ulens = _tokenize_unique(strs, MAX_LEN)
+            lens = ulens[codes]
+            m = extract_mentions_arrays(self.tags(utoks[codes], lens),
+                                        utb[codes], ute[codes], lens)
             text = pa.array([strs[codes[r]][b:e] for r, b, e in
                              zip(m["row"], m["begin"], m["end"])], type=pa.string())
         cols = [
@@ -490,10 +457,29 @@ class _LineKernel:
         ]
         return m["row"], cols
 
+    def tags(self, toks: np.ndarray, lens: np.ndarray) -> np.ndarray:
+        """[B,S] token matrix + lengths -> [B,S] tag ids (0 = O, then
+        B/M/E/S per entity type): the string path's classify-or-encode
+        and decode."""
+        if self.mode == "rules":
+            return bmes_tags_from_classes(self.class_fn(toks, lens), lens)
+        if self.neural is None:
+            self.neural = _build_encoder(self.mode, len(self.etypes),
+                                         self.encoder_opts)
+        ids = _ids_from_tokens(
+            toks, (self.encoder_opts or {}).get("vocab_size", NEURAL_VOCAB))
+        return _neural_decode(self.neural, ids, lens, len(self.etypes),
+                              "neural" if self.mode == "albert" else self.mode)
+
 
 def _tokenize_unique(uniques: list, max_len: int):
-    """Tokenize unique sentences -> padded matrices (shared by the
-    Arrow stage and tokenize_batch)."""
+    """Sentences -> (toks [U,S] object, tbegin [U,S] i32, tend [U,S] i32,
+    lengths [U]) by the reference regex: the string path of
+    :class:`_LineKernel`, run once per distinct line.
+
+    S is the call's max length (dynamic padding, P3 semantics);
+    sequences longer than ``max_len`` truncate like
+    convert_single_example (run_bert_crf.py:378-381)."""
     all_toks, all_b, all_e = [], [], []
     for s in uniques:
         toks, bs, es = [], [], []
@@ -602,44 +588,3 @@ def _boundary_transitions(neural: SeededBiLSTM) -> np.ndarray:
     t = neural.transitions
     idx = [0, 1, 2, 3, 4]
     return t[np.ix_(idx, idx)].astype(np.float64)
-
-
-def tag_sequences(df: DataFrame, *, domain: str = "code", mode: str = "rules",
-                  sentence_col: str = "sentence", max_len: int = MAX_LEN,
-                  seed: int = SEED) -> DataFrame:
-    """sentences -> per-token (tokens, tags) arrays — the decode-parity
-    surface used by fixtures and the metric operators (A3-A12)."""
-    class_fn, etypes = CLASS_FNS[domain]
-    n_types = len(etypes)
-    tagnames = np.asarray(
-        ["O"] + [f"{b}-{t}" for t in etypes for b in ("B", "M", "E", "S")], dtype=object
-    )
-    pass_cols = df.columns
-    out_schema = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in pass_cols)
-    out_schema += ", tokens array<string>, tags array<string>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        neural = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sents = pdf[sentence_col].astype(str)
-            toks, _tb, _te, lens = tokenize_batch(sents, max_len)
-            if mode == "rules":
-                cls = class_fn(toks, lens)
-                # closed-form maximal-run BMES decode (crf.py r6 note)
-                tags = bmes_tags_from_classes(cls, lens)
-            else:
-                if neural is None:
-                    neural = _build_encoder(mode, n_types, seed)
-                ids = _ids_from_tokens(toks)
-                tags = _neural_decode(
-                    neural, ids, lens, n_types,
-                    "neural" if mode == "albert" else mode,
-                )
-            res = pdf.reset_index(drop=True).copy()
-            res["tokens"] = [list(toks[i, : lens[i]]) for i in range(len(pdf))]
-            res["tags"] = [list(tagnames[tags[i, : lens[i]]]) for i in range(len(pdf))]
-            yield res
-
-    return df.mapInPandas(run, schema=out_schema)

@@ -37,8 +37,9 @@ def doc_mentions_cte(max_len: int = MAX_LEN,
     """CTE chain: documents -> (repo, path, sent_id, mbegin, mend, text, etype).
 
     Mirrors segment_lines (one line per doc: no newlines in the corpus)
-    + tokenize_batch truncation + doc_token_classes + the constrained
-    Viterbi/maximal-run span assembly + char-offset mention extraction.
+    + the tagger's MAX_LEN token truncation (_LineKernel) +
+    doc_token_classes + the constrained Viterbi/maximal-run span
+    assembly + char-offset mention extraction.
     ``doc_where`` optionally restricts the document set (e.g. the
     temporal-versioning oracle's epoch-1 half-corpus).
     """

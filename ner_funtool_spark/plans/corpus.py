@@ -5,7 +5,8 @@ data team actually runs over raw documents:
     stratified sampling (data mixing) -> deterministic split assignment
 
 Each stage is an existing oracle-gated operator (textstats.quality_score,
-dedup.ngram_jaccard_pairs + components.keep_one_per_cluster,
+dedup.ngram_jaccard_pairs + components.connected_components +
+components.keep_one_per_cluster,
 datasplit.stratified_sample / assign_splits); this plan composes them in
 the canonical order (filter FIRST so dedup's candidate generation never
 sees rows that are leaving anyway) and the composed DuckDB oracle
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import quality_score
-from ..operators.components import canonicalize, keep_one_per_cluster
+from ..operators.components import connected_components, keep_one_per_cluster
 from ..operators.datasplit import assign_splits, stratified_sample
 from ..operators.dedup import ngram_jaccard_pairs
 
@@ -43,20 +44,14 @@ def build_training_corpus(docs: DataFrame, *, min_quality: float,
     # filtered feeds BOTH the dedup edge builder and the keep stage:
     # persist so the quality projection runs once
     filtered = q.filter(F.col("quality") >= min_quality).persist()
-    # the near-dup edge list feeds the CC loop's initial checkpoint,
-    # the node list AND (through clusters) the keep stage — persist it
-    # or the whole candidate-join + exact-verify pipeline re-runs per
-    # materialization (r6, measured: 3 recomputes of ~8.6 s each at
-    # sf0.1; the edge list itself is tiny)
-    edges = (
+    # the CC loop's eager initial checkpoint is the only reader of the
+    # near-dup edge list, so the candidate-join + exact-verify pipeline
+    # runs once; the edges have no self-loops (a < b), so the result
+    # holds every clustered doc
+    clusters = connected_components(
         ngram_jaccard_pairs(filtered, jaccard_t)
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .persist()
     )
-    nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    )
-    clusters = canonicalize(nodes, edges)
     kept = keep_one_per_cluster(
         filtered, clusters,
         order_cols=[F.col("n_chars").desc(), F.col("doc_id").asc()],

@@ -97,21 +97,6 @@ def build_canonical_triples(source: DataFrame, *, domain: str = "code",
     return triples.unionByName(same_as).unionByName(contains_triples(source))
 
 
-def materialize_triples(source: DataFrame, out_dir: str, *,
-                        domain: str = "code", mode: str = "rules",
-                        n_parts: int = 32, n_salt: int = 8) -> dict:
-    """End-to-end materialize with salted partitioning + resumable
-    per-bucket checkpointing; returns run stats (K3/K7 analog)."""
-    from ..operators.checkpoint import resumable_write, run_metrics
-    from ..operators.triples import with_salted_part
-
-    triples = build_triples(source, domain=domain, mode=mode).drop("provenance")
-    salted = with_salted_part(triples, n_parts=n_parts, n_salt=n_salt)
-    stats = resumable_write(salted, out_dir)
-    stats.update(run_metrics(source.sparkSession, out_dir))
-    return stats
-
-
 def documents_as_source(documents: DataFrame) -> DataFrame:
     """Adapt the driver's `documents` table to the source-code input
     shape (repo,path,commit,lang,content,content_sha) — a pure

@@ -11,8 +11,6 @@ The reference's input universe, re-expressed as DataFrame plans:
   (data/clue_ner/data_trans.py:11-60): spans -> per-char BMES-O tags
   (``S-`` for singletons, else B/M.../E) and the reverse direction for
   the submit sink (predict_bert_wol.py:204-221) — round-trip tested.
-* aligned seq-file pairs (data/others_ner/*: input.seq.char +
-  output.seq.bioattr, ``[SPA]`` for literal space).
 * vocab build with digit/latin folding and min-count filter
   (data_preprocess.py:77-113) and tag-dictionary derivation (:64-73).
 
@@ -185,22 +183,6 @@ def tags_to_clue_label(tagged: DataFrame, text_col: str = "text",
     return per_type.groupBy("line_id").agg(
         F.map_from_entries(F.collect_list(F.struct("etype", "wm"))).alias("label")
     )
-
-
-def read_seq_files(spark: SparkSession, char_path: str, tag_path: str) -> DataFrame:
-    """Aligned line-per-sentence files -> (sent_id, chars, tags);
-    ``[SPA]`` unescapes to a literal space (data/others_ner format)."""
-    a = _ordered_lines(spark, char_path).select(
-        F.col("fid").alias("sent_id"),
-        F.transform(
-            F.split("value", " "),
-            lambda c: F.when(c == "[SPA]", " ").otherwise(c),
-        ).alias("chars"),
-    )
-    b = _ordered_lines(spark, tag_path).select(
-        F.col("fid").alias("sent_id"), F.split("value", " ").alias("tags")
-    )
-    return a.join(b, "sent_id")
 
 
 def wordtag_to_char_bio(df: DataFrame, text_col: str = "line",

@@ -15,8 +15,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ner_funtool_spark.config import DOC_ETYPES
 from ner_funtool_spark.operators import metrics as M
-from ner_funtool_spark.operators.tagger import tag_sequences
+from ner_funtool_spark.operators.tagger import MAX_LEN, _LineKernel, _tokenize_unique
 from ner_funtool_spark.sources.corpus import clue_tags, read_clue_json, tags_to_clue_label
 from ner_funtool_spark.sources.sinks import clue_submit_json
 
@@ -28,10 +29,15 @@ def tagged(spark):
     """gold tags + neural predictions, aligned per char."""
     clue = read_clue_json(spark, f"{DATA}/clue.jsonl")
     gold = clue_tags(clue)  # (line_id, text, tags)
-    pred = tag_sequences(
-        gold.select("line_id", F.col("text").alias("sentence")),
-        domain="doc", mode="neural",
-    ).select("line_id", F.col("tags").alias("pred_tags"))
+    rows = gold.select("line_id", "text").collect()
+    toks, _, _, lens = _tokenize_unique([r["text"] for r in rows], MAX_LEN)
+    tags = _LineKernel("doc", "neural").tags(toks, lens)
+    names = ["O"] + [f"{b}-{t}" for t in DOC_ETYPES for b in "BMES"]
+    pred = spark.createDataFrame(
+        [(r["line_id"], [names[t] for t in tags[i, :lens[i]]])
+         for i, r in enumerate(rows)],
+        "line_id long, pred_tags array<string>",
+    )
     return gold.withColumnRenamed("tags", "gold_tags").join(pred, "line_id").cache()
 
 

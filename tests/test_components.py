@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from ner_funtool_spark.operators.components import canonicalize, connected_components
 from ner_funtool_spark.operators.linking import alias_link, candidate_pairs, link_entities
@@ -43,6 +44,23 @@ def test_cc_matches_union_find_random_graphs(spark, seed):
     edf = spark.createDataFrame(edges, "src string, dst string")
     got = {r["node"]: r["canonical_id"] for r in canonicalize(ndf, edf).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_cc_result_is_canonicalize_over_endpoints(spark, seed):
+    """Without self-loops every edge endpoint is in the CC result, so
+    canonicalize over the endpoint node list adds nothing: the near-dup
+    cluster map calls connected_components alone."""
+    rng = np.random.RandomState(100 + seed)
+    n = int(rng.randint(5, 60))
+    pairs = {tuple(sorted(rng.choice(n, 2, replace=False)))
+             for _ in range(int(rng.randint(1, 2 * n)))}
+    edf = spark.createDataFrame([(int(a), int(b)) for a, b in pairs],
+                                "src long, dst long")
+    ends = edf.select(F.col("src").alias("node")).union(
+        edf.select(F.col("dst").alias("node")))
+    got = sorted(connected_components(edf).collect())
+    assert got and got == sorted(canonicalize(ends, edf).collect())
 
 
 def test_cc_long_chain_converges(spark):

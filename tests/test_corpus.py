@@ -1,4 +1,4 @@
-"""Corpus reader tests: tagged TSV, CLUE JSON round-trip, seq files,
+"""Corpus reader tests: tagged TSV, CLUE JSON round-trip,
 vocab/tag dictionaries (FIXTURES.md F2/F3/F5/F6)."""
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from ner_funtool_spark.sources.corpus import (
     clue_tags,
     load_dict_broadcast,
     read_clue_json,
-    read_seq_files,
     read_tagged_tsv,
     tag_dictionary,
     tags_to_clue_label,
@@ -87,16 +86,6 @@ def test_clue_spans_explode(spark):
     assert sp.count() == 5  # 1+1+2+0+1 spans
     g = sp.filter(F.col("etype") == "game").orderBy("s").collect()
     assert [(r["s"], r["e"]) for r in g] == [(0, 0), (3, 3)]
-
-
-def test_seq_files_aligned(spark):
-    df = read_seq_files(
-        spark, f"{DATA}/input.seq.char", f"{DATA}/output.seq.tag"
-    ).orderBy("sent_id")
-    rows = df.collect()
-    assert rows[0]["chars"] == ["a", "b", " ", "c"]  # [SPA] unescaped
-    assert rows[0]["tags"] == ["O", "B-x", "O", "E-x"]
-    assert rows[1]["chars"] == ["d", "e", "f"]
 
 
 def test_vocab_build_folding_and_rank(spark, tsv):

@@ -12,7 +12,6 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from ner_funtool_spark.config import SEED
 from ner_funtool_spark.operators import tagger
 from ner_funtool_spark.operators.segment import segment_lines
 from ner_funtool_spark.operators.tagger import MAX_LEN, tag_mentions
@@ -91,7 +90,7 @@ def test_triples_path_sends_only_read_columns(spark):
 
 def _kernel_rows(lines, chunk):
     """The stage's per-chunk kernel calls, as (line, *mention) tuples."""
-    k = tagger._LineKernel("code", "rules", MAX_LEN, SEED, None)
+    k = tagger._LineKernel("code", "rules")
     out = []
     for a, part in tagger.chunk_lines(lines, chunk):
         line_of, cols = k(part)

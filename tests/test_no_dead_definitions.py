@@ -112,7 +112,6 @@ KEEP = {
     "write_tsv": "K4",
     "tags_to_clue_label": "K5",
     "clue_submit_json": "K5",
-    "tokenize_batch": "P3",
     "tag_mentions": "P7",
     "crf_log_norm": "M6",
     "tag_pairs": "A7",
@@ -130,10 +129,7 @@ KEEP = {
     # test-only entry points (ROADMAP direction 4 candidates)
     "read_events_stream": "tests/test_streaming.py",
     "run_stream_to_memory": "tests/test_streaming.py",
-    "read_seq_files": "tests/test_corpus.py",
-    "tag_sequences": "tests/test_tagger.py",
     "gold_mentions": "tests/test_pipeline_e2e.py",
-    "materialize_triples": "tests/test_plans.py",
     "prune_stats": "tests/test_layout.py",
 }
 

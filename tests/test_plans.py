@@ -1,16 +1,12 @@
-"""End-to-end plan tests: canonical triples, materialize-with-resume,
-and physical-plan shape regressions (explain() guards)."""
+"""End-to-end plan tests: canonical triples and physical-plan shape
+regressions (explain() guards)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from ner_funtool_spark.plans.kg import (
-    build_canonical_triples,
-    build_triples,
-    materialize_triples,
-)
+from ner_funtool_spark.plans.kg import build_canonical_triples, build_triples
 from ner_funtool_spark.sources.code_table import source_table
 
 
@@ -44,16 +40,6 @@ def test_canonical_triples_with_alias_dict(spark, src):
     t = build_canonical_triples(src, domain="code", mode="rules", alias_df=alias)
     objs = {r["obj"] for r in t.filter(F.col("pred") == "IMPORTS").collect()}
     assert "ALPHA_CORE_LIB" in objs and "alpha.core" not in objs
-
-
-def test_materialize_triples_resumable(spark, src, tmp_path):
-    out = str(tmp_path / "triples")
-    stats = materialize_triples(src, out, n_parts=4, n_salt=2)
-    assert stats["written_buckets"] > 0 and stats["rows"] == stats["written_rows"]
-    again = materialize_triples(src, out, n_parts=4, n_salt=2)
-    assert again["written_buckets"] == 0  # idempotent re-run
-    n = spark.read.parquet(out).count()
-    assert n == stats["rows"]
 
 
 def _plan(df) -> str:

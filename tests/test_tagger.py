@@ -8,14 +8,16 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pytest
 
+from ner_funtool_spark.config import CODE_ETYPES
 from ner_funtool_spark.operators.tagger import (
+    MAX_LEN,
+    _LineKernel,
+    _tokenize_unique,
     code_token_classes,
     extract_mentions_arrays,
-    tag_sequences,
-    tokenize_batch,
+    tag_file_mentions,
 )
 
 SENTS = [
@@ -29,27 +31,27 @@ SENTS = [
 # committed decode-parity fixtures: sha256 over '|'.join(tags) per
 # sentence, '\n'-joined, for the seeded model (config.SEED).
 # REGENERATED r3 when the neural encoder became SeededBertBiLSTM
-# (toy-BERT attention stack + BiLSTM, VERDICT r2 item 6); regenerate by
-# running tag_sequences over SENTS and hashing, as _tag_hash does.
+# (toy-BERT attention stack + BiLSTM, VERDICT r2 item 6); they are the
+# tag names _LineKernel.tags decodes for SENTS, hashed as _tag_hash does.
 NEURAL_HASH = "090683d58d9bbb053d5932686e67f4d37c1097e90f62df52964e693da3da99fb"
 CASCADE_HASH = "70e901a722d9348d0c635db5577022d6ae064488ee8b55fae3c41262e063993f"
 
 
 def test_tokenizer_offsets_reconstruct_tokens():
-    toks, tb, te, lens = tokenize_batch(pd.Series(SENTS))
+    toks, tb, te, lens = _tokenize_unique(SENTS, MAX_LEN)
     for i, s in enumerate(SENTS):
         for j in range(lens[i]):
             assert s[tb[i, j]:te[i, j]] == toks[i, j]
 
 
 def test_tokenizer_truncates_at_max_len():
-    s = pd.Series([" ".join(f"t{i}" for i in range(100))])
-    toks, _, _, lens = tokenize_batch(s, max_len=64)
+    s = [" ".join(f"t{i}" for i in range(100))]
+    toks, _, _, lens = _tokenize_unique(s, 64)
     assert lens[0] == 64 and toks.shape[1] == 64
 
 
 def test_code_token_classes_rules():
-    toks, _, _, lens = tokenize_batch(pd.Series(SENTS))
+    toks, _, _, lens = _tokenize_unique(SENTS, MAX_LEN)
     cls = code_token_classes(toks, lens)
     by_tok = {}
     for i in range(len(SENTS)):
@@ -65,35 +67,34 @@ def test_code_token_classes_rules():
 
 
 def test_from_import_symbol_is_not_module():
-    toks, _, _, lens = tokenize_batch(pd.Series(["from alpha.core import load_1"]))
+    toks, _, _, lens = _tokenize_unique(["from alpha.core import load_1"], MAX_LEN)
     cls = code_token_classes(toks, lens)
     names = {toks[0, j]: cls[0, j] for j in range(lens[0])}
     assert names["alpha"] == 3 and names["core"] == 3
     assert names["load_1"] == 0  # imported symbol, not a module mention
 
 
-def _tag_hash(rows) -> str:
-    blob = "\n".join("|".join(r.tags) for r in rows)
+def _tag_hash(tags) -> str:
+    blob = "\n".join("|".join(t) for t in tags)
     return hashlib.sha256(blob.encode()).hexdigest()
 
 
 @pytest.mark.parametrize("mode,expect", [("neural", NEURAL_HASH), ("cascade", CASCADE_HASH)])
-def test_decode_parity_fixture(spark, mode, expect):
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(SENTS)], "sid long, sentence string"
-    )
-    rows = tag_sequences(df, domain="code", mode=mode).orderBy("sid").collect()
-    assert _tag_hash(rows) == expect
+def test_decode_parity_fixture(mode, expect):
+    names = ["O"] + [f"{b}-{t}" for t in CODE_ETYPES for b in "BMES"]
+    toks, _, _, lens = _tokenize_unique(SENTS, MAX_LEN)
+    tags = _LineKernel("code", mode).tags(toks, lens)
+    assert _tag_hash([[names[t] for t in tags[i, :lens[i]]]
+                      for i in range(len(SENTS))]) == expect
 
 
 def test_decode_deterministic_across_partitionings(spark):
-    df1 = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(SENTS)], "sid long, sentence string"
-    ).repartition(1)
+    files = [(f"f{i}.py", "\n".join(SENTS[i:] + SENTS[:i])) for i in range(8)]
+    df1 = spark.createDataFrame(files, "path string, content string").repartition(1)
     df4 = df1.repartition(4)
-    a = tag_sequences(df1, domain="code", mode="neural").orderBy("sid").collect()
-    b = tag_sequences(df4, domain="code", mode="neural").orderBy("sid").collect()
-    assert [r.tags for r in a] == [r.tags for r in b]
+    a = tag_file_mentions(df1, domain="code", mode="neural").collect()
+    b = tag_file_mentions(df4, domain="code", mode="neural").collect()
+    assert a and sorted(a) == sorted(b)
 
 
 def test_extract_mentions_handles_invalid_sequences():
