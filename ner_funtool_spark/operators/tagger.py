@@ -11,9 +11,12 @@ The stage takes FILE rows (:func:`tag_file_mentions`): it splits the
 content into lines in Arrow C++, so a file's columns cross into Python
 once instead of once per line, and only the columns the caller names
 come back.  Per chunk of at most ``maxRecordsPerBatch`` lines it
-dictionary-encodes the lines, tokenizes once per distinct line, then
-decodes and extracts per line.  :func:`tag_mentions` is the same stage
-on line rows, with segmentation skipped.  Per-chunk dynamic
+dictionary-encodes the lines, then tokenizes, decodes and extracts once
+per distinct line, and expands the mentions to every line that holds
+that text.  The triple plans also take one row per file from the
+stage, which becomes the file's CONTAINS triple, so the source is
+scanned once.  :func:`tag_mentions` is the same stage on line rows,
+with segmentation skipped.  Per-chunk dynamic
 padding reproduces pad_sequences' batch-max semantics
 (data_preprocess.py:228-242, the shadowed ``max_len`` quirk).  This is
 the engine's only tagger: token matrices become tag ids in one method,
@@ -285,7 +288,8 @@ def tag_mentions(df: DataFrame, *, domain: str = "code", mode: str = "rules",
 
 def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
                       domain: str = "code", mode: str = "rules",
-                      encoder_opts: dict | None = None) -> DataFrame:
+                      encoder_opts: dict | None = None,
+                      _file_rows: bool = False) -> DataFrame:
     """file rows -> mention rows, with line segmentation fused into the
     Arrow stage: equal to ``tag_mentions(segment_lines(df, keep))``.
 
@@ -294,25 +298,34 @@ def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
     (segment_lines' columns).  The default is segment_lines' output.
     Only the named file columns and the content cross into Python, once
     per file, not once per line.
+
+    ``_file_rows`` (the triple plans' own) adds one row per input file,
+    null content included: its file columns, ``text``, ``etype`` and
+    ``sentence`` null, and the CONTAINS provenance (``sent_id``,
+    ``begin``, ``end`` -1, ``score`` 0, ``model`` ``'scan'``), which
+    ``operators.triples.mentions_to_triples`` turns into the file's
+    CONTAINS triple.
     """
     if keep is None:
         keep = [c for c in df.columns if c != "content"] + list(LINE_COLS)
     file_cols = [c for c in keep if c not in LINE_COLS]
     return _mention_stage(df.select(*file_cols, "content"), "content", keep,
-                          True, domain, mode, encoder_opts)
+                          True, domain, mode, encoder_opts, _file_rows)
 
 
 def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
                    segment: bool, domain: str, mode: str,
-                   encoder_opts: dict | None) -> DataFrame:
+                   encoder_opts: dict | None,
+                   file_rows: bool = False) -> DataFrame:
     """The one ``mapInArrow`` stage behind both entries.
 
     Per Arrow batch: (if ``segment``) split each file's text into lines
     in Arrow C++; then, per chunk of at most ``maxRecordsPerBatch``
     lines, tag the lines (:class:`_LineKernel`) and gather the
     ``keep`` columns onto mention rows with Arrow ``take``, one output
-    batch per chunk.  Pass-through columns never materialize as Python
-    objects.
+    batch per chunk; then (if ``file_rows``) one batch of the input's
+    own rows as file rows (:func:`tag_file_mentions`).  Pass-through
+    columns never materialize as Python objects.
     """
     import pyarrow as pa
 
@@ -355,8 +368,30 @@ def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
                         arrays.append(rb.column(c).take(frows))
                 yield pa.RecordBatch.from_arrays(arrays + cols,
                                                  names=keep + MENTION_NAMES)
+            if file_rows:
+                yield _file_batch(rb, keep)
 
     return df.mapInArrow(run, schema=out_schema)
+
+
+def _file_batch(rb, keep: list[str]):
+    """One file row per row of ``rb`` (see :func:`tag_file_mentions`):
+    the file columns as they came in, and constant or null line and
+    mention columns."""
+    import pyarrow as pa
+
+    n = rb.num_rows
+    minus1 = pa.repeat(pa.scalar(-1, pa.int32()), n)
+    const = {
+        "sent_id": minus1, "sentence": pa.nulls(n, pa.string()),
+        "begin": minus1, "end": minus1,
+        "text": pa.nulls(n, pa.string()), "etype": pa.nulls(n, pa.string()),
+        "score": pa.repeat(pa.scalar(0.0, pa.float32()), n),
+        "model": pa.repeat(pa.scalar("scan", pa.string()), n),
+    }
+    names = keep + MENTION_NAMES
+    return pa.RecordBatch.from_arrays(
+        [const[c] if c in const else rb.column(c) for c in names], names=names)
 
 
 def chunk_lines(lines, chunk: int):
@@ -405,12 +440,13 @@ class _LineKernel:
 
     ``kernel(lines)`` returns (line index per mention, the six mention
     columns as Arrow arrays), mentions in line order.  Lines are
-    dictionary-encoded and tokenized once per distinct line, then
-    decoded and extracted per line.  Rules mode on pure-ASCII lines runs
-    the byte path (functions/fast_tokenize.py: token spans, classes and
-    mention texts straight from the Arrow buffer); a call holding any
-    non-ASCII line, and the neural modes, tokenize with the reference
-    regex.
+    dictionary-encoded, then tokenized, decoded and extracted once per
+    distinct line; the mentions of each distinct line are copied to
+    every line that holds it by one CSR gather (:func:`_expand`).  Rules
+    mode on pure-ASCII lines runs the byte path
+    (functions/fast_tokenize.py: token spans, classes and mention texts
+    straight from the Arrow buffer); a call holding any non-ASCII line,
+    and the neural modes, tokenize with the reference regex.
     """
 
     def __init__(self, domain, mode, encoder_opts=None):
@@ -431,31 +467,30 @@ class _LineKernel:
         codes = enc.indices.to_numpy(zero_copy_only=False)
         uarr = enc.dictionary
         fast = padded_spans(uarr, MAX_LEN) if self.mode == "rules" else None
+        # m: the mentions of the distinct lines, m["row"] indexing uarr
         if fast is not None:
             data, offs, utb, ute, ulens, tstart, tlen = fast
             ucls = _classes_bytes(self.domain, data, tstart, tlen, ulens)
-            lens = ulens[codes]
-            m = extract_mentions_arrays(bmes_tags_from_classes(ucls[codes], lens),
-                                        utb[codes], ute[codes], lens)
-            text = _gather_strings(data, offs[codes[m["row"]]] + m["begin"],
-                                   (m["end"] - m["begin"]).astype(np.int64))
+            m = extract_mentions_arrays(bmes_tags_from_classes(ucls, ulens),
+                                        utb, ute, ulens)
+            utext = _gather_strings(data, offs[m["row"]] + m["begin"],
+                                    (m["end"] - m["begin"]).astype(np.int64))
         else:
             strs = uarr.to_pylist()
             utoks, utb, ute, ulens = _tokenize_unique(strs, MAX_LEN)
-            lens = ulens[codes]
-            m = extract_mentions_arrays(self.tags(utoks[codes], lens),
-                                        utb[codes], ute[codes], lens)
-            text = pa.array([strs[codes[r]][b:e] for r, b, e in
-                             zip(m["row"], m["begin"], m["end"])], type=pa.string())
+            m = extract_mentions_arrays(self.tags(utoks, ulens), utb, ute, ulens)
+            utext = pa.array([strs[r][b:e] for r, b, e in
+                              zip(m["row"], m["begin"], m["end"])], type=pa.string())
+        line_of, idx = _expand(m["row"], codes, len(uarr))
         cols = [
-            pa.array(m["begin"], type=pa.int32()),
-            pa.array(m["end"], type=pa.int32()),
-            text,
-            pa.array(list(self.etypes), type=pa.string()).take(pa.array(m["etype_id"])),
-            pa.array(m["score"], type=pa.float32()),
-            pa.repeat(pa.scalar(self.model_name, pa.string()), len(text)),
+            pa.array(m["begin"][idx], type=pa.int32()),
+            pa.array(m["end"][idx], type=pa.int32()),
+            utext.take(pa.array(idx)),
+            pa.array(list(self.etypes), type=pa.string()).take(pa.array(m["etype_id"][idx])),
+            pa.array(m["score"][idx], type=pa.float32()),
+            pa.repeat(pa.scalar(self.model_name, pa.string()), len(idx)),
         ]
-        return m["row"], cols
+        return line_of, cols
 
     def tags(self, toks: np.ndarray, lens: np.ndarray) -> np.ndarray:
         """[B,S] token matrix + lengths -> [B,S] tag ids (0 = O, then
@@ -470,6 +505,21 @@ class _LineKernel:
             toks, (self.encoder_opts or {}).get("vocab_size", NEURAL_VOCAB))
         return _neural_decode(self.neural, ids, lens, len(self.etypes),
                               "neural" if self.mode == "albert" else self.mode)
+
+
+def _expand(rows: np.ndarray, codes: np.ndarray, n_uniq: int):
+    """Mentions of distinct lines -> mentions of lines: (line index per
+    mention, index into the distinct mentions), lines in order and each
+    line's mentions in its distinct line's order.  ``rows`` (sorted)
+    gives each distinct mention's distinct line, ``codes`` each line's
+    distinct line."""
+    cnt = np.bincount(rows, minlength=n_uniq)
+    first = np.cumsum(cnt) - cnt  # a distinct line's first mention
+    per_line = cnt[codes]
+    line_of = np.repeat(np.arange(len(codes)), per_line)
+    line_first = np.cumsum(per_line) - per_line  # a line's first output row
+    idx = np.arange(len(line_of)) + np.repeat(first[codes] - line_first, per_line)
+    return line_of, idx
 
 
 def _tokenize_unique(uniques: list, max_len: int):

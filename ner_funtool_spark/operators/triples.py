@@ -6,6 +6,10 @@ KG re-expression of the reference's entity outputs
 (``TYPE:text`` strings, public_tools/ner_utils.py:82-100, and the CLUE
 submit JSON, predict_bert_wol.py:204-221).
 
+CONTAINS triples come out of the same projection, from the one row
+per file that the tagging stage adds for the triple plans, so the
+source is scanned once and nothing is unioned.
+
 Everything here is a single JVM-side projection (whole-stage codegen,
 no shuffle); the only shuffle is the optional salted repartition before
 the partitioned write, which is exactly the skew-handling the
@@ -41,19 +45,24 @@ def mentions_to_triples(mentions: DataFrame, with_provenance: bool = True,
                         domain: str = "code") -> DataFrame:
     """One narrow projection; subj depends on predicate semantics:
     DEFINES* hang off the repo, IMPORTS/DECLARES_PACKAGE/MENTIONS_*
-    off the file."""
+    off the file.  A file row of the tagging stage (null ``etype``,
+    ``tagger.tag_file_mentions(_file_rows=True)``) becomes
+    (repo, CONTAINS, file), its provenance (path, commit, -1, -1, -1,
+    'scan', 0.0) carried by the row itself; (repo, path) is unique per
+    commit snapshot, so there is one per file and no distinct."""
     furi = file_uri()
     pred_map = PRED_BY_ETYPE if domain == "code" else DOC_PRED_BY_ETYPE
-    pred = F.element_at(
+    scan = F.col("etype").isNull()
+    pred = F.when(scan, F.lit("CONTAINS")).otherwise(F.element_at(
         F.create_map(*[F.lit(x) for kv in pred_map.items() for x in kv]),
         F.col("etype"),
-    )
+    ))
     defines = F.col("etype").isin("func", "class") if domain == "code" else F.lit(False)
-    subj = F.when(defines, F.col("repo")).otherwise(furi)
+    subj = F.when(defines | scan, F.col("repo")).otherwise(furi)
     obj = F.when(
         defines,
         F.concat(furi, F.lit("::"), F.col("text")),
-    ).otherwise(F.col("text"))
+    ).when(scan, furi).otherwise(F.col("text"))
     cols = [
         subj.alias("subj"),
         pred.alias("pred"),
@@ -64,29 +73,12 @@ def mentions_to_triples(mentions: DataFrame, with_provenance: bool = True,
     if with_provenance:
         cols.append(
             F.struct(
-                F.col("path"), F.col("commit"), F.col("sent_id"),
+                F.col("path"), F.col("commit"),
+                F.col("sent_id").cast("long").alias("sent_id"),
                 F.col("begin"), F.col("end"), F.col("model"), F.col("score"),
             ).alias("provenance")
         )
     return mentions.select(*cols)
-
-
-def contains_triples(source: DataFrame) -> DataFrame:
-    """(repo, CONTAINS, file) — derived from the source scan, distinct-free
-    because (repo, path) is unique per commit snapshot."""
-    return source.select(
-        F.col("repo").alias("subj"),
-        F.lit("CONTAINS").alias("pred"),
-        file_uri().alias("obj"),
-        F.col("repo"),
-        F.col("content_sha"),
-        F.struct(
-            F.col("path"), F.col("commit"),
-            F.lit(-1).cast("long").alias("sent_id"),
-            F.lit(-1).alias("begin"), F.lit(-1).alias("end"),
-            F.lit("scan").alias("model"), F.lit(0.0).cast("float").alias("score"),
-        ).alias("provenance"),
-    )
 
 
 def with_salted_part(triples: DataFrame, n_parts: int = 32,

@@ -2,15 +2,18 @@
 
 ``build_triples`` is the flagship dataflow (north_star):
 
-  source scan -> fused Arrow segment+tag+extract -> mentions
-  -> triples projection (+ CONTAINS from the scan) -> salted write
+  source scan -> fused Arrow segment+tag+extract -> mentions + one
+  row per file -> triples projection (CONTAINS from the file rows)
+  -> salted write
 
 The plan is declared entirely with DataFrame ops so Catalyst prunes
 columns into the parquet scan and fuses the relational glue; the only
 Python is the single Arrow-batched stage, which takes FILE rows and
 splits them into lines itself, so each file's columns cross into
 Python once rather than once per line.  ``build_triples`` names the
-columns the triple projection reads, so nothing else comes back.
+columns the triple projection reads, so nothing else comes back, and
+takes each file's CONTAINS row from the same stage, so the source is
+read once: scan -> one ``mapInArrow`` -> one projection.
 """
 
 from __future__ import annotations
@@ -19,22 +22,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.tagger import tag_file_mentions
-from ..operators.triples import (
-    TRIPLE_PASS_COLS,
-    contains_triples,
-    mentions_to_triples,
-)
+from ..operators.triples import TRIPLE_PASS_COLS, mentions_to_triples
 
 
 def detect_mentions(source: DataFrame, *, domain: str = "code",
                     mode: str = "rules",
-                    encoder_opts: dict | None = None) -> DataFrame:
+                    encoder_opts: dict | None = None,
+                    _file_rows: bool = False) -> DataFrame:
     """source(repo,path,commit,lang,content,content_sha) -> mention rows,
     with every column of ``tag_mentions(segment_lines(source))``.
     ``encoder_opts`` overrides the neural encoder shape (depth study —
-    operators/tagger._build_encoder docstring)."""
+    operators/tagger._build_encoder docstring).  ``_file_rows`` is
+    :func:`build_canonical_triples`' own (tagger.tag_file_mentions)."""
     return tag_file_mentions(source, domain=domain, mode=mode,
-                             encoder_opts=encoder_opts)
+                             encoder_opts=encoder_opts, _file_rows=_file_rows)
 
 
 def build_triples(source: DataFrame, *, domain: str = "code",
@@ -42,11 +43,9 @@ def build_triples(source: DataFrame, *, domain: str = "code",
     """Full mention->triple dataflow; returns the un-salted triple DF
     (callers add salting via operators.triples.write_triples)."""
     mentions = tag_file_mentions(source, keep=list(TRIPLE_PASS_COLS),
-                                 domain=domain, mode=mode)
-    triples = mentions_to_triples(mentions, domain=domain)
-    if include_contains:
-        triples = triples.unionByName(contains_triples(source))
-    return triples
+                                 domain=domain, mode=mode,
+                                 _file_rows=include_contains)
+    return mentions_to_triples(mentions, domain=domain)
 
 
 def build_canonical_triples(source: DataFrame, *, domain: str = "code",
@@ -59,12 +58,15 @@ def build_canonical_triples(source: DataFrame, *, domain: str = "code",
     for every non-canonical surface form.
     """
     from ..operators.linking import alias_link, link_entities
-    from ..operators.triples import mentions_to_triples
 
     # the Arrow tagging stage feeds linking (nodes + edges), the triple
-    # projection AND the SAME_AS branch — persist so it runs once, not
-    # once per downstream reference (session-lifetime cache, LRU)
-    mentions = detect_mentions(source, domain=domain, mode=mode).persist()
+    # projection, the SAME_AS branch AND the CONTAINS rows — persist so
+    # it runs once, not once per downstream reference (session-lifetime
+    # cache, LRU)
+    tagged = detect_mentions(source, domain=domain, mode=mode,
+                             _file_rows=True).persist()
+    files = tagged.filter(F.col("etype").isNull())
+    mentions = tagged.filter(F.col("etype").isNotNull())
     if alias_df is not None:
         mentions = alias_link(mentions, alias_df)
         mentions = mentions.withColumn(
@@ -77,7 +79,7 @@ def build_canonical_triples(source: DataFrame, *, domain: str = "code",
         "text", F.col("canonical_id")
     )
     triples = mentions_to_triples(
-        canon.drop("canonical_id", "surface"), domain=domain
+        canon.drop("canonical_id", "surface").unionByName(files), domain=domain
     )
     same_as = (
         linked.filter(F.col("text") != F.col("canonical_id"))
@@ -94,7 +96,7 @@ def build_canonical_triples(source: DataFrame, *, domain: str = "code",
         )
         .distinct()
     )
-    return triples.unionByName(same_as).unionByName(contains_triples(source))
+    return triples.unionByName(same_as)
 
 
 def documents_as_source(documents: DataFrame) -> DataFrame:

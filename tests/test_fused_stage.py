@@ -1,6 +1,7 @@
 """The fused file-row tagging stage (segmentation inside the Arrow
 stage) against the line-level reference path
-``tag_mentions(segment_lines(src))``."""
+``tag_mentions(segment_lines(src))``, the triple plans' one-pass shape,
+and the per-distinct-line kernel against a per-line decode."""
 
 from __future__ import annotations
 
@@ -11,12 +12,25 @@ import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ner_funtool_spark.operators import tagger
 from ner_funtool_spark.operators.segment import segment_lines
 from ner_funtool_spark.operators.tagger import MAX_LEN, tag_mentions
-from ner_funtool_spark.operators.triples import contains_triples, mentions_to_triples
-from ner_funtool_spark.plans.kg import build_triples, detect_mentions
+from ner_funtool_spark.operators.triples import file_uri, mentions_to_triples
+from ner_funtool_spark.plans.inspect import plan_string
+from ner_funtool_spark.plans.kg import (
+    build_canonical_triples,
+    build_triples,
+    detect_mentions,
+)
 
 LONG = "def f" + " x" * (MAX_LEN * 3)  # truncation boundary
 CODE = [
@@ -29,6 +43,7 @@ CODE = [
     ("g.py", "def café_fn():\nimport beta\n"),           # one non-ASCII line
     ("h.py", "import alpha.core\ndef load_1(a):\n"),     # duplicate lines
     ("i.py", "from alpha.core import load_1\npackage p.q\n"),
+    ("j.py", "x = 1\n    return x\n"),                   # lines, no mention
 ]
 DOC = [
     ("a.txt", ""),
@@ -73,10 +88,67 @@ def test_fused_stage_equals_line_path(spark, domain, mode, files):
 
 def test_build_triples_equals_line_path(spark):
     src = _source(spark, CODE)
+    contains = src.select(
+        F.col("repo").alias("subj"), F.lit("CONTAINS").alias("pred"),
+        file_uri().alias("obj"), "repo", "content_sha",
+        F.struct("path", "commit", F.lit(-1).cast("long").alias("sent_id"),
+                 F.lit(-1).alias("begin"), F.lit(-1).alias("end"),
+                 F.lit("scan").alias("model"),
+                 F.lit(0.0).cast("float").alias("score")).alias("provenance"))
     want = mentions_to_triples(
         tag_mentions(segment_lines(src), domain="code", mode="rules")
-    ).unionByName(contains_triples(src))
+    ).unionByName(contains)
     assert _rows(build_triples(src, domain="code", mode="rules")) == _rows(want)
+
+
+# the triple plans' output schema: provenance.sent_id is a bigint,
+# though the stage's sent_id is an int
+TRIPLES_SCHEMA = StructType([
+    StructField("subj", StringType()),
+    StructField("pred", StringType()),
+    StructField("obj", StringType()),
+    StructField("repo", StringType()),
+    StructField("content_sha", StringType()),
+    StructField("provenance", StructType([
+        StructField("path", StringType()),
+        StructField("commit", StringType()),
+        StructField("sent_id", LongType()),
+        StructField("begin", IntegerType()),
+        StructField("end", IntegerType()),
+        StructField("model", StringType()),
+        StructField("score", FloatType()),
+    ]), nullable=False),
+])
+
+
+def test_triple_plans_keep_their_schema(spark):
+    src = _source(spark, CODE)
+    assert build_triples(src).schema == TRIPLES_SCHEMA
+    assert build_canonical_triples(src).schema == TRIPLES_SCHEMA
+
+
+def test_build_triples_is_one_pass(spark, tmp_path):
+    """scan -> one mapInArrow -> one projection: no second scan, no union."""
+    _source(spark, CODE).write.parquet(str(tmp_path / "src"))
+    t = build_triples(spark.read.parquet(str(tmp_path / "src")))
+    t.write.format("noop").mode("overwrite").save()
+    plan = plan_string(t)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Union" not in plan, plan
+
+
+@pytest.mark.parametrize("build", [build_triples, build_canonical_triples])
+def test_one_contains_per_source_row(spark, build):
+    """Every source row, null content (e.py), no lines (a.py) and no
+    mentions (j.py) included, has exactly one CONTAINS row with the
+    scan provenance."""
+    t = build(_source(spark, CODE), domain="code", mode="rules")
+    got = sorted(tuple(r) for r in t.filter(F.col("pred") == "CONTAINS").select(
+        "subj", "obj", "provenance.*").collect())
+    want = sorted(("r0", f"r0/{p}", p, "c0", -1, -1, -1, "scan", 0.0)
+                  for p, _ in CODE)
+    assert got == want
 
 
 def test_triples_path_sends_only_read_columns(spark):
@@ -88,9 +160,9 @@ def test_triples_path_sends_only_read_columns(spark):
     assert m.columns == list(TRIPLE_PASS_COLS) + tagger.MENTION_NAMES
 
 
-def _kernel_rows(lines, chunk):
+def _kernel_rows(lines, chunk, k=None):
     """The stage's per-chunk kernel calls, as (line, *mention) tuples."""
-    k = tagger._LineKernel("code", "rules")
+    k = k or tagger._LineKernel("code", "rules")
     out = []
     for a, part in tagger.chunk_lines(lines, chunk):
         line_of, cols = k(part)
@@ -147,6 +219,53 @@ def test_fused_stage_under_arrow_batch_setting(spark, batch):
     finally:
         spark.conf.set(key, old)
     assert got == want
+
+
+# heavily duplicated lines, lines without mentions, and (MIXED) a
+# non-ASCII run that sends its chunks down the string path
+KERNEL_ASCII = (
+    ["def load_1(a):", "import alpha.core", "    return x", "x = 1"] * 9
+    + ["class Reader7:", "from alpha.core import load_1", "package p.q", "",
+       "# a comment", "import os"] + ["def load_1(a):"] * 5 + [LONG]
+)
+KERNEL_MIXED = KERNEL_ASCII[:21] + ["def café_fn():", "class Café:"] + KERNEL_ASCII[21:]
+
+
+@pytest.fixture(scope="module")
+def kernels():
+    """One kernel per mode for the module (the neural ones build a model)."""
+    return {}
+
+
+def _per_line_rows(k, lines, chunk):
+    """What the kernel returns when every line is tokenized, decoded and
+    extracted on its own row (the reference regex path, same chunks)."""
+    out = []
+    for a, part in tagger.chunk_lines(pa.array(lines), chunk):
+        strs = part.to_pylist()
+        toks, tb, te, lens = tagger._tokenize_unique(strs, MAX_LEN)
+        m = tagger.extract_mentions_arrays(k.tags(toks, lens), tb, te, lens)
+        out += [(int(r) + a, int(b), int(e), strs[r][b:e], k.etypes[t], 0.0,
+                 k.model_name)
+                for r, b, e, t in zip(m["row"], m["begin"], m["end"], m["etype_id"])]
+    return out
+
+
+@pytest.mark.parametrize("chunk", [1, 7, 1 << 14])
+@pytest.mark.parametrize("mode", ["rules", "neural", "cascade", "albert"])
+@pytest.mark.parametrize("lines", [KERNEL_ASCII, KERNEL_MIXED], ids=["ascii", "mixed"])
+def test_kernel_equals_per_line_decode(kernels, lines, mode, chunk):
+    """Decoding once per distinct line and expanding by the dictionary
+    codes gives the per-line result, row for row and in order."""
+    from ner_funtool_spark.functions.fast_tokenize import padded_spans
+
+    # rules on ASCII runs the byte path, on MIXED the string path
+    assert (padded_spans(pa.array(lines), MAX_LEN) is None) == (lines is KERNEL_MIXED)
+    k = kernels.setdefault(mode, tagger._LineKernel("code", mode))
+    got = _kernel_rows(pa.array(lines), chunk, k)
+    assert got == _per_line_rows(k, lines, chunk)
+    if mode == "rules":
+        assert {x[3] for x in got} >= {"load_1", "alpha.core", "Reader7", "p"}
 
 
 def test_split_lines_matches_segment_semantics():

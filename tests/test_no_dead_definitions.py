@@ -126,6 +126,9 @@ KEEP = {
     "basic_tokenize": "tests/test_wordpiece.py",
     "full_tokenize": "tests/test_wordpiece.py",
     "md5_int2": "tests/test_dedup_similarity.py",
+    # the constrained-Viterbi reference that bmes_tags_from_classes equals
+    "class_emissions": "tests/test_crf.py",
+    "bmes_transitions": "tests/test_crf.py",
     # test-only entry points (ROADMAP direction 4 candidates)
     "read_events_stream": "tests/test_streaming.py",
     "run_stream_to_memory": "tests/test_streaming.py",
