@@ -9,18 +9,22 @@ replacement for the row-at-a-time serving scripts.
 
 The stage takes FILE rows (:func:`tag_file_mentions`): it splits the
 content into lines in Arrow C++, so a file's columns cross into Python
-once instead of once per line, and only the columns the caller names
-come back.  Per chunk of at most ``maxRecordsPerBatch`` lines it
-dictionary-encodes the lines, then tokenizes, decodes and extracts once
-per distinct line, and expands the mentions to every line that holds
-that text.  The triple plans also take one row per file from the
-stage, which becomes the file's CONTAINS triple, so the source is
-scanned once.  :func:`tag_mentions` is the same stage on line rows,
-with segmentation skipped.  Per-chunk dynamic
-padding reproduces pad_sequences' batch-max semantics
-(data_preprocess.py:228-242, the shadowed ``max_len`` quirk).  This is
-the engine's only tagger: token matrices become tag ids in one method,
-:meth:`_LineKernel.tags`, which the decode-parity fixtures pin.
+once instead of once per line.  Per input batch it dictionary-encodes
+all of the batch's lines once, then tokenizes, decodes and extracts
+once per distinct line, in slices of at most ``maxRecordsPerBatch``
+distinct lines, and expands the mentions to every line that holds that
+text.  An emitter turns the mentions into output rows, in batches of at
+most ``maxRecordsPerBatch`` lines' mentions: :class:`MentionRows` (the
+columns the caller names, then the mention columns) or, for the
+flagship :func:`tag_file_triples`, ``operators.triples.TripleRows``
+(finished triples, each file's CONTAINS triple from its own input row),
+so the source is scanned once and nothing runs above the stage.
+:func:`tag_mentions` is the same stage on line rows, with segmentation
+skipped.  Per-slice dynamic padding reproduces pad_sequences'
+batch-max semantics (data_preprocess.py:228-242, the shadowed
+``max_len`` quirk).  This is the engine's only tagger: token matrices
+become tag ids in one method, :meth:`_LineKernel.tags`, which the
+decode-parity fixtures pin.
 
 Two decoders share the Viterbi kernel (functions/crf.py):
 
@@ -55,6 +59,7 @@ from ..functions.model import (
     SeededBertBiLSTM,
     SeededBiLSTM,
 )
+from .triples import FILE_COLS, TripleRows
 
 def _build_encoder(mode: str, n_types: int,
                    opts: dict | None = None) -> SeededBiLSTM:
@@ -282,8 +287,8 @@ def tag_mentions(df: DataFrame, *, domain: str = "code", mode: str = "rules",
     into the sentence, end exclusive.  This is the line-row entry of
     the stage :func:`tag_file_mentions` runs, with segmentation skipped.
     """
-    return _mention_stage(df, "sentence", list(df.columns), False,
-                          domain, mode, encoder_opts)
+    emit = MentionRows(list(df.columns), _types(df))
+    return _mention_stage(df, "sentence", False, domain, mode, encoder_opts, emit)
 
 
 def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
@@ -299,49 +304,67 @@ def tag_file_mentions(df: DataFrame, *, keep: list[str] | None = None,
     Only the named file columns and the content cross into Python, once
     per file, not once per line.
 
-    ``_file_rows`` (the triple plans' own) adds one row per input file,
-    null content included: its file columns, ``text``, ``etype`` and
-    ``sentence`` null, and the CONTAINS provenance (``sent_id``,
-    ``begin``, ``end`` -1, ``score`` 0, ``model`` ``'scan'``), which
-    ``operators.triples.mentions_to_triples`` turns into the file's
-    CONTAINS triple.
+    ``_file_rows`` (``build_canonical_triples``' own) adds one row per
+    input file, null content included: its file columns, ``text``,
+    ``etype`` and ``sentence`` null, and the CONTAINS provenance
+    (``sent_id``, ``begin``, ``end`` -1, ``score`` 0, ``model``
+    ``'scan'``), which ``operators.triples.mentions_to_triples`` turns
+    into the file's CONTAINS triple.
     """
     if keep is None:
         keep = [c for c in df.columns if c != "content"] + list(LINE_COLS)
     file_cols = [c for c in keep if c not in LINE_COLS]
-    return _mention_stage(df.select(*file_cols, "content"), "content", keep,
-                          True, domain, mode, encoder_opts, _file_rows)
+    emit = MentionRows(keep, {**_types(df), **LINE_COLS}, file_rows=_file_rows)
+    return _mention_stage(df.select(*file_cols, "content"), "content", True,
+                          domain, mode, encoder_opts, emit)
 
 
-def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
-                   segment: bool, domain: str, mode: str,
-                   encoder_opts: dict | None,
-                   file_rows: bool = False) -> DataFrame:
-    """The one ``mapInArrow`` stage behind both entries.
+def tag_file_triples(df: DataFrame, *, domain: str = "code", mode: str = "rules",
+                     include_contains: bool = True) -> DataFrame:
+    """file rows -> finished triple rows (``plans.kg.build_triples``):
+    the stage of :func:`tag_file_mentions` with the triple emitter
+    (:class:`operators.triples.TripleRows`), equal to
+    ``mentions_to_triples(tag_file_mentions(df, _file_rows=include_contains))``."""
+    return _mention_stage(df.select(*FILE_COLS, "content"), "content", True,
+                          domain, mode, None, TripleRows(domain, include_contains))
 
-    Per Arrow batch: (if ``segment``) split each file's text into lines
-    in Arrow C++; then, per chunk of at most ``maxRecordsPerBatch``
-    lines, tag the lines (:class:`_LineKernel`) and gather the
-    ``keep`` columns onto mention rows with Arrow ``take``, one output
-    batch per chunk; then (if ``file_rows``) one batch of the input's
-    own rows as file rows (:func:`tag_file_mentions`).  Pass-through
-    columns never materialize as Python objects.
-    """
-    import pyarrow as pa
 
+def _types(df: DataFrame) -> dict:
+    return {f.name: f.dataType.simpleString() for f in df.schema}
+
+
+def _mention_stage(df: DataFrame, text_col: str, segment: bool, domain: str,
+                   mode: str, encoder_opts: dict | None, emit) -> DataFrame:
+    """The one ``mapInArrow`` stage behind every entry: :func:`_stage_fn`
+    over ``df``, its output rows and schema (``emit.schema``) those of
+    the emitter ``emit`` (:class:`MentionRows`, or
+    :class:`operators.triples.TripleRows`)."""
     if mode != "rules" and mode not in NEURAL_MODES:
         raise ValueError(mode)
-    types = {f.name: f.dataType.simpleString() for f in df.schema}
-    if segment:
-        types.update(LINE_COLS)
-    out_schema = ", ".join(f"`{c}` {types[c]}" for c in keep) + ", " + MENTION_COLS
-    # a file batch holds ~18x more lines than a line batch; chunking
-    # them bounds the [U, S] matrices and each output batch as on the
-    # line path, and a non-ASCII line sends only its own chunk down the
-    # regex path.  Zero or negative means no limit, as in Spark.
+    # a file batch holds ~18x more lines than a line batch; the chunk
+    # bounds the [U, S] matrices and each output batch as on the line
+    # path, and a non-ASCII line sends only its own slice of distinct
+    # lines down the regex path.  Zero or negative means no limit, as
+    # in Spark.
     chunk = int(df.sparkSession.conf.get(
         "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
     kernel = _LineKernel(domain, mode, encoder_opts)
+    return df.mapInArrow(_stage_fn(text_col, segment, kernel, chunk, emit),
+                         schema=emit.schema)
+
+
+def _stage_fn(text_col: str, segment: bool, kernel: "_LineKernel", chunk: int, emit):
+    """The function the stage hands to ``mapInArrow``.
+
+    Per input batch: (if ``segment``) split each file's text into lines
+    in Arrow C++; tag all of the batch's lines in one kernel call; then
+    ``emit(rb, lines, sent_id, parts)`` turns ``parts`` — (line index,
+    input row, mention columns) per slice of at most ``chunk`` lines —
+    into output batches.  ``lines`` are the batch's lines and
+    ``sent_id`` their positions in their files (None on line rows).
+    Pass-through columns never materialize as Python objects.
+    """
+    import pyarrow as pa
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for rb in batches:
@@ -352,26 +375,48 @@ def _mention_stage(df: DataFrame, text_col: str, keep: list[str],
                 lines, parent, sent_id = split_lines(text)
             else:
                 lines, parent, sent_id = text, None, None
-            for a, part in chunk_lines(lines, chunk):
-                line_of, cols = kernel(part)
-                if len(line_of) == 0:
-                    continue
-                lrows = pa.array(line_of + a)
-                frows = lrows if parent is None else pa.array(parent[line_of + a])
-                arrays = []
-                for c in keep:
-                    if segment and c == "sent_id":
-                        arrays.append(pa.array(sent_id[line_of + a], type=pa.int32()))
-                    elif segment and c == "sentence":
-                        arrays.append(part.take(pa.array(line_of)))
-                    else:
-                        arrays.append(rb.column(c).take(frows))
-                yield pa.RecordBatch.from_arrays(arrays + cols,
-                                                 names=keep + MENTION_NAMES)
-            if file_rows:
-                yield _file_batch(rb, keep)
+            line_of, cols = kernel(lines, chunk)
 
-    return df.mapInArrow(run, schema=out_schema)
+            def parts():
+                for lo, hi in _line_slices(line_of, len(lines), chunk):
+                    lf = line_of[lo:hi]
+                    frows = pa.array(lf if parent is None else parent[lf])
+                    yield lf, frows, {c: a.slice(lo, hi - lo) for c, a in cols.items()}
+
+            yield from emit(rb, lines, sent_id, parts())
+
+    return run
+
+
+class MentionRows:
+    """The stage's mention emitter: per slice, the ``keep`` columns
+    (``types`` gives their Spark types; file columns by Arrow ``take``,
+    ``sent_id`` and ``sentence`` from the split lines when the rows are
+    files), then the mention columns; with ``file_rows``, after the
+    slices of each input batch one file row per input row
+    (:func:`_file_batch`)."""
+
+    def __init__(self, keep: list[str], types: dict, file_rows: bool = False):
+        self.schema = ", ".join(f"`{c}` {types[c]}" for c in keep) + ", " + MENTION_COLS
+        self.keep, self.file_rows = keep, file_rows
+
+    def __call__(self, rb, lines, sent_id, parts):
+        import pyarrow as pa
+
+        for line_of, frows, cols in parts:
+            arrays = []
+            for c in self.keep:
+                if sent_id is None or c not in LINE_COLS:
+                    arrays.append(rb.column(c).take(frows))
+                elif c == "sent_id":
+                    arrays.append(pa.array(sent_id[line_of], type=pa.int32()))
+                else:
+                    arrays.append(lines.take(pa.array(line_of)))
+            arrays += [cols[c].dictionary_decode() if c == "etype" else cols[c]
+                       for c in MENTION_NAMES]
+            yield pa.RecordBatch.from_arrays(arrays, names=self.keep + MENTION_NAMES)
+        if self.file_rows:
+            yield _file_batch(rb, self.keep)
 
 
 def _file_batch(rb, keep: list[str]):
@@ -394,12 +439,27 @@ def _file_batch(rb, keep: list[str]):
         [const[c] if c in const else rb.column(c) for c in names], names=names)
 
 
+def _step(n: int, chunk: int) -> int:
+    """Slice length for ``n`` rows: ``chunk``, or all of them when
+    ``chunk`` <= 0 (Spark's "no limit")."""
+    return chunk if chunk > 0 else max(n, 1)
+
+
 def chunk_lines(lines, chunk: int):
     """(start, slice) over ``lines`` in slices of at most ``chunk``
     rows; ``chunk`` <= 0 means one slice (Spark's "no limit")."""
-    step = chunk if chunk > 0 else max(len(lines), 1)
+    step = _step(len(lines), chunk)
     for a in range(0, len(lines), step):
         yield a, lines.slice(a, step)
+
+
+def _line_slices(line_of: np.ndarray, n_lines: int, chunk: int):
+    """(lo, hi) ranges of the mentions (``line_of`` sorted) of each
+    slice of at most ``chunk`` lines, empty slices left out."""
+    step = _step(n_lines, chunk)
+    edges = [0, *np.searchsorted(line_of, np.arange(step, n_lines, step)).tolist(),
+             len(line_of)]
+    return [(lo, hi) for lo, hi in zip(edges[:-1], edges[1:]) if hi > lo]
 
 
 def split_lines(content):
@@ -438,15 +498,20 @@ def _gather_strings(data: np.ndarray, starts: np.ndarray, lens: np.ndarray):
 class _LineKernel:
     """Lines -> mentions.
 
-    ``kernel(lines)`` returns (line index per mention, the six mention
-    columns as Arrow arrays), mentions in line order.  Lines are
-    dictionary-encoded, then tokenized, decoded and extracted once per
-    distinct line; the mentions of each distinct line are copied to
-    every line that holds it by one CSR gather (:func:`_expand`).  Rules
-    mode on pure-ASCII lines runs the byte path
-    (functions/fast_tokenize.py: token spans, classes and mention texts
-    straight from the Arrow buffer); a call holding any non-ASCII line,
-    and the neural modes, tokenize with the reference regex.
+    ``kernel(lines, chunk)`` returns (line index per mention, mention
+    columns by name), mentions in line order; ``etype`` is a dictionary
+    array over the domain's entity types, so an emitter can map it by
+    id.  All the lines of a call (one input batch) are
+    dictionary-encoded once; tokenize, classify or encode, decode and
+    extract then run once per distinct line, on slices of at most
+    ``chunk`` distinct lines (which bounds the [U, S] matrices), and
+    the mentions of each distinct line are copied to every line that
+    holds it by one CSR gather (:func:`_expand`) — not at all when no
+    line repeats.  Rules mode on a slice of pure-ASCII lines runs the
+    byte path (functions/fast_tokenize.py: token spans, classes and
+    mention texts straight from the Arrow buffer); a slice holding any
+    non-ASCII line, and the neural modes, tokenize with the reference
+    regex.
     """
 
     def __init__(self, domain, mode, encoder_opts=None):
@@ -455,42 +520,66 @@ class _LineKernel:
         self.model_name = f"{mode}_{domain}_v1"
         self.neural = None
 
-    def __call__(self, lines):
+    def __call__(self, lines, chunk: int):
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        from ..functions.fast_tokenize import padded_spans
 
         if lines.null_count:
             lines = pc.fill_null(lines, "")
         enc = pc.dictionary_encode(lines)
-        codes = enc.indices.to_numpy(zero_copy_only=False)
         uarr = enc.dictionary
-        fast = padded_spans(uarr, MAX_LEN) if self.mode == "rules" else None
         # m: the mentions of the distinct lines, m["row"] indexing uarr
+        parts = [self._distinct(part, a) for a, part in chunk_lines(uarr, chunk)]
+        if not parts:
+            parts = [dict(EMPTY_MENTIONS, text=pa.array([], pa.string()))]
+        m = parts[0] if len(parts) == 1 else {
+            k: (pa.concat_arrays if k == "text" else np.concatenate)([p[k] for p in parts])
+            for k in parts[0]}
+        text = m.pop("text")
+        if len(uarr) == len(lines):
+            # every line distinct: codes are 0..n-1, the expansion the identity
+            line_of = m["row"]
+        else:
+            codes = enc.indices.to_numpy(zero_copy_only=False)
+            line_of, idx = _expand(m["row"], codes, len(uarr))
+            m = {k: v[idx] for k, v in m.items()}
+            text = text.take(pa.array(idx))
+        cols = {
+            "begin": pa.array(m["begin"], type=pa.int32()),
+            "end": pa.array(m["end"], type=pa.int32()),
+            "text": text,
+            "etype": pa.DictionaryArray.from_arrays(
+                pa.array(m["etype_id"], type=pa.int32()),
+                pa.array(list(self.etypes), type=pa.string())),
+            "score": pa.array(m["score"], type=pa.float32()),
+            "model": pa.repeat(pa.scalar(self.model_name, pa.string()), len(line_of)),
+        }
+        return line_of, cols
+
+    def _distinct(self, uarr, first: int) -> dict:
+        """Mentions of the distinct lines ``uarr`` (those from index
+        ``first`` on): extract_mentions_arrays' columns, ``row`` offset
+        by ``first``, and ``text``."""
+        import pyarrow as pa
+
+        from ..functions.fast_tokenize import padded_spans
+
+        fast = padded_spans(uarr, MAX_LEN) if self.mode == "rules" else None
         if fast is not None:
             data, offs, utb, ute, ulens, tstart, tlen = fast
             ucls = _classes_bytes(self.domain, data, tstart, tlen, ulens)
             m = extract_mentions_arrays(bmes_tags_from_classes(ucls, ulens),
                                         utb, ute, ulens)
-            utext = _gather_strings(data, offs[m["row"]] + m["begin"],
-                                    (m["end"] - m["begin"]).astype(np.int64))
+            m["text"] = _gather_strings(data, offs[m["row"]] + m["begin"],
+                                        (m["end"] - m["begin"]).astype(np.int64))
         else:
             strs = uarr.to_pylist()
             utoks, utb, ute, ulens = _tokenize_unique(strs, MAX_LEN)
             m = extract_mentions_arrays(self.tags(utoks, ulens), utb, ute, ulens)
-            utext = pa.array([strs[r][b:e] for r, b, e in
-                              zip(m["row"], m["begin"], m["end"])], type=pa.string())
-        line_of, idx = _expand(m["row"], codes, len(uarr))
-        cols = [
-            pa.array(m["begin"][idx], type=pa.int32()),
-            pa.array(m["end"][idx], type=pa.int32()),
-            utext.take(pa.array(idx)),
-            pa.array(list(self.etypes), type=pa.string()).take(pa.array(m["etype_id"][idx])),
-            pa.array(m["score"][idx], type=pa.float32()),
-            pa.repeat(pa.scalar(self.model_name, pa.string()), len(idx)),
-        ]
-        return line_of, cols
+            m["text"] = pa.array([strs[r][b:e] for r, b, e in
+                                  zip(m["row"], m["begin"], m["end"])], type=pa.string())
+        m["row"] = m["row"] + first
+        return m
 
     def tags(self, toks: np.ndarray, lens: np.ndarray) -> np.ndarray:
         """[B,S] token matrix + lengths -> [B,S] tag ids (0 = O, then
@@ -557,6 +646,16 @@ def _tokenize_unique(uniques: list, max_len: int):
     return utoks, ubegin, uend, ulens
 
 
+# extract_mentions_arrays' columns, with no mention
+EMPTY_MENTIONS = dict(
+    row=np.array([], dtype=np.int64),
+    begin=np.array([], dtype=np.int32),
+    end=np.array([], dtype=np.int32),
+    etype_id=np.array([], dtype=np.int64),
+    score=np.array([], dtype=np.float32),
+)
+
+
 def extract_mentions_arrays(tags: np.ndarray, tbegin: np.ndarray,
                             tend: np.ndarray, lengths: np.ndarray) -> dict:
     """Vectorized pipeline-rule extraction returning plain arrays
@@ -566,15 +665,8 @@ def extract_mentions_arrays(tags: np.ndarray, tbegin: np.ndarray,
     B, S = tags.shape
     mask = (np.arange(S)[None, :] < lengths[:, None]) & (tags > 0)
     r_idx, c_idx = np.nonzero(mask)
-    empty = dict(
-        row=np.array([], dtype=np.int64),
-        begin=np.array([], dtype=np.int32),
-        end=np.array([], dtype=np.int32),
-        etype_id=np.array([], dtype=np.int64),
-        score=np.array([], dtype=np.float32),
-    )
     if len(r_idx) == 0:
-        return empty
+        return dict(EMPTY_MENTIONS)
     tag_v = tags[r_idx, c_idx]
     b_code = (tag_v - 1) % 4  # 0=B 1=M 2=E 3=S
     t_code = (tag_v - 1) // 4
@@ -593,7 +685,7 @@ def extract_mentions_arrays(tags: np.ndarray, tbegin: np.ndarray,
     )
     s_ok, e_ok = starts[ok], ends[ok]
     if len(s_ok) == 0:
-        return empty
+        return dict(EMPTY_MENTIONS)
     rows = r_idx[s_ok]
     return dict(
         row=rows,

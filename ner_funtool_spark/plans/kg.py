@@ -2,18 +2,16 @@
 
 ``build_triples`` is the flagship dataflow (north_star):
 
-  source scan -> fused Arrow segment+tag+extract -> mentions + one
-  row per file -> triples projection (CONTAINS from the file rows)
-  -> salted write
+  source scan -> fused Arrow segment+tag+extract+emit -> triples
+  (CONTAINS from each file's own row) -> salted write
 
 The plan is declared entirely with DataFrame ops so Catalyst prunes
-columns into the parquet scan and fuses the relational glue; the only
-Python is the single Arrow-batched stage, which takes FILE rows and
-splits them into lines itself, so each file's columns cross into
-Python once rather than once per line.  ``build_triples`` names the
-columns the triple projection reads, so nothing else comes back, and
-takes each file's CONTAINS row from the same stage, so the source is
-read once: scan -> one ``mapInArrow`` -> one projection.
+columns into the parquet scan; the only Python is the single
+Arrow-batched stage, which takes FILE rows and splits them into lines
+itself, so each file's columns cross into Python once rather than once
+per line, and which returns the finished triple rows
+(``operators.triples.TripleRows``): scan -> one ``mapInArrow``, with no
+projection above it and the source read once.
 """
 
 from __future__ import annotations
@@ -21,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.tagger import tag_file_mentions
-from ..operators.triples import TRIPLE_PASS_COLS, mentions_to_triples
+from ..operators.tagger import tag_file_mentions, tag_file_triples
+from ..operators.triples import mentions_to_triples
 
 
 def detect_mentions(source: DataFrame, *, domain: str = "code",
@@ -42,10 +40,8 @@ def build_triples(source: DataFrame, *, domain: str = "code",
                   mode: str = "rules", include_contains: bool = True) -> DataFrame:
     """Full mention->triple dataflow; returns the un-salted triple DF
     (callers add salting via operators.triples.write_triples)."""
-    mentions = tag_file_mentions(source, keep=list(TRIPLE_PASS_COLS),
-                                 domain=domain, mode=mode,
-                                 _file_rows=include_contains)
-    return mentions_to_triples(mentions, domain=domain)
+    return tag_file_triples(source, domain=domain, mode=mode,
+                            include_contains=include_contains)
 
 
 def build_canonical_triples(source: DataFrame, *, domain: str = "code",

@@ -1,7 +1,8 @@
 """The fused file-row tagging stage (segmentation inside the Arrow
 stage) against the line-level reference path
-``tag_mentions(segment_lines(src))``, the triple plans' one-pass shape,
-and the per-distinct-line kernel against a per-line decode."""
+``tag_mentions(segment_lines(src))``, its triple rows against the
+JVM-side ``mentions_to_triples``, the triple plans' one-pass shape, and
+the per-distinct-line kernel against a per-line decode."""
 
 from __future__ import annotations
 
@@ -24,7 +25,11 @@ from pyspark.sql.types import (
 from ner_funtool_spark.operators import tagger
 from ner_funtool_spark.operators.segment import segment_lines
 from ner_funtool_spark.operators.tagger import MAX_LEN, tag_mentions
-from ner_funtool_spark.operators.triples import file_uri, mentions_to_triples
+from ner_funtool_spark.operators.triples import (
+    TRIPLE_NAMES,
+    file_uri,
+    mentions_to_triples,
+)
 from ner_funtool_spark.plans.inspect import plan_string
 from ner_funtool_spark.plans.kg import (
     build_canonical_triples,
@@ -64,6 +69,10 @@ def _source(spark, files):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _rows_with_nulls(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
 @pytest.mark.parametrize("domain,mode,files", [
@@ -128,14 +137,52 @@ def test_triple_plans_keep_their_schema(spark):
 
 
 def test_build_triples_is_one_pass(spark, tmp_path):
-    """scan -> one mapInArrow -> one projection: no second scan, no union."""
+    """scan -> one mapInArrow, and nothing above it: no second scan, no
+    union, no projection."""
     _source(spark, CODE).write.parquet(str(tmp_path / "src"))
     t = build_triples(spark.read.parquet(str(tmp_path / "src")))
     t.write.format("noop").mode("overwrite").save()
     plan = plan_string(t)
     assert plan.count("FileScan parquet") == 1, plan
     assert plan.count("MapInArrow") == 1, plan
+    above = plan[:plan.index("MapInArrow")]
+    assert "Project" not in above and "Union" not in above, plan
     assert "Union" not in plan, plan
+
+
+# null repo, null path, both null, null content, a file without
+# mentions and a non-ASCII line, per domain
+EDGE_FILES = {
+    "code": [("r0", "a.py", "def f():\nimport os\n"), (None, "b.py", "class B:\nimport re\n"),
+             ("r1", None, "def g():\npackage p.q\n"), (None, None, "import sys\n"),
+             ("r2", "e.py", None), ("r2", "f.py", "x = 1\n"),
+             ("r3", "g.py", "def café():\nimport os\n")],
+    "doc": [("s0", "a.txt", "join the table\nsort the row\n"), (None, "b.txt", "merge key\n"),
+            ("s1", None, "scan batch\n"), (None, None, "filter data\n"),
+            ("s2", "e.txt", None), ("s2", "f.txt", "nothing here\n"),
+            ("s3", "g.txt", "écrire the table\nhash the row\n")],
+}
+
+
+@pytest.mark.parametrize("include_contains", [True, False])
+@pytest.mark.parametrize("domain", ["code", "doc"])
+def test_stage_triples_equal_projection(spark, domain, include_contains):
+    """The stage's triple rows equal the JVM-side projection over the
+    stage's mention rows, nulls in the file columns included."""
+    src = spark.createDataFrame(
+        [(r, p, "c0", "py", t) for r, p, t in EDGE_FILES[domain]],
+        "repo string, path string, commit string, lang string, content string",
+    ).withColumn("content_sha", F.sha2("content", 256)).coalesce(1)
+    got = build_triples(src, domain=domain, include_contains=include_contains)
+    want = mentions_to_triples(
+        detect_mentions(src, domain=domain, _file_rows=include_contains), domain=domain)
+    assert got.schema == want.schema == TRIPLES_SCHEMA
+    rows = _rows_with_nulls(got)
+    assert rows == _rows_with_nulls(want)
+    preds = {r[1] for r in rows}
+    assert ("CONTAINS" in preds) == include_contains
+    assert {r[0] for r in rows if r[1] != "CONTAINS"} >= (
+        {None, "b.py", "r1", ""} if domain == "code" else {"b.txt", "s1", ""})
 
 
 @pytest.mark.parametrize("build", [build_triples, build_canonical_triples])
@@ -152,29 +199,27 @@ def test_one_contains_per_source_row(spark, build):
 
 
 def test_triples_path_sends_only_read_columns(spark):
-    """The narrowed stage returns no sentence or lang column."""
-    from ner_funtool_spark.operators.tagger import tag_file_mentions
-    from ner_funtool_spark.operators.triples import TRIPLE_PASS_COLS
-
-    m = tag_file_mentions(_source(spark, CODE), keep=list(TRIPLE_PASS_COLS))
-    assert m.columns == list(TRIPLE_PASS_COLS) + tagger.MENTION_NAMES
+    """The triple stage takes only the file columns it reads and the
+    content, and returns the triple columns: no sentence or lang."""
+    t = build_triples(_source(spark, CODE))
+    assert t.columns == TRIPLE_NAMES
+    (stage,) = [ln for ln in plan_string(t).splitlines() if "MapInArrow" in ln]
+    assert "lang" not in stage and "sentence" not in stage, stage
+    assert all(c in stage for c in ("repo", "path", "commit", "content_sha", "content"))
 
 
 def _kernel_rows(lines, chunk, k=None):
-    """The stage's per-chunk kernel calls, as (line, *mention) tuples."""
+    """One kernel call over ``lines``, as (line, *mention) tuples."""
     k = k or tagger._LineKernel("code", "rules")
-    out = []
-    for a, part in tagger.chunk_lines(lines, chunk):
-        line_of, cols = k(part)
-        if len(line_of):
-            out += zip((line_of + a).tolist(), *(c.to_pylist() for c in cols))
-    return out
+    line_of, cols = k(lines, chunk)
+    cols = dict(cols, etype=cols["etype"].dictionary_decode())
+    return list(zip(line_of.tolist(), *(cols[c].to_pylist() for c in tagger.MENTION_NAMES)))
 
 
 def test_non_ascii_fallback_is_bounded_by_chunk(monkeypatch):
-    """Lines go to the kernel in chunks of at most ``chunk``: one
-    non-ASCII line sends only its own chunk down the regex path, and
-    the output does not depend on the chunking."""
+    """Distinct lines are decoded in slices of at most ``chunk``: one
+    non-ASCII line sends only its own slice down the regex path, and
+    the output does not depend on the slicing."""
     seen = []
     real = tagger._tokenize_unique
 
@@ -198,9 +243,11 @@ def test_non_ascii_fallback_is_bounded_by_chunk(monkeypatch):
 
 @pytest.mark.parametrize("chunk", [0, -1])
 def test_non_positive_chunk_means_no_limit(chunk):
-    """maxRecordsPerBatch <= 0 is Spark's "no limit": one chunk."""
+    """maxRecordsPerBatch <= 0 is Spark's "no limit": one slice."""
     lines = pa.array([f"def fn_{i}(a):" for i in range(7)] + ["import os"])
     assert [a for a, _ in tagger.chunk_lines(lines, chunk)] == [0]
+    line_of, _ = tagger._LineKernel("code", "rules")(lines, chunk)
+    assert tagger._line_slices(line_of, len(lines), chunk) == [(0, len(line_of))]
     assert _kernel_rows(lines, chunk) == _kernel_rows(lines, 1 << 14)
     assert _kernel_rows(lines, chunk)
 
@@ -251,21 +298,63 @@ def _per_line_rows(k, lines, chunk):
     return out
 
 
+def _stage_batches(k, lines, chunk):
+    """The stage's output batches on line rows ``(i, sentence)``."""
+    rb = pa.record_batch({"i": pa.array(range(len(lines)), pa.int64()),
+                          "sentence": pa.array(lines)})
+    emit = tagger.MentionRows(["i", "sentence"], {"i": "bigint", "sentence": "string"})
+    return list(tagger._stage_fn("sentence", False, k, chunk, emit)(iter([rb])))
+
+
 @pytest.mark.parametrize("chunk", [1, 7, 1 << 14])
 @pytest.mark.parametrize("mode", ["rules", "neural", "cascade", "albert"])
 @pytest.mark.parametrize("lines", [KERNEL_ASCII, KERNEL_MIXED], ids=["ascii", "mixed"])
 def test_kernel_equals_per_line_decode(kernels, lines, mode, chunk):
-    """Decoding once per distinct line and expanding by the dictionary
-    codes gives the per-line result, row for row and in order."""
+    """Decoding once per distinct line of the input batch, in slices of
+    at most ``chunk`` distinct lines, and expanding by the dictionary
+    codes gives the per-line result, row for row and in order; each
+    output batch holds the mentions of at most ``chunk`` lines."""
     from ner_funtool_spark.functions.fast_tokenize import padded_spans
 
     # rules on ASCII runs the byte path, on MIXED the string path
     assert (padded_spans(pa.array(lines), MAX_LEN) is None) == (lines is KERNEL_MIXED)
+    # lines of an early slice of distinct lines recur after lines of a
+    # later one, so the expansion reads across the slices
+    distinct = list(dict.fromkeys(lines))
+    slice_of = [distinct.index(x) // chunk for x in lines]
+    if chunk < len(distinct):
+        assert any(a > b for i, a in enumerate(slice_of) for b in slice_of[i + 1:])
     k = kernels.setdefault(mode, tagger._LineKernel("code", mode))
-    got = _kernel_rows(pa.array(lines), chunk, k)
+    batches = _stage_batches(k, lines, chunk)
+    got = [(r["i"], r["begin"], r["end"], r["text"], r["etype"], r["score"], r["model"])
+           for b in batches for r in b.to_pylist()]
     assert got == _per_line_rows(k, lines, chunk)
+    for b in batches:
+        i = b.column("i").to_numpy()
+        assert i.min() // chunk == i.max() // chunk, (chunk, i)
     if mode == "rules":
         assert {x[3] for x in got} >= {"load_1", "alpha.core", "Reader7", "p"}
+
+
+@pytest.mark.parametrize("mode", ["rules", "neural"])
+def test_kernel_skips_expansion_when_every_line_is_distinct(kernels, monkeypatch, mode):
+    """With no repeated line the dictionary codes are 0..n-1: the
+    distinct-line mentions are the result, and no expansion runs."""
+    calls = []
+    real = tagger._expand
+
+    def spy(*a):
+        calls.append(1)
+        return real(*a)
+
+    monkeypatch.setattr(tagger, "_expand", spy)
+    k = kernels.setdefault(mode, tagger._LineKernel("code", mode))
+    lines = list(dict.fromkeys(KERNEL_MIXED))
+    got = _kernel_rows(pa.array(lines), 7, k)
+    assert not calls
+    assert got == _per_line_rows(k, lines, 7)
+    _kernel_rows(pa.array(lines + lines[:1]), 7, k)
+    assert calls
 
 
 def test_split_lines_matches_segment_semantics():

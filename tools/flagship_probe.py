@@ -11,11 +11,14 @@ settings.  Each prints one JSON line.
 scan partition (files / cores rows, one input batch, as a scan task
 hands them to its Python worker).  The stage function is the one
 ``build_triples`` passes to ``mapInArrow``; its helpers are wrapped in
-timers: split, encode, tokenize, classify, decode, extract, expand and
-the mention-text gather.  ``gather`` is the rest of the stage (Arrow
-take of the pass-through columns, the mention columns, the file rows),
-and ``ipc_write`` serializes the output batches as the worker sends
-them to the JVM.  Each phase is the minimum over REPS runs, in ms.
+timers: split, encode, tokenize, classify, decode, extract, expand, the
+mention-text gather and ``emit``, the triple emitter's work (file URIs,
+the triple rows of each slice of mentions and the CONTAINS rows).
+``gather`` is the rest of the stage (the kernel's mention columns and
+the output slicing), and ``ipc_write`` serializes the output batches as
+the worker sends them to the JVM.  Each phase is the minimum over REPS
+runs, in ms.  A phase whose helper the checked-out code lacks is left
+out.
 
 ``cpu`` sets a session up with perfbench's ``set_up``, runs WARMUP
 untimed and OPS timed ``build_triples`` operations into the noop
@@ -60,7 +63,12 @@ TIMED = [
     ("extract", "ner_funtool_spark.operators.tagger", "extract_mentions_arrays"),
     ("expand", "ner_funtool_spark.operators.tagger", "_expand"),
     ("text_gather", "ner_funtool_spark.operators.tagger", "_gather_strings"),
+    ("emit", "ner_funtool_spark.operators.triples", "file_uris"),
+    ("emit", "ner_funtool_spark.operators.triples", "_mention_triples"),
+    ("emit", "ner_funtool_spark.operators.triples", "_contains_triples"),
 ]
+# the source columns build_triples reads
+SOURCE_COLS = ["repo", "path", "commit", "content_sha", "content"]
 # JVM thread name (comm, at most 15 bytes) prefix -> group
 THREAD_GROUPS = [
     ("C2 CompilerThre", "jit_c2"),
@@ -99,15 +107,13 @@ def phases(stage_dir: str, run_dir: Path) -> dict:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ner_funtool_spark.operators.triples import TRIPLE_PASS_COLS
     from ner_funtool_spark.session import get_spark
 
     spark = get_spark("flagship_probe", cores=CORES, shuffle_partitions=CORES,
                       extra=perfbench.session_conf(run_dir, trace=False))
     fn = stage_fn(spark.read.parquet(f"{stage_dir}/source"))
     spark.stop()
-    cols = [c for c in TRIPLE_PASS_COLS if c != "sent_id"] + ["content"]
-    table = pq.read_table(f"{stage_dir}/source", columns=cols)
+    table = pq.read_table(f"{stage_dir}/source", columns=SOURCE_COLS)
     n_files = table.num_rows // CORES
     (batch,) = table.slice(0, n_files).combine_chunks().to_batches()
 
