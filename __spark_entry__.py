@@ -167,25 +167,10 @@ def _q_embedding_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_link_scores(ents, threshold=0.5)
 
 
-def _canon_map(mentions: DataFrame) -> DataFrame:
-    """Mentions -> (node = entity text, canonical_id) over the blocked
-    candidate-pair graph, identity for unlinked entities, as an eager
-    checkpoint.  The distinct entity table feeds both the edge builder
-    and the node list, so it is cached for the call (the tagging stage
-    runs once) and released once the result is computed."""
-    from ner_funtool_spark.operators.components import canonicalize
-    from ner_funtool_spark.operators.linking import candidate_pairs
-
-    ents = mentions.select("text", "etype").distinct().persist()
-    edges = candidate_pairs(ents).select("src", "dst")
-    nodes = ents.select(F.col("text").alias("node")).distinct()
-    out = canonicalize(nodes, edges).localCheckpoint(eager=True)
-    ents.unpersist()
-    return out
-
-
 def _q_entity_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _canon_map(_crf_mentions_std(spark, sf_dir))
+    from ner_funtool_spark.operators.linking import canonical_map
+
+    return canonical_map(_crf_mentions_std(spark, sf_dir))
 
 
 JACCARD_T = 0.08
@@ -1003,6 +988,7 @@ def _q_kg_entity_temporal(spark, sf_dir):
     dimension join: the history is entity-keyed (small vs the mention
     fact table) and per-entity interval lists are tiny, so the bind is
     an equi-join plus an interval filter — no range-join blowup."""
+    from ner_funtool_spark.operators.linking import canonical_map
     from ner_funtool_spark.operators.upsert import scd2_upsert
 
     # r6: ONE Arrow tagging pass serves the epoch-1 entity set, the
@@ -1025,8 +1011,8 @@ def _q_kg_entity_temporal(spark, sf_dir):
 
     mentions.count()
     with _TPE(max_workers=2) as _pool:
-        f1 = _pool.submit(_canon_map, mentions.filter(doc_num % 2 == 0))
-        f2 = _pool.submit(_canon_map, mentions)
+        f1 = _pool.submit(canonical_map, mentions.filter(doc_num % 2 == 0))
+        f2 = _pool.submit(canonical_map, mentions)
         v1, v2 = f1.result(), f2.result()
     hist0 = v1.select(
         "node", "canonical_id",

@@ -1,13 +1,17 @@
 """Iterative connected components — canonicalization of the link graph.
 
-Alternating large-star / small-star DataFrame joins (the classic
-MapReduce CC formulation, converges in O(log n) rounds) with a
-driver-side convergence check (SURVEY.md §7 M4; north_star's
-union-find analog).  The loop runs on ``graph._iterate``: the edge list
-and every round are eager ``localCheckpoint``s, each predecessor is
-released once compared, and a warning is raised when ``max_iter`` runs
-out before the fixed point.  The (node, canonical_id) result is an
-eager checkpoint as well, so the call leaves no round behind.
+Alternating large-star / small-star DataFrame joins (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC 2014; converges
+in O(log n) rounds) with a driver-side convergence check (SURVEY.md §7
+M4; north_star's union-find analog).  The loop runs on
+``graph._iterate``: the edge list and every round are eager
+``localCheckpoint``s, each predecessor is released once compared, and a
+warning is raised when ``max_iter`` runs out before the fixed point.
+Each state's edge count is ``observe``-d on its own checkpoint job, so
+the check runs a job of its own only on rounds where the count did not
+move.  The (node, canonical_id) result is an eager checkpoint as well
+(``canonicalize``'s isolated nodes ride its final aggregation), so the
+call leaves only its result behind.
 
 Node ids are any orderable column (we use entity strings; the
 representative is the lexicographic min of the component, so DuckDB's
@@ -21,7 +25,7 @@ count is non-increasing, so the worst shuffle is the first one.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .graph import _iterate
@@ -65,47 +69,51 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """edges(src, dst) -> (node, canonical_id).
 
     canonical_id = min node id in the component; isolated nodes (absent
-    from edges) are the caller's to union in (node, node).  Running out
-    of ``max_iter`` rounds before the fixed point warns.
+    from edges) are ``canonicalize``'s.  Running out of ``max_iter``
+    rounds before the fixed point warns.
     """
+    return _components(edges, max_iter)
+
+
+def canonicalize(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """All nodes -> (node, canonical_id), identity for isolated nodes.
+    Exact when every edge endpoint is a node."""
+    return _components(edges, 25, nodes)
+
+
+def _components(edges: DataFrame, max_iter: int, nodes=None) -> DataFrame:
+    """The star loop; ``nodes`` rows join its final aggregation as
+    (node, node), so the result is the loop's own checkpoint."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    sizes = []
+    seen = []  # the Observation of each checkpointed state, newest last
+
+    def counted(e: DataFrame) -> DataFrame:
+        seen.append(Observation())
+        return e.observe(seen[-1], F.count("*").alias("n"))
 
     def stable(prev: DataFrame, new: DataFrame) -> bool:
         # converged when the edge multiset is stable (star ops are
-        # deterministic, so set equality is a fixed-point check).
-        # Cheap exact form: a count() on the just-materialized
-        # checkpoint is ~free, and while the edge count still moves the
-        # multisets cannot be equal — so the exceptAll shuffle is paid
-        # ONLY on count-stable rounds, and one-sided emptiness plus
-        # equal counts already implies multiset equality (the old
-        # two-sided exceptAll doubled the dominant per-round cost)
-        if not sizes:
-            sizes.append(prev.count())
-        sizes.append(new.count())
-        return sizes[-1] == sizes[-2] and new.exceptAll(prev).limit(1).count() == 0
+        # deterministic, so set equality is a fixed-point check).  While
+        # the observed edge count still moves the multisets cannot be
+        # equal, so the exceptAll job runs ONLY on count-stable rounds,
+        # and one-sided emptiness plus equal counts implies equality
+        return (seen[-1].get["n"] == seen[-2].get["n"]
+                and new.exceptAll(prev).limit(1).count() == 0)
 
     def canonical(e: DataFrame) -> DataFrame:
         # fixed point: every edge is (node, root)
-        members = e.select(F.col("src").alias("node"), F.col("dst").alias("canonical_id"))
+        rows = e.select(F.col("src").alias("node"), F.col("dst").alias("canonical_id"))
         roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("canonical_id")).distinct()
-        return members.unionByName(roots).groupBy("node").agg(
+        rows = rows.unionByName(roots)
+        if nodes is not None:
+            rows = rows.unionByName(nodes.select("node", F.col("node").alias("canonical_id")))
+        return rows.groupBy("node").agg(
             F.min("canonical_id").alias("canonical_id")
         ).localCheckpoint(eager=True)
 
-    return _iterate(e, lambda e: _small_star(_large_star(e)), max_iter, canonical,
-                    done=stable, name="connected_components")[0]
-
-
-def canonicalize(nodes: DataFrame, edges: DataFrame, node_col: str = "node",
-                 max_iter: int = 25) -> DataFrame:
-    """All nodes -> (node, canonical_id), identity for isolated nodes."""
-    cc = connected_components(edges, max_iter)
-    n = nodes.select(F.col(node_col).alias("node")).distinct()
-    return (
-        n.join(cc, "node", "left")
-        .select("node", F.coalesce("canonical_id", "node").alias("canonical_id"))
-    )
+    return _iterate(counted(e), lambda e: counted(_small_star(_large_star(e))),
+                    max_iter, canonical, done=stable,
+                    name="connected_components")[0]
 
 
 def keep_one_per_cluster(docs: DataFrame, clusters: DataFrame,

@@ -22,7 +22,8 @@ shapes that survive a 100 TB corpus:
 
 Skew safety: ngram-jaccard caps the document frequency of blocking
 shingles (``max_df``) so one boilerplate shingle can never create an
-O(df²) candidate block; dropped shingles are logged, never silent.
+O(df²) candidate block.  The cap is part of the query contract: the
+DuckDB oracle mirrors it, so its effect is checked, not logged.
 
 Every detector is deterministic and mirrored by a DuckDB oracle in
 oracles.py; hash parameters are literals generated from config.SEED so
@@ -37,8 +38,6 @@ re-uses the hot blocks instead of rescanning the corpus).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,8 +48,6 @@ from ..functions.hashing import (
     md5_int_col,
     minhash_params,
 )
-
-logger = logging.getLogger(__name__)
 
 SHINGLE_K = 3
 MINHASH_K = 16
@@ -102,18 +99,10 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float,
     yields O(D²) candidate rows on one skewed key.  Verification uses
     the FULL shingle sets, so reported jaccard scores are exact; the
     only approximation is recall for pairs whose overlap consists
-    ENTIRELY of >max_df shingles.  Dropped shingles are logged, never
-    silent.
+    ENTIRELY of >max_df shingles, which the oracle mirrors.
     """
     sh = shingles(documents, text_col, id_col, k).persist()
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-    hot = df_counts.filter(F.col("_df") > max_df)
-    n_hot = hot.count()
-    if n_hot:
-        sample = [r["shingle"] for r in hot.orderBy(F.desc("_df")).head(5)]
-        logger.warning(
-            "ngram_jaccard_pairs: %d shingles over max_df=%d dropped "
-            "from candidate blocking (top: %s)", n_hot, max_df, sample)
     block_sh = sh.join(
         df_counts.filter(F.col("_df") <= max_df).select("shingle"), "shingle"
     )
@@ -128,9 +117,11 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float,
 
 
 def _verify_jaccard(cand: DataFrame, sh: DataFrame, id_col: str,
-                    threshold: float) -> DataFrame:
+                    threshold: float, sh_b: DataFrame | None = None) -> DataFrame:
     """Exact-jaccard verification of (a, b) candidates against the full
-    shingle table — candidate-proportional, shared by ngram + LSH paths.
+    shingle table — candidate-proportional, shared by the ngram, LSH
+    and incremental paths.  ``sh_b`` holds the ``b`` side's shingles
+    when they come from another table (the incremental corpus side).
 
     r6 shape (guide §2.3 "shuffle fewer bytes", measured 6-9 s -> ~1 s
     at sf0.1): the r5 form joined candidates against the (id, shingle)
@@ -149,19 +140,23 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame, id_col: str,
     # corpus scale, so broadcasting it is wrong at 100 TB — and locally
     # the broadcast build of array-typed rows measured 2-3x slower than
     # the shuffled hash join (11-15 s vs 4-5 s full-query at sf0.1)
-    sets = sh.groupBy(id_col).agg(
-        F.collect_set("shingle").alias("_ss"),
-        F.count("*").alias("_sz"),
-    ).hint("shuffle_hash")
+    def sets(sh):
+        return sh.groupBy(id_col).agg(
+            F.collect_set("shingle").alias("_ss"),
+            F.count("*").alias("_sz"),
+        ).hint("shuffle_hash")
+
+    sets_a = sets(sh)
+    sets_b = sets_a if sh_b is None else sets(sh_b)
     return (
         cand.join(
-            sets.select(F.col(id_col).alias("a"),
-                        F.col("_ss").alias("_sa"), F.col("_sz").alias("sa")),
+            sets_a.select(F.col(id_col).alias("a"),
+                          F.col("_ss").alias("_sa"), F.col("_sz").alias("sa")),
             "a",
         )
         .join(
-            sets.select(F.col(id_col).alias("b"),
-                        F.col("_ss").alias("_sb"), F.col("_sz").alias("sb")),
+            sets_b.select(F.col(id_col).alias("b"),
+                          F.col("_ss").alias("_sb"), F.col("_sz").alias("sb")),
             "b",
         )
         .withColumn("ni", F.size(F.array_intersect("_sa", "_sb")))
@@ -370,22 +365,5 @@ def ngram_jaccard_incremental(new_docs: DataFrame, corpus: DataFrame,
         .select("a", "b")
         .distinct()
     )
-    # per-doc shingle-set arrays + array_intersect instead of the
-    # pair x shingle shuffle join — same exact counts (_verify_jaccard
-    # r6 note), candidate-pair-proportional bytes
-    sets_n = sh_n.groupBy(id_col).agg(
-        F.collect_set("shingle").alias("_sa"), F.count("*").alias("sa")
-    ).hint("shuffle_hash")
-    sets_c = sh_c.groupBy(id_col).agg(
-        F.collect_set("shingle").alias("_sb"), F.count("*").alias("sb")
-    ).hint("shuffle_hash")
-    return (
-        cand.join(sets_n.select(F.col(id_col).alias("a"), "_sa", "sa"), "a")
-        .join(sets_c.select(F.col(id_col).alias("b"), "_sb", "sb"), "b")
-        .withColumn("ni", F.size(F.array_intersect("_sa", "_sb")))
-        .filter(F.col("ni") > 0)
-        .withColumn("jac", F.col("ni") / (F.col("sa") + F.col("sb") - F.col("ni")))
-        .filter(F.col("jac") >= threshold)
-        .select(F.col("a").alias("new_id"), F.col("b").alias("corpus_id"),
-                F.round("jac", 6).alias("score"))
-    )
+    return _verify_jaccard(cand, sh_n, id_col, threshold, sh_b=sh_c).select(
+        F.col("a").alias("new_id"), F.col("b").alias("corpus_id"), "score")

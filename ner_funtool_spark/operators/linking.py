@@ -8,6 +8,11 @@ and minhash/ngram-blocked similarity joins for the tail.  All joins are
 equi-joins on blocking keys (the theta-join row of SURVEY.md §2.6),
 so Spark plans them as hash joins — never a cartesian product.
 
+``canonical_map`` is the one place the canonical entity map is built
+(blocked-jaccard edges -> connected components); ``link_entities``
+joins mentions onto it.  Building a candidate-pair frame runs no Spark
+job, and a map call leaves only its result persistent.
+
 Scale: the alias dict is a broadcast join (no shuffle); candidate
 generation shuffles once on the block key; per-pair scoring is a
 JVM-side expression (token-set jaccard).
@@ -18,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import logging
-
 from .components import canonicalize
-
-logger = logging.getLogger(__name__)
 
 JACCARD_THRESHOLD = 0.5
 MAX_BLOCK = 1000  # entities per blocking key before secondary refinement
@@ -34,22 +35,11 @@ def _refine_hot_blocks(e: DataFrame, max_block: int = MAX_BLOCK) -> DataFrame:
     ``raw`` token list, '' if absent), so one common first token ("get",
     "the") can never create a block with quadratic pair count.  Pairs
     inside an oversized block that differ in their second token are the
-    documented recall tradeoff; refined blocks are logged, never silent.
-
-    ``e`` (the distinct entity table — small relative to mentions) is
-    persisted so the logging count and the main plan share one pass of
-    the upstream pipeline; session-lifetime cache, LRU-evicted (same
-    documented tradeoff as the dedup shingle caches).
+    documented recall tradeoff.  The cap is part of the query contract:
+    the DuckDB oracle mirrors it, so its effect is checked, not logged.
+    Lazy: no job runs until the caller's action.
     """
-    e = e.persist()
     counts = e.groupBy("block").agg(F.count("*").alias("_bn"))
-    hot = counts.filter(F.col("_bn") > max_block)
-    n_hot = hot.count()
-    if n_hot:
-        sample = [r["block"] for r in hot.orderBy(F.desc("_bn")).head(5)]
-        logger.warning(
-            "linking: %d blocks over max_block=%d refined with the "
-            "second-token key (top: %s)", n_hot, max_block, sample)
     refined = F.concat_ws(
         "#", F.col("block"), F.coalesce(F.element_at("raw", 2), F.lit(""))
     )
@@ -66,17 +56,19 @@ def _refine_hot_blocks(e: DataFrame, max_block: int = MAX_BLOCK) -> DataFrame:
     # their entities become isolated nodes — so worst-case pair count
     # per key is hard-bounded at max_block², never quadratic in n
     counts2 = e2.groupBy("block").agg(F.count("*").alias("_bn2"))
-    n_still = counts2.filter(F.col("_bn2") > max_block).count()
-    if n_still:
-        logger.warning(
-            "linking: %d blocks still over max_block=%d AFTER "
-            "second-token refinement — dropped from candidate "
-            "generation", n_still, max_block)
     return (
         e2.join(counts2, "block")
         .filter(F.col("_bn2") <= max_block)
         .drop("_bn2")
     )
+
+
+def _entities(entities: DataFrame, id_col: str, etype_col: str) -> DataFrame:
+    """The distinct entity table of a pair plan.  A null text never
+    pairs (nor has a block in the oracle), so it is dropped here: every
+    read of the table in the plan is then one subtree, and exchange
+    reuse runs its upstream (the tagging stage) once without a cache."""
+    return entities.select(id_col, etype_col).filter(F.col(id_col).isNotNull()).distinct()
 
 
 def alias_link(mentions: DataFrame, alias_df: DataFrame,
@@ -112,8 +104,7 @@ def candidate_pairs(entities: DataFrame, id_col: str = "text",
     # block key from the RAW first token (array_distinct does not
     # preserve order in every engine; the raw list does)
     e = (
-        entities.select(id_col, etype_col)
-        .distinct()
+        _entities(entities, id_col, etype_col)
         .withColumn("raw", F.split(F.col(id_col), token_pattern))
         .withColumn("toks", F.array_distinct(F.col("raw")))
         .withColumn("block", F.concat_ws("#", F.col(etype_col), F.element_at("raw", 1)))
@@ -139,28 +130,38 @@ def candidate_pairs(entities: DataFrame, id_col: str = "text",
     )
 
 
-def link_entities(mentions: DataFrame, *, text_col: str = "text",
-                  etype_col: str = "etype",
+def canonical_map(mentions: DataFrame,
                   threshold: float = JACCARD_THRESHOLD,
-                  token_pattern: str = " ",
-                  max_iter: int = 25) -> DataFrame:
-    """mentions -> mentions + canonical_id.
+                  token_pattern: str = " ") -> DataFrame:
+    """mentions(text, etype, ...) -> (node = entity text, canonical_id)
+    as an eager checkpoint.
 
-    Distinct (text, etype) nodes are linked through blocked-jaccard
-    edges and canonicalized by connected components; every mention gets
-    its node's canonical id (min text of the component).  The node
-    table is small relative to mentions (it is the distinct entity
-    vocabulary), so the final mapping join broadcasts.
+    The distinct (text, etype) entities are linked through blocked-
+    jaccard edges and canonicalized by connected components; an
+    unlinked entity is its own canonical id (canonical ids are the min
+    text of a component, so the etype collapses).  The entity table
+    feeds both the edge builder and the node list, so it is cached for
+    the call (the upstream tagging runs once) and released once the map
+    is computed: the call leaves only its result persistent.
     """
-    nodes = mentions.select(F.col(text_col).alias("node"), F.col(etype_col)).distinct()
-    edges = candidate_pairs(nodes.select(F.col("node").alias(text_col), etype_col),
-                            id_col=text_col, etype_col=etype_col,
-                            threshold=threshold, token_pattern=token_pattern)
-    mapping = canonicalize(nodes, edges.select("src", "dst"), node_col="node",
-                           max_iter=max_iter)
+    ents = mentions.select("text", "etype").distinct().persist()
+    edges = candidate_pairs(ents, threshold=threshold,
+                            token_pattern=token_pattern).select("src", "dst")
+    out = canonicalize(ents.select(F.col("text").alias("node")), edges)
+    ents.unpersist()
+    return out
+
+
+def link_entities(mentions: DataFrame, *,
+                  threshold: float = JACCARD_THRESHOLD,
+                  token_pattern: str = " ") -> DataFrame:
+    """mentions -> mentions + canonical_id: every mention gets its
+    entity's id from ``canonical_map``.  The map is the distinct entity
+    vocabulary, small relative to mentions, so the join broadcasts."""
+    mapping = canonical_map(mentions, threshold, token_pattern)
     return mentions.join(
-        F.broadcast(mapping.withColumnRenamed("node", text_col)), text_col, "left"
-    ).withColumn("canonical_id", F.coalesce("canonical_id", F.col(text_col)))
+        F.broadcast(mapping.withColumnRenamed("node", "text")), "text", "left"
+    )
 
 
 def pooled_embedding(text_col, dim: int = 16):
@@ -202,8 +203,7 @@ def embedding_link_scores(entities: DataFrame, id_col: str = "text",
     from .similarity import cosine
 
     e = (
-        entities.select(id_col, etype_col)
-        .distinct()
+        _entities(entities, id_col, etype_col)
         .withColumn("vec", pooled_embedding(F.col(id_col), dim))
         .withColumn("raw", F.split(F.col(id_col), " "))
         .withColumn(

@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_funtool_spark.operators.components import canonicalize, connected_components
-from ner_funtool_spark.operators.linking import alias_link, candidate_pairs, link_entities
+from ner_funtool_spark.operators.linking import (
+    alias_link,
+    candidate_pairs,
+    canonical_map,
+    embedding_link_scores,
+    link_entities,
+)
 
 
 def _uf_components(nodes, edges):
@@ -61,6 +67,86 @@ def test_cc_result_is_canonicalize_over_endpoints(spark, seed):
         edf.select(F.col("dst").alias("node")))
     got = sorted(connected_components(edf).collect())
     assert got and got == sorted(canonicalize(ends, edf).collect())
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_canonicalize_equals_join_and_coalesce(spark, seed):
+    """Node rows ride the loop's final aggregation as (node, node): on a
+    graph with isolated nodes and duplicate (node, etype) rows this
+    equals the left join of the nodes onto connected_components with
+    the node as the default id, and it is the loop's own checkpoint."""
+    from ner_funtool_spark.operators.graph import _checkpoint_rdd
+
+    rng = np.random.RandomState(200 + seed)
+    nodes = [f"e{i:02d}" for i in range(30)]
+    rows = [(x, t) for x in nodes for t in ("op", "obj")[: 1 + rng.randint(2)]]
+    rows += rows[:5]  # duplicate (node, etype) rows
+    edges = {tuple(sorted(rng.choice(20, 2, replace=False))) for _ in range(12)}
+    ndf = spark.createDataFrame(rows, "node string, etype string")
+    edf = spark.createDataFrame([(nodes[a], nodes[b]) for a, b in edges],
+                                "src string, dst string")
+    joined = (
+        ndf.select("node").distinct()
+        .join(connected_components(edf), "node", "left")
+        .select("node", F.coalesce("canonical_id", "node").alias("canonical_id"))
+    )
+    got = canonicalize(ndf.select("node"), edf)
+    assert _checkpoint_rdd(got) is not None
+    assert sorted(got.collect()) == sorted(joined.collect())
+    assert got.count() == len(nodes)
+
+
+def test_canonical_map_leaves_only_its_result(spark):
+    """The entity table cached for the call is released: a map call on
+    a fresh frame leaves one new persistent RDD, its result's own
+    checkpoint."""
+    from ner_funtool_spark.operators.graph import _checkpoint_rdd
+
+    mentions = spark.createDataFrame(
+        [("join merge", "op", 1), ("join merge sort", "op", 2),
+         ("scan", "op", 3), ("join merge", "obj", 4)],
+        "text string, etype string, doc long",
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    out = canonical_map(mentions)
+    rdd = _checkpoint_rdd(out)
+    assert rdd is not None
+    assert set(persistent().keySet()) - before == {rdd.id()}
+    assert dict(out.collect()) == {"join merge": "join merge",
+                                   "join merge sort": "join merge",
+                                   "scan": "scan"}
+
+
+def test_linking_frames_build_without_jobs(spark):
+    """Building a candidate-pair frame runs no Spark job: the block cap
+    is part of the plan, not a count taken to log it."""
+    rows = [(f"get item{i} thing{i}", "op") for i in range(30)]
+    ents = spark.createDataFrame(rows, "text string, etype string")
+    sc = spark.sparkContext
+    group = "linking-frame-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        candidate_pairs(ents, threshold=0.0, max_block=10)
+        embedding_link_scores(ents, max_block=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_linking_plans_read_their_input_once(spark, tmp_path):
+    """Every read of the entity table in a pair plan is one subtree, so
+    exchange reuse scans the input (in the queries: runs the tagging
+    stage) once, with no cache."""
+    rows = [(f"get item{i % 7} thing{i}", "op") for i in range(30)] + [(None, "op")]
+    path = str(tmp_path / "ents")
+    spark.createDataFrame(rows, "text string, etype string").write.parquet(path)
+    ents = spark.read.parquet(path)
+    for build in (candidate_pairs, embedding_link_scores):
+        df = build(ents, max_block=10)
+        assert df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.split("== Initial Plan ==")[0].count("FileScan") == 1, plan
 
 
 def test_cc_long_chain_converges(spark):

@@ -477,6 +477,26 @@ def test_round_limit_warns_only_when_unconverged(spark):
         assert pagerank_converged(cycle)[1] == 1
 
 
+def test_cc_check_rides_round_job(spark):
+    """Each state's edge count is observed on its own checkpoint job,
+    so only count-stable rounds run a check job (the exceptAll).  On
+    this graph a separate count job per round ran 49 jobs a call; the
+    observed count runs 35."""
+    from ner_funtool_spark.operators.components import connected_components
+
+    _, d = _random_digraph(spark, n_nodes=200, n_edges=150, seed=7)
+    sc = spark.sparkContext
+    group = "cc-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert out.count() > 0
+    assert jobs < 49, jobs
+
+
 def test_pagerank_multigraph_self_loop_and_sinks_match_numpy(spark):
     """Parallel edges count once (the node table's ``collect_set``), a
     self-loop sends a node's mass to itself, a node seen only as a
